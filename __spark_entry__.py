@@ -3201,7 +3201,7 @@ def oracle_sql() -> dict[str, str]:
             )
             SELECT a_id, b_id, hamming FROM (
                 SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id,
-                       bit_count(xor(a.h, b.h)) AS hamming
+                       CAST(bit_count(xor(a.h, b.h)) AS INTEGER) AS hamming
                 FROM bands a JOIN bands b USING (band)
                 WHERE a.doc_id < b.doc_id
             ) WHERE hamming <= 6
@@ -3997,7 +3997,7 @@ def oracle_sql() -> dict[str, str]:
                             '中段<|begin_search_query|>alpha ' || did ||
                             '<|end_search_query|>尾<|begin_search_query|>beta '
                             || did || '<|end_search_query|>')
-                   END AS content_len,
+                   END::INTEGER AS content_len,
                    CASE WHEN sub_shape = 0 THEN 2 ELSE 1
                        END AS n_sub_queries,
                    CASE WHEN sub_shape = 0
@@ -4090,7 +4090,7 @@ def oracle_sql() -> dict[str, str]:
             )
             SELECT query_id,
                    count(*) AS steps_count,
-                   sum(n_ev) AS evidence_count,
+                   CAST(sum(n_ev) AS BIGINT) AS evidence_count,
                    string_agg(CASE WHEN rk <= 3 THEN step_id END, '|'
                               ORDER BY rk) AS keys_joined
             FROM ranked

@@ -73,14 +73,22 @@ class BuildConfig:
     max_levels: int = 3
     extractor: object = None  # None → deterministic stub
     fail_after_bucket: int | None = None  # test hook: simulate a crash
-    # >0 → per-conversation tables (transcripts/chunks/extractions/
-    # parsed) are stored bucket-partitioned by conv_id so an
-    # incremental cycle can MERGE only the delta-touched partitions
-    # (plans/merge.py) instead of rewriting whole tables. At 100 TB
-    # this is the difference between delta-proportional and
-    # corpus-proportional incremental I/O; Iceberg's bucket transform
-    # is the managed equivalent.
-    bucket_convs: int = 0
+    # bucket count of the warehouse's one layout: every per-key table
+    # (per-conversation tables by conv_id, the inverted indexes,
+    # entity-scale side tables, triples by triple key, mentions and
+    # chunk embeddings by chunk id) is stored bucket-partitioned so an
+    # incremental cycle MERGEs only the delta-touched partitions
+    # (plans/merge.py) — Iceberg's bucket transform is the managed
+    # equivalent. Warehouses written in any other layout must be
+    # rebuilt (FORMAT_VERSION).
+    bucket_convs: int = 8
+
+    def __post_init__(self):
+        if self.bucket_convs < 1:
+            raise ValueError(
+                f"bucket_convs must be >= 1, got {self.bucket_convs}: "
+                "the bucketed warehouse is the only layout"
+            )
 
 
 def _run_parallel(tasks):
@@ -133,10 +141,37 @@ LINK_PARAMS_FILE = "_link_params.json"
 COMMUNITY_PARAMS_FILE = "_community_params.json"
 
 FORMAT_FILE = "_format_version.json"
-# 2: mentions_raw is conv-complete — one row per CONTRIBUTING conv for
-#    a shared content-hash chunk (operators/parsing.mentions_raw), the
-#    invariant the delta incremental path's conv-keyed MERGE relies on
-FORMAT_VERSION = 2
+# 3: bucketed + conv-complete — every per-key table is bucket-
+#    partitioned (BuildConfig.bucket_convs) with the triple-key /
+#    entity→conv / chunk→conv layout the incremental cycle MERGEs
+#    into, and mentions_raw holds one row per CONTRIBUTING conv for a
+#    shared content-hash chunk (operators/parsing.mentions_raw)
+FORMAT_VERSION = 3
+
+# the tables of a warehouse (build_all writes them all; an incremental
+# cycle returns them all) — a directory holding any of them is a
+# warehouse, whose format stamp must then match FORMAT_VERSION
+WAREHOUSE_TABLES = (
+    "transcripts",
+    "registry",
+    "chunks",
+    "extractions",
+    "parsed",
+    "entities_raw",
+    "triples_raw",
+    "mentions_raw",
+    "entity_embeddings",
+    "similar",
+    "wcc",
+    "canonical_map",
+    "triples",
+    "mentions",
+    "entities",
+    "membership",
+    "hierarchy",
+    "communities",
+    "chunk_embeddings",
+)
 
 
 def link_fingerprint(cfg) -> dict:
@@ -193,7 +228,6 @@ class _Warehouse:
         self,
         df: DataFrame,
         name: str,
-        mode: str = "overwrite",
         group_key: str | None = None,
         num_buckets: int = 0,
     ) -> DataFrame:
@@ -215,7 +249,7 @@ class _Warehouse:
 
             write_bucketed(df, self.path(name), group_key, num_buckets)
         else:
-            df.write.mode(mode).parquet(self.path(name))
+            df.write.mode("overwrite").parquet(self.path(name))
         if name == "canonical_map" and self.link_params is not None:
             fsio.write_json(
                 os.path.join(self.root, LINK_PARAMS_FILE), self.link_params
@@ -239,9 +273,9 @@ class _Warehouse:
 
     def stored_community_params(self) -> dict | None:
         """Fingerprint persisted with the last completed community
-        write, or None for warehouses that predate the sidecar / a
-        corrupt sidecar — the safe direction: reuse is declined and
-        detection re-runs."""
+        write, or None inside a torn write window / for a corrupt
+        sidecar — the safe direction: reuse is declined and detection
+        re-runs."""
         try:
             return fsio.read_json(
                 os.path.join(self.root, COMMUNITY_PARAMS_FILE)
@@ -251,7 +285,7 @@ class _Warehouse:
 
     def stored_link_params(self) -> dict | None:
         """Fingerprint persisted with the last canonical_map write, or
-        None for warehouses that predate the sidecar. A corrupt/partial
+        None inside a torn linking write window. A corrupt/partial
         sidecar (crash mid-dump) also reads as None — the safe
         direction: reuse is declined and the chain recomputes (same
         fallback shape as merge.table_bucket_spec)."""
@@ -265,19 +299,25 @@ class _Warehouse:
             os.path.join(self.root, FORMAT_FILE), {"version": FORMAT_VERSION}
         )
 
-    def stored_format_version(self) -> int:
-        """Version stamped at the end of the last completed
-        build/cycle; warehouses predating the marker (or a corrupt
-        marker) read as 1 — the safe direction: the one-time repairs
-        in ensure_mentions_raw_conv_complete re-run idempotently."""
+    def holds_tables(self) -> bool:
+        return any(self.exists(n) for n in WAREHOUSE_TABLES)
+
+    def check_format(self) -> None:
+        """Raise unless the warehouse carries the FORMAT_VERSION stamp
+        (written before build_all's first table). Older layouts are
+        not migrated: they are rebuilt."""
         try:
-            return int(
-                fsio.read_json(os.path.join(self.root, FORMAT_FILE)).get(
-                    "version", 1
-                )
-            )
+            version = fsio.read_json(os.path.join(self.root, FORMAT_FILE))[
+                "version"
+            ]
         except Exception:
-            return 1
+            version = None
+        if version != FORMAT_VERSION:
+            found = "unstamped" if version is None else f"format v{version}"
+            raise ValueError(
+                f"warehouse {self.root} is {found}, this engine reads "
+                f"v{FORMAT_VERSION} — rebuild with build_all(resume=False)"
+            )
 
     def append_lineage(
         self,
@@ -337,64 +377,27 @@ class _Warehouse:
         return {r["partition_id"] for r in rows}
 
 
-def ensure_mentions_raw_conv_complete(wh: _Warehouse) -> bool:
-    """One-time repair for warehouses written before format v2.
-
-    Pre-v2 ``mentions_raw`` used a corpus-wide dropDuplicates(chunk_id,
-    entity_id): a (chunk, entity) pair contributed by several
-    conversations (content-hash chunk ids collide by design) was
-    stored under ONE arbitrary conv, so the delta path's conv-keyed
-    MERGE lost the pair when that conv was deleted even though another
-    conversation still held the chunk. ``entities_raw`` is stored
-    WITHOUT dedup (every parsed node occurrence), so the conv-complete
-    table is exactly its distinct (conv, chunk, entity) projection —
-    rebuild mentions_raw from it through the table's own bucketed
-    layout, then stamp the format marker. Idempotent; returns True
-    when a rebuild happened."""
-    from .merge import table_bucket_spec, write_bucketed
-
-    if wh.stored_format_version() >= FORMAT_VERSION:
-        return False
-    if not wh.exists("mentions_raw") or not wh.exists("entities_raw"):
-        # nothing to repair (fresh or partial warehouse) — stamp so
-        # later cycles don't re-probe
-        wh.write_format_version()
-        return False
-    rebuilt = (
-        wh.read("entities_raw")
-        .select("chunk_id", "conv_id", "entity_id")
-        .dropDuplicates(["conv_id", "chunk_id", "entity_id"])
-    )
-    spec = table_bucket_spec(wh.path("mentions_raw"))
-    if spec is not None:
-        write_bucketed(
-            rebuilt, wh.path("mentions_raw"), spec["key"], spec["num_buckets"]
-        )
-    else:
-        rebuilt.write.mode("overwrite").parquet(wh.path("mentions_raw"))
-    wh.write_format_version()
-    return True
-
-
 def _stage(
     wh: _Warehouse,
     name: str,
-    resume: bool,
+    cfg: BuildConfig,
     compute,
-    group_key: str | None = None,
-    num_buckets: int = 0,
+    key: str | None = None,
 ) -> DataFrame:
-    """Materialize-or-reuse one stage; lineage row on compute.
+    """Materialize-or-reuse one stage; lineage row on compute. ``key``
+    names the bucket key of a per-key table (None: plain overwrite
+    table — wcc and the community tables, whose dense numbering has no
+    stable per-key identity).
 
     Stage lineage is deferred (one batched write at the end of
     build_all): resume() keys off each table's _SUCCESS marker, not
     these rows, so a crash can only lose bookkeeping for stages whose
     tables are themselves complete. The per-bucket extraction rows
     that resume DOES read stay immediate (_extraction_stage)."""
-    if resume and wh.exists(name):
+    if cfg.resume and wh.exists(name):
         return wh.read(name)
     t0 = time.time()
-    df = wh.write(compute(), name, group_key=group_key, num_buckets=num_buckets)
+    df = wh.write(compute(), name, group_key=key, num_buckets=cfg.bucket_convs)
     wh.append_lineage(name, -1, df.count(), t0, defer=True)
     return df
 
@@ -454,10 +457,7 @@ def _extraction_stage(
         wh.read("extraction_cache").dropDuplicates(["chunk_id"]), "chunk_id"
     ).select("chunk_id", "conv_id", "result")
     return wh.write(
-        final,
-        name,
-        group_key="conv_id" if cfg.bucket_convs else None,
-        num_buckets=cfg.bucket_convs,
+        final, name, group_key="conv_id", num_buckets=cfg.bucket_convs
     )
 
 
@@ -470,15 +470,15 @@ def build_all(
     res = BuildResult()
     t_start = time.time()
 
-    bk = cfg.bucket_convs
-    transcripts = _stage(
-        wh,
-        "transcripts",
-        cfg.resume,
-        lambda: transcripts,
-        group_key="conv_id" if bk else None,
-        num_buckets=bk,
-    )
+    # a resume continues only a current-format warehouse; anything else
+    # is stamped BEFORE its first table, so a killed fresh build
+    # resumes under the stamp it started with
+    if cfg.resume and wh.holds_tables():
+        wh.check_format()
+    else:
+        wh.write_format_version()
+
+    transcripts = _stage(wh, "transcripts", cfg, lambda: transcripts, "conv_id")
     res.tables["transcripts"] = transcripts
 
     # registry and chunks both derive from transcripts only — two
@@ -488,20 +488,12 @@ def build_all(
     registry, chunks = _run_parallel(
         [
             lambda: _stage(
-                wh,
-                "registry",
-                cfg.resume,
-                lambda: conversation_registry(transcripts),
-                group_key="conv_id" if bk else None,
-                num_buckets=bk,
+                wh, "registry", cfg,
+                lambda: conversation_registry(transcripts), "conv_id",
             ),
             lambda: _stage(
-                wh,
-                "chunks",
-                cfg.resume,
-                lambda: chunk_conversations(transcripts),
-                group_key="conv_id" if bk else None,
-                num_buckets=bk,
+                wh, "chunks", cfg,
+                lambda: chunk_conversations(transcripts), "conv_id",
             ),
         ]
     )
@@ -512,69 +504,42 @@ def build_all(
     res.tables["extractions"] = extractions
 
     parsed = _stage(
-        wh,
-        "parsed",
-        cfg.resume,
-        lambda: parse_extractions(extractions),
-        group_key="conv_id" if bk else None,
-        num_buckets=bk,
+        wh, "parsed", cfg, lambda: parse_extractions(extractions), "conv_id"
     )
-    conv_key = {"group_key": "conv_id" if bk else None, "num_buckets": bk}
     e_raw, t_raw, m_raw = _run_parallel(
         [
             lambda: _stage(
-                wh, "entities_raw", cfg.resume,
-                lambda: entities_raw(parsed), **conv_key,
+                wh, "entities_raw", cfg, lambda: entities_raw(parsed), "conv_id"
             ),
             lambda: _stage(
-                wh, "triples_raw", cfg.resume,
-                lambda: triples_raw(parsed), **conv_key,
+                wh, "triples_raw", cfg, lambda: triples_raw(parsed), "conv_id"
             ),
             lambda: _stage(
-                wh, "mentions_raw", cfg.resume,
-                lambda: mentions_raw(parsed), **conv_key,
+                wh, "mentions_raw", cfg, lambda: mentions_raw(parsed), "conv_id"
             ),
         ]
     )
     res.tables.update(entities_raw=e_raw, triples_raw=t_raw, mentions_raw=m_raw)
 
-    # format-v2 guarantee: a resume may have reused a pre-upgrade
-    # mentions_raw (corpus-wide dedup) — repair it before anything
-    # downstream consumes it; a fresh write is v2 by construction
-    if cfg.resume:
-        if ensure_mentions_raw_conv_complete(wh):
-            m_raw = wh.read("mentions_raw")
-            res.tables["mentions_raw"] = m_raw
-    else:
-        wh.write_format_version()
-
-    # inverted pair indexes (bucketed warehouses only): entity→conv and
-    # chunk→conv. These are the Spark analogue of Neo4j's adjacency
-    # index — the incremental delta path looks up "which conversations
-    # contain entity X / chunk Y" with a bucket-pruned read instead of
-    # a corpus scan (plans/incremental.py delta path; reference
-    # re-points only merge-touched edges, entity_merger.py:348-360).
-    if bk:
-        _run_parallel(
-            [
-                lambda: _stage(
-                    wh,
-                    "entity_conv_index",
-                    cfg.resume,
-                    lambda: entity_conv_pairs(e_raw, t_raw, m_raw),
-                    group_key="entity_id",
-                    num_buckets=bk,
-                ),
-                lambda: _stage(
-                    wh,
-                    "chunk_conv_index",
-                    cfg.resume,
-                    lambda: chunks.select("chunk_id", "conv_id").distinct(),
-                    group_key="chunk_id",
-                    num_buckets=bk,
-                ),
-            ]
-        )
+    # inverted pair indexes: entity→conv and chunk→conv. These are the
+    # Spark analogue of Neo4j's adjacency index — the incremental cycle
+    # looks up "which conversations contain entity X / chunk Y" with a
+    # bucket-pruned read instead of a corpus scan (plans/incremental.py;
+    # reference re-points only merge-touched edges,
+    # entity_merger.py:348-360).
+    _run_parallel(
+        [
+            lambda: _stage(
+                wh, "entity_conv_index", cfg,
+                lambda: entity_conv_pairs(e_raw, t_raw, m_raw), "entity_id",
+            ),
+            lambda: _stage(
+                wh, "chunk_conv_index", cfg,
+                lambda: chunks.select("chunk_id", "conv_id").distinct(),
+                "chunk_id",
+            ),
+        ]
+    )
 
     # linking: one driver-side pass when the catalog is small (same
     # core spec as the distributed chain — see linking.py), else the
@@ -588,36 +553,34 @@ def build_all(
             )
         return _linked_cache[0]
 
-    # entity_embeddings / similar / canonical_map are bucketed (when
-    # the warehouse is) so incremental cycles can MERGE their deltas
-    # instead of overwriting O(catalog) bytes per cycle; wcc stays an
-    # overwrite — its dense component numbering is a global
-    # renumbering, so its rows have no stable per-key identity to
-    # merge on (and it is the smallest of the four)
+    # entity_embeddings / similar / canonical_map are bucketed so
+    # incremental cycles can MERGE their deltas instead of overwriting
+    # O(catalog) bytes per cycle; wcc stays an overwrite — its dense
+    # component numbering is a global renumbering, so its rows have no
+    # stable per-key identity to merge on (and it is the smallest of
+    # the four)
     embedded = _stage(
         wh,
         "entity_embeddings",
-        cfg.resume,
+        cfg,
         lambda: (
             _linked()["embedded"]
             if _linked() is not None
             else with_embeddings(entity_catalog(e_raw, chunks))
         ),
-        group_key="entity_id" if bk else None,
-        num_buckets=bk,
+        "entity_id",
     )
 
     similar = _stage(
         wh,
         "similar",
-        cfg.resume,
+        cfg,
         lambda: (
             _linked()["similar"]
             if _linked() is not None
             else similar_entities(embedded, method=cfg.similarity_method)
         ),
-        group_key="src" if bk else None,
-        num_buckets=bk,
+        "src",
     )
     res.tables["similar"] = similar
 
@@ -632,19 +595,18 @@ def build_all(
             F.col("node").alias("entity_id"), "wcc"
         )
 
-    wcc = _stage(wh, "wcc", cfg.resume, _wcc)
+    wcc = _stage(wh, "wcc", cfg, _wcc)
 
     cmap = _stage(
         wh,
         "canonical_map",
-        cfg.resume,
+        cfg,
         lambda: (
             _linked()["canonical_map"]
             if _linked() is not None
             else resolve_canonical(wcc)
         ),
-        group_key="entity_id" if bk else None,
-        num_buckets=bk,
+        "entity_id",
     )
     res.tables["canonical_map"] = cmap
 
@@ -653,24 +615,13 @@ def build_all(
     triples, mentions = _run_parallel(
         [
             lambda: _stage(
-                wh,
-                "triples",
-                cfg.resume,
-                lambda: (
-                    with_triple_key(rewrite_triples(t_raw, cmap))
-                    if bk
-                    else rewrite_triples(t_raw, cmap)
-                ),
-                group_key=TRIPLE_KEY_COL if bk else None,
-                num_buckets=bk,
+                wh, "triples", cfg,
+                lambda: with_triple_key(rewrite_triples(t_raw, cmap)),
+                TRIPLE_KEY_COL,
             ),
             lambda: _stage(
-                wh,
-                "mentions",
-                cfg.resume,
-                lambda: rewrite_mentions(m_raw, cmap),
-                group_key="chunk_id" if bk else None,
-                num_buckets=bk,
+                wh, "mentions", cfg,
+                lambda: rewrite_mentions(m_raw, cmap), "chunk_id",
             ),
         ]
     )
@@ -682,14 +633,7 @@ def build_all(
             "entity_id", "entity_type", "description", "embedding", "wcc"
         )
 
-    entities = _stage(
-        wh,
-        "entities",
-        cfg.resume,
-        _entities,
-        group_key="entity_id" if bk else None,
-        num_buckets=bk,
-    )
+    entities = _stage(wh, "entities", cfg, _entities, "entity_id")
     res.tables["entities"] = entities
 
     if cfg.resume and wh.exists("membership") and wh.exists("hierarchy"):
@@ -734,16 +678,11 @@ def build_all(
             lambda: _stage(
                 wh,
                 "communities",
-                cfg.resume,
+                cfg,
                 lambda: community_catalog(membership, entities, triples, mentions),
             ),
             lambda: _stage(
-                wh,
-                "chunk_embeddings",
-                cfg.resume,
-                _chunk_embeddings,
-                group_key="chunk_id" if bk else None,
-                num_buckets=bk,
+                wh, "chunk_embeddings", cfg, _chunk_embeddings, "chunk_id"
             ),
         ]
     )

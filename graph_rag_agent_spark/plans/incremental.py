@@ -15,12 +15,20 @@ incremental_graph_builder.py:880-958 + incremental/file_change_manager
      Entities flagged protected/manual_edit are never cascaded
      (conflict policy 'manual_first', config/settings.py:40-44).
   3. re-run the build pipeline on added+modified conversations only;
-     unchanged chunks hit the extraction cache (anti-join) so even a
-     modified conversation only pays for its new chunk texts.
-  4. rewrite tables: delete old rows for changed convs, append new;
-     linking/community stages re-run over the merged catalog (they
-     are global by nature — same as the reference re-running its
-     index/community stage).
+     the extraction cache is looked up through the chunk→conv index,
+     so even a modified conversation only pays for its new chunk
+     texts.
+  4. MERGE instead of rewrite: the warehouse has ONE layout (bucketed
+     per-key tables, build.FORMAT_VERSION 3) and ONE cycle
+     (``incremental_update``). Per-conversation tables take a
+     conv-keyed MERGE of the changed conversations; the canonical
+     triples / mentions / entities are re-pointed only where the
+     canonical map or a contributing conversation changed, found via
+     the entity→conv and chunk→conv inverted indexes; linking and
+     community stages reuse or delta-localize their stored state and
+     fall back to a global recompute only when their inputs moved.
+     Warehouses in any older format are rejected and rebuilt with
+     ``build_all(resume=False)``.
 """
 
 from __future__ import annotations
@@ -31,6 +39,17 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.transcripts import conversation_registry
+from . import fsio
+from .build import (
+    LINK_PARAMS_FILE,
+    WAREHOUSE_TABLES,
+    BuildConfig,
+    _run_parallel,
+    _Warehouse,
+    community_fingerprint,
+    entity_conv_pairs,
+    link_fingerprint,
+)
 
 # Fixed-latency guard for the round-5 CC+resolve delta. Below this
 # catalog size the FULL recompute takes the solver's driver fast path
@@ -102,302 +121,13 @@ def incremental_update(
     warehouse: str,
     cfg=None,
 ) -> dict[str, DataFrame]:
-    """True incremental cycle against an existing build warehouse.
+    """One incremental cycle against a build_all warehouse (format
+    v3 — any other stamp raises; older warehouses are rebuilt).
 
-    Per-conversation stages (chunk, extract, parse, raw tables) are
-    REUSED for unchanged conversations via anti-join + append — only
-    the changed conv set flows through the operators, mirroring the
-    reference's changed-files-only reprocessing
-    (incremental_graph_builder.py:94-307). Global stages (entity
-    catalog → linking → canonicalization → communities) re-run over
-    the merged raw tables, exactly as the reference re-runs its
-    index/community stage. At 100 TB an incremental cycle therefore
-    costs O(changed conversations) + the global linking work, not a
-    full-corpus re-chunk/re-parse (round 1 rebuilt everything).
-
-    Lineage rows (stage='incr_*') record how many rows each
-    incremental stage actually processed — the unchanged-is-free
-    property is testable from them. Output tables are overwritten in
-    the warehouse (Iceberg: MERGE INTO / DELETE WHERE).
-    """
-    from ..operators.canonicalize import (
-        canonical_entities,
-        resolve_canonical,
-        rewrite_mentions,
-        rewrite_triples,
-    )
-    from ..operators.chunk_index import with_chunk_embeddings
-    from ..operators.chunking import chunk_conversations
-    from ..operators.community import community_catalog, detect_communities
-    from ..operators.components import (
-        connected_components,
-        consecutive_component_ids,
-    )
-    from ..operators.extraction import extract_chunks
-    from ..operators.linking import (
-        entity_catalog,
-        link_entities_driver_path,
-        similar_entities,
-        with_embeddings,
-    )
-    from ..operators.parsing import (
-        entities_raw,
-        mentions_raw,
-        parse_extractions,
-        triples_raw,
-    )
-    from .build import BuildConfig, _Warehouse, link_fingerprint
-
-    import time as _time
-
-    cfg = cfg or BuildConfig(warehouse=warehouse, resume=False)
-    wh = _Warehouse(spark, warehouse)
-    wh.link_params = link_fingerprint(cfg)
-
-    # one-time repair of pre-v2 warehouses: a corpus-wide-deduped
-    # mentions_raw would make the delta path's conv-keyed MERGE drop
-    # shared-chunk pairs on conv delete (build.py docstring)
-    from .build import ensure_mentions_raw_conv_complete
-
-    ensure_mentions_raw_conv_complete(wh)
-
-    if _delta_capable(wh):
-        return _incremental_update_delta(spark, new_transcripts, wh, cfg)
-
-    old_registry = wh.read("registry")
-    new_registry = conversation_registry(new_transcripts).localCheckpoint()
-    changes = {
-        k: v.localCheckpoint() for k, v in detect_changes(new_registry, old_registry).items()
-    }
-    changed = changes["added"].union(changes["modified"]).distinct().localCheckpoint()
-    dropped = changes["deleted"].union(changes["modified"]).distinct().localCheckpoint()
-    stale = dropped.union(changed).distinct().localCheckpoint()
-
-    old_transcripts = wh.read("transcripts")
-    old_chunks = wh.read("chunks")
-    old_extractions = wh.read("extractions")
-    old_parsed = wh.read("parsed")
-
-    # audit row for the cascade (J9) — what a delete-only cycle drops
-    cascade = cascade_delete_entities(wh.read("mentions"), dropped).localCheckpoint()
-
-    changed_transcripts = new_transcripts.join(changed, "conv_id", "left_semi")
-    transcripts = (
-        old_transcripts.join(stale, "conv_id", "left_anti")
-        .unionByName(changed_transcripts)
-        .localCheckpoint()
-    )
-
-    # --- per-conversation stages: changed convs only -----------------
-    t0 = _time.time()
-    new_chunks = chunk_conversations(changed_transcripts).localCheckpoint()
-    wh.append_lineage("incr_chunks", -1, new_chunks.count(), t0)
-    chunks = (
-        old_chunks.join(stale, "conv_id", "left_anti")
-        .select(*old_chunks.columns)  # join key reorders columns
-        .unionByName(new_chunks)
-        .select(*new_chunks.columns)
-        .localCheckpoint()
-    )
-
-    cache = None
-    try:
-        cache = wh.read("extraction_cache")
-    except Exception:
-        cache = old_extractions.select("chunk_id", "result")
-    t0 = _time.time()
-    kwargs = {} if cfg.extractor is None else {"extractor": cfg.extractor}
-    new_extractions = extract_chunks(new_chunks, cache=cache, **kwargs).localCheckpoint()
-    wh.append_lineage("incr_extract", -1, new_extractions.count(), t0)
-    extractions = (
-        old_extractions.join(stale, "conv_id", "left_anti")
-        .unionByName(new_extractions.select(*old_extractions.columns))
-        .select(*new_extractions.columns)
-        .localCheckpoint()
-    )
-
-    t0 = _time.time()
-    parsed_new = parse_extractions(new_extractions).localCheckpoint()
-    wh.append_lineage("incr_parse", -1, parsed_new.count(), t0)
-    parsed = (
-        old_parsed.join(stale, "conv_id", "left_anti")
-        .unionByName(parsed_new.select(*old_parsed.columns))
-        .select(*parsed_new.columns)
-        .localCheckpoint()
-    )
-    e_raw = entities_raw(parsed)
-    t_raw = triples_raw(parsed)
-    m_raw = mentions_raw(parsed)
-
-    # chunk embeddings: re-embed only chunk texts not already embedded
-    try:
-        old_ce = wh.read("chunk_embeddings")
-    except Exception:
-        old_ce = None
-    distinct_chunks = chunks.select("chunk_id", "text").dropDuplicates(["chunk_id"])
-    if old_ce is not None:
-        kept_ce = old_ce.join(
-            distinct_chunks.select("chunk_id"), "chunk_id", "left_semi"
-        )
-        todo = distinct_chunks.join(old_ce.select("chunk_id"), "chunk_id", "left_anti")
-        chunk_embeddings = kept_ce.unionByName(
-            with_chunk_embeddings(todo).select("chunk_id", "embedding")
-        ).localCheckpoint()
-    else:
-        chunk_embeddings = (
-            with_chunk_embeddings(distinct_chunks)
-            .select("chunk_id", "embedding")
-            .localCheckpoint()
-        )
-
-    # --- global stages over the merged raw tables --------------------
-    catalog = entity_catalog(e_raw, chunks)
-    linked = link_entities_driver_path(catalog)
-    if linked is not None:
-        embedded, similar = linked["embedded"], linked["similar"]
-        wcc, cmap = linked["wcc"], linked["canonical_map"]
-    else:
-        embedded = with_embeddings(catalog).localCheckpoint()
-        similar = similar_entities(
-            embedded, method=cfg.similarity_method
-        ).localCheckpoint()
-        wcc = (
-            consecutive_component_ids(
-                connected_components(
-                    similar.select("src", "dst"), nodes=embedded.select("entity_id")
-                )
-            )
-            .select(F.col("node").alias("entity_id"), "wcc")
-            .localCheckpoint()
-        )
-        cmap = resolve_canonical(wcc).localCheckpoint()
-
-    triples = rewrite_triples(t_raw, cmap).localCheckpoint()
-    mentions = rewrite_mentions(m_raw, cmap).localCheckpoint()
-    entities = (
-        canonical_entities(embedded.join(wcc, "entity_id", "left"), cmap)
-        .select("entity_id", "entity_type", "description", "embedding", "wcc")
-        .localCheckpoint()
-    )
-    membership, hierarchy, comm_labels = detect_communities(
-        entities, triples, max_levels=cfg.max_levels, return_labels=True
-    )
-    membership = membership.localCheckpoint()
-    hierarchy = hierarchy.localCheckpoint()
-    # localized-detection state: written above the crossover, stale
-    # state deleted below it (maintain_localized_state). The deletion
-    # happens inside the sidecar bracket opened below.
-    communities = community_catalog(
-        membership, entities, triples, mentions
-    ).localCheckpoint()
-
-    # --- persist: per-conversation tables MERGE only the delta-touched
-    # bucket partitions when the warehouse stores them bucketed
-    # (BuildConfig.bucket_convs > 0 at build time — plans/merge.py);
-    # otherwise full overwrite. Global tables are global recomputes and
-    # always overwrite. Everything above is eagerly checkpointed, so
-    # reading-while-overwriting is safe. ------------------------------
-    from .merge import table_bucket_spec, upsert_groups
-
-    merged_writes: dict[str, DataFrame] = {}
-    per_conv_deltas = {
-        "transcripts": changed_transcripts.localCheckpoint(),
-        "chunks": new_chunks,
-        "extractions": new_extractions.select(*old_extractions.columns),
-        "parsed": parsed_new.select(*old_parsed.columns),
-    }
-    for name, delta in per_conv_deltas.items():
-        spec = table_bucket_spec(wh.path(name))
-        if spec is not None and spec.get("key") == "conv_id":
-            info = upsert_groups(
-                spark, wh.path(name), delta, stale, "conv_id", None
-            )
-            wh.append_lineage(
-                f"incr_merge_{name}", len(info["touched_buckets"]), -1, _time.time()
-            )
-            merged_writes[name] = wh.read(name)
-
-    # registry LAST: change detection keys off the stored registry, so
-    # a cycle that dies mid-write must re-detect its conversations as
-    # changed when retried (same rationale as the delta path)
-    tables = {
-        "transcripts": transcripts,
-        "chunks": chunks,
-        "extractions": extractions,
-        "parsed": parsed,
-        "entities_raw": e_raw.localCheckpoint(),
-        "triples_raw": t_raw.localCheckpoint(),
-        "mentions_raw": m_raw.localCheckpoint(),
-        "entity_embeddings": embedded,
-        "similar": similar,
-        "wcc": wcc,
-        "canonical_map": cmap,
-        "triples": triples,
-        "mentions": mentions,
-        "entities": entities,
-        "membership": membership,
-        "hierarchy": hierarchy,
-        "communities": communities,
-        "chunk_embeddings": chunk_embeddings,
-    }
-    tables["registry"] = new_registry
-    # the write loop overwrites membership/hierarchy/communities among
-    # the rest — bracket it with the community sidecar so a crash
-    # mid-loop can't leave a stale stamp on half-written tables (the
-    # delta path's no-change reuse probes this stamp)
-    from .build import community_fingerprint
-
-    wh.invalidate_community_params()
-    tables.update(
-        maintain_localized_state(wh, entities, triples, comm_labels)
-    )
-    out = {
-        name: (
-            merged_writes[name]
-            if name in merged_writes
-            else wh.write(df, name)
-        )
-        for name, df in tables.items()
-    }
-    wh.commit_community_params(community_fingerprint(cfg))
-    out["cascade_deleted_entities"] = cascade
-    out["changes_added"] = changes["added"]
-    out["changes_modified"] = changes["modified"]
-    out["changes_deleted"] = changes["deleted"]
-    return out
-
-
-from .build import _run_parallel  # noqa: E402  (shared job-parallel helper)
-
-
-def _delta_capable(wh) -> bool:
-    """True when the warehouse was built with the bucketed delta
-    layout (BuildConfig.bucket_convs > 0): tkey-keyed triples and the
-    entity→conv / chunk→conv inverted indexes. Older warehouses fall
-    back to the legacy (global-rewrite) path above."""
-    from ..operators.canonicalize import TRIPLE_KEY_COL
-    from .merge import table_bucket_spec
-
-    spec = table_bucket_spec(wh.path("triples"))
-    return (
-        spec is not None
-        and spec.get("key") == TRIPLE_KEY_COL
-        and table_bucket_spec(wh.path("entity_conv_index")) is not None
-        and table_bucket_spec(wh.path("chunk_conv_index")) is not None
-    )
-
-
-def _incremental_update_delta(
-    spark: SparkSession, new_transcripts: DataFrame, wh, cfg
-) -> dict[str, DataFrame]:
-    """Delta-proportional incremental cycle — the 100 TB path.
-
-    Closes VERDICT r2 item #1: the legacy path above re-points the
-    FULL merged corpus through the new canonical map and overwrites
-    corpus-proportional tables every cycle; the reference only
-    re-points edges touched by merges (entity_merger.py:348-360,
-    cascade at incremental_graph_builder.py:566-669). This path makes
-    every corpus-proportional READ bucket-pruned and every
+    The reference re-points only edges touched by merges
+    (entity_merger.py:348-360, cascade at
+    incremental_graph_builder.py:566-669); so does this cycle. Every
+    corpus-proportional READ is bucket-pruned and every
     corpus-proportional WRITE a keyed MERGE:
 
       * per-conversation tables (transcripts/chunks/extractions/
@@ -460,6 +190,11 @@ def _incremental_update_delta(
     actually processed; tests assert they scale with the delta, not
     the corpus.
     """
+    cfg = cfg or BuildConfig(warehouse=warehouse, resume=False)
+    wh = _Warehouse(spark, warehouse)
+    wh.check_format()
+    wh.link_params = link_fingerprint(cfg)
+
     import time as _time
 
     from ..operators.canonicalize import (
@@ -492,7 +227,6 @@ def _incremental_update_delta(
         parse_extractions,
         triples_raw,
     )
-    from .build import entity_conv_pairs
     from .merge import read_pruned, upsert_groups
 
     ck = lambda df: df.localCheckpoint()  # noqa: E731
@@ -533,15 +267,13 @@ def _incremental_update_delta(
     # else (no empty-frame chunk/extract/merge jobs, no catalog scan,
     # no EXCEPT probes). Any guard failing falls through to the normal
     # path, which handles partial reuse stage by stage.
-    from .build import community_fingerprint
-
     _heal_journal(wh)
     if (
         not stale.limit(1).count()
         and not any(wh.exists(n) for n in _JOURNAL_TABLES)
         and wh.stored_link_params() == wh.link_params
         and wh.stored_community_params() == community_fingerprint(cfg)
-        and all(wh.exists(n) for n in _DELTA_OUT_TABLES)
+        and all(wh.exists(n) for n in WAREHOUSE_TABLES)
     ):
         wh.append_lineage(
             "incr_noop_shortcut", -1, 1, _time.time(), defer=True
@@ -576,7 +308,7 @@ def _incremental_update_delta(
     # cascade_delete_entities computes over the canonical mentions
     # table, rebuilt here from index lookups instead of a corpus scan.
     #   1. candidates: canonical ids with a raw mention in a dropped
-    #      conv (mentions basis, matching the legacy audit — NOT the
+    #      conv (mentions basis, as cascade_delete_entities — NOT the
     #      entities∪triples union the conv index stores);
     #   2. aliases: ALL raw preimages of those canonicals — survival
     #      is a property of the canonical entity, so an alias seen
@@ -1302,7 +1034,6 @@ def _incremental_update_delta(
     # numbering is a GLOBAL renumbering (one new component can shift
     # every downstream label), so its rows have no stable per-key
     # identity worth diffing, and it is the smallest of the four.
-    # Legacy/unbucketed warehouses keep the old full overwrite.
     #
     # Sidecar dance (same torn-window guard as before): the link-params
     # sidecar is removed BEFORE the first side-table write and restored
@@ -1314,15 +1045,11 @@ def _incremental_update_delta(
 
         path = wh.path(name)
         if not wh.exists(name) or table_bucket_spec(path) is None:
-            # bucket the fallback write on bucketed-config warehouses
-            # (same shape as build_all's stages) so a once-missing or
-            # legacy-unbucketed table re-enters the delta-MERGE
-            # regime next cycle instead of overwriting forever
+            # crash recovery: a table (or its spec) lost mid-write is
+            # rewritten bucketed (same shape as build_all's stage) so
+            # it re-enters the delta-MERGE regime next cycle
             wh.write(
-                df_new,
-                name,
-                group_key=key if cfg.bucket_convs else None,
-                num_buckets=cfg.bucket_convs,
+                df_new, name, group_key=key, num_buckets=cfg.bucket_convs
             )
             return
         cols = [c for c in df_new.columns]
@@ -1367,9 +1094,6 @@ def _incremental_update_delta(
         )
 
     if reuse is None:
-        from . import fsio
-        from .build import LINK_PARAMS_FILE
-
         fsio.remove(os.path.join(wh.root, LINK_PARAMS_FILE))
         side_jobs = [
             lambda: _merge_side_table(
@@ -1407,8 +1131,6 @@ def _incremental_update_delta(
     # no-op cycle skips the whole corpus-proportional detection loop.
     # The sidecar fingerprint declines reuse across a max_levels change
     # and across a crash inside the three-table overwrite window.
-    from .build import community_fingerprint
-
     communities_reusable = (
         reuse is not None
         and not journal_live
@@ -1603,35 +1325,12 @@ def _incremental_update_delta(
     return out
 
 
-_DELTA_OUT_TABLES = (
-    "transcripts",
-    "registry",
-    "chunks",
-    "extractions",
-    "parsed",
-    "entities_raw",
-    "triples_raw",
-    "mentions_raw",
-    "entity_embeddings",
-    "similar",
-    "wcc",
-    "canonical_map",
-    "triples",
-    "mentions",
-    "entities",
-    "membership",
-    "hierarchy",
-    "communities",
-    "chunk_embeddings",
-)
-
-
 def _read_out_tables(wh) -> dict[str, DataFrame]:
     return dict(
         zip(
-            _DELTA_OUT_TABLES,
+            WAREHOUSE_TABLES,
             _run_parallel(
-                [(lambda n=n: wh.read(n)) for n in _DELTA_OUT_TABLES]
+                [(lambda n=n: wh.read(n)) for n in WAREHOUSE_TABLES]
             ),
         )
     )
@@ -1640,8 +1339,8 @@ def _read_out_tables(wh) -> dict[str, DataFrame]:
 def maintain_localized_state(wh, entities_tbl, triples_tbl, comm_labels):
     """The ONE owner of the localized-detection aux state
     (community_labels + proj_wcc) for every full-detection write site
-    (build_all, the legacy incremental path, the delta path's full
-    branch). Above the localization crossover
+    (build_all and the incremental cycle's full-detection branch).
+    Above the localization crossover
     (community.localization_crossover — node AND edge conditions,
     mirroring the detector's driver gate) returns the aux tables to
     commit inside the caller's sidecar bracket; below it returns {}
@@ -1663,8 +1362,6 @@ def maintain_localized_state(wh, entities_tbl, triples_tbl, comm_labels):
                 entities_tbl, triples_tbl
             ).localCheckpoint(),
         }
-    from . import fsio
-
     for name in ("community_labels", "proj_wcc"):
         fsio.rmtree(wh.path(name))
     return {}
@@ -1917,8 +1614,6 @@ def _heal_journal(wh) -> None:
     the main table's delete. After this, the main path is the single
     authoritative copy and a later overwrite of ``__next`` can never
     destroy live obligations."""
-    from . import fsio
-
     for name in _JOURNAL_TABLES:
         nxt = wh.path(name) + _JOURNAL_NEXT_SUFFIX
         if fsio.exists(os.path.join(nxt, "_SUCCESS")):
@@ -1956,8 +1651,6 @@ def _write_journal(wh, updates: dict[str, DataFrame]) -> None:
     complete ``__next`` survives and the next read heals it forward.
     Inputs are checkpointed by the caller (they union the stored
     journal being replaced)."""
-    from . import fsio
-
     for name, df in updates.items():
         nxt = wh.path(name) + _JOURNAL_NEXT_SUFFIX
         df.write.mode("overwrite").parquet(nxt)
@@ -1966,8 +1659,6 @@ def _write_journal(wh, updates: dict[str, DataFrame]) -> None:
 
 
 def _clear_journal(wh) -> None:
-    from . import fsio
-
     for name in _JOURNAL_TABLES:
         fsio.rmtree(wh.path(name))
         fsio.rmtree(wh.path(name) + _JOURNAL_NEXT_SUFFIX)

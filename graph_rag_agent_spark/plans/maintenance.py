@@ -181,10 +181,9 @@ def vacuum_chunk_embeddings(spark: SparkSession, warehouse: str) -> dict:
     recomputed if identical chunk text is ever re-ingested — the same
     trade Iceberg's expire_snapshots makes with time-travel data.
     Orphan resolution is a key-column-only anti-join; the delete is a
-    bucket-pruned ``merge_into(..., 'delete')`` on bucketed
-    warehouses, a filtered rewrite on legacy plain ones."""
+    bucket-pruned ``merge_into(..., 'delete')``."""
     from .build import _Warehouse
-    from .merge import merge_into, table_bucket_spec
+    from .merge import merge_into
 
     wh = _Warehouse(spark, warehouse)
     ce_path = wh.path("chunk_embeddings")
@@ -201,15 +200,7 @@ def vacuum_chunk_embeddings(spark: SparkSession, warehouse: str) -> dict:
     n = orphans.count()
     if n == 0:
         return {"rows_deleted": 0}
-    if table_bucket_spec(ce_path) is not None:
-        merge_into(spark, ce_path, orphans, "chunk_id", when_matched="delete")
-    else:
-        kept = (
-            wh.read("chunk_embeddings")
-            .join(live, "chunk_id", "left_semi")
-            .localCheckpoint(eager=True)
-        )
-        kept.write.mode("overwrite").parquet(ce_path)
+    merge_into(spark, ce_path, orphans, "chunk_id", when_matched="delete")
     return {"rows_deleted": n}
 
 
@@ -258,12 +249,16 @@ def maintain_warehouse(spark: SparkSession, warehouse: str) -> dict:
     vacuums (chunk embeddings, extraction cache), then small-file
     compaction of the append-mode tables. Returns the per-step report
     and records a ``maintenance`` lineage row so warehouse history
-    shows when garbage was last reclaimed."""
+    shows when garbage was last reclaimed. A warehouse holding tables
+    of an older format raises before anything is touched."""
     import time
 
     from .build import _Warehouse
 
     t0 = time.time()
+    wh = _Warehouse(spark, warehouse)
+    if wh.holds_tables():
+        wh.check_format()
     report = {
         "turn_log": vacuum_turn_log(spark, warehouse),
         "chunk_embeddings": vacuum_chunk_embeddings(spark, warehouse),
@@ -276,7 +271,6 @@ def maintain_warehouse(spark: SparkSession, warehouse: str) -> dict:
     rows_deleted = sum(
         step.get("rows_deleted", 0) for step in report.values()
     )
-    wh = _Warehouse(spark, warehouse)
     if fsio.is_dir(wh.path("lineage")):
         wh.append_lineage("maintenance", -1, rows_deleted, t0)
     return report

@@ -17,7 +17,7 @@ Per micro-batch:
   2. project the latest-version snapshot of every conversation;
   3. first batch → ``build_all``; later batches →
      ``incremental_update`` (registry diff, changed-conversations-only
-     chunk/extract/parse, cascade delete, global re-link).
+     chunk/extract/parse, cascade delete, keyed MERGEs).
 
 Delivery contract: a micro-batch must carry whole conversations
 (availableNow file batches, or upstream gating through
@@ -58,80 +58,22 @@ def latest_conversation_snapshot(turn_log: DataFrame) -> DataFrame:
     )
 
 
-# Where legacy root-file batches are parked: ingest_batch b maps to
-# partition b - _LEGACY_PARK_SHIFT. A per-ROW pure function (unlike a
-# shift derived from max(ingest_batch) over whichever root files
-# remain), so a migration retried after a crash at ANY point re-parks
-# every surviving row onto the same partition. Negative (a reset
-# checkpoint restarts stream batch ids at 0, which must not collide
-# with parked partitions) and order-preserving (the snapshot picks the
-# max ingest_batch per conversation). 2^33 is far above any real
-# stream batch id while leaving the full long range collision-free.
-_LEGACY_PARK_SHIFT = 1 << 33
-
-
-def _migrate_legacy_turn_log(spark: SparkSession, turn_log: str) -> None:
-    """A turn log written by a pre-partitioning version of this sink
-    (plain append, ingest_batch as a data column) holds root-level
-    part files; the partitioned writer would add ingest_batch=N
-    directories NEXT to them and partition discovery dies with
-    'Conflicting directory structures'. Rewrite any root files into
-    their ingest_batch=<id> partitions once, then drop them."""
-    import os
-
+def _check_turn_log_layout(turn_log: str) -> None:
+    """The partitioned writer below adds ingest_batch=<id> directories;
+    a turn log holding root-level part files was written by an older,
+    unpartitioned sink and is rejected, not migrated."""
     from ..plans import fsio
 
-    if not fsio.is_dir(turn_log):
-        return
-    legacy = [
-        f
+    if fsio.is_dir(turn_log) and any(
+        f.endswith(".parquet") and not f.startswith("_")
         for f in fsio.listdir(turn_log)
-        if f.endswith(".parquet") and not f.startswith("_")
-    ]
-    if not legacy:
-        return
-    old = spark.read.parquet(*[os.path.join(turn_log, f) for f in legacy])
-    if "ingest_batch" not in old.columns:
-        old = old.withColumn("ingest_batch", F.lit(0))
-    old = old.withColumn(
-        "ingest_batch",
-        (F.col("ingest_batch").cast("long") - F.lit(_LEGACY_PARK_SHIFT)).cast(
-            "long"
-        ),
-    )
-    ids = [r[0] for r in old.select("ingest_batch").distinct().collect()]
-    if not ids:  # 0-row legacy part files: nothing to park
-        for f in legacy:
-            fsio.remove(os.path.join(turn_log, f))
-        return
-    # crash-retry healing: a batch's rows can span several root files
-    # (the legacy sink appended one file per task), and a crash midway
-    # through the removal loop below leaves some of a batch's files
-    # gone while its parked partition already holds the COMPLETE batch.
-    # A bare overwrite from the remaining files would shrink that
-    # partition, so union the already-parked rows back in first and
-    # collapse the exact duplicates this creates on the healthy path.
-    # basePath keeps the partition column while dodging the mixed
-    # root-file/partition-dir discovery conflict being migrated away.
-    parked_dirs = [
-        d
-        for d in (os.path.join(turn_log, f"ingest_batch={i}") for i in ids)
-        if fsio.is_dir(d)
-    ]
-    if parked_dirs:
-        parked = spark.read.option("basePath", turn_log).parquet(*parked_dirs)
-        old = old.unionByName(parked.select(*old.columns)).dropDuplicates()
-    # materialize before the dynamic partition OVERWRITE — the plan
-    # reads the very partitions the write replaces
-    old = old.localCheckpoint()
-    (
-        old.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("ingest_batch")
-        .parquet(turn_log)
-    )
-    for f in legacy:
-        fsio.remove(os.path.join(turn_log, f))
+    ):
+        raise ValueError(
+            f"turn log {turn_log} holds root-level part files (an "
+            "unpartitioned older layout), this engine reads "
+            "ingest_batch=<id> partitions — rebuild the warehouse by "
+            "replaying the source with a fresh checkpoint"
+        )
 
 
 def stream_incremental_build(
@@ -150,7 +92,7 @@ def stream_incremental_build(
     from ..plans.incremental import incremental_update
 
     turn_log = f"{warehouse}/turn_log"
-    _migrate_legacy_turn_log(spark, turn_log)
+    _check_turn_log_layout(turn_log)
     build_cfg = cfg or BuildConfig(warehouse=warehouse, resume=False)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:

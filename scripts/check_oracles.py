@@ -1,6 +1,10 @@
 """Local replica of the driver's correctness harness: run every
 queries() entry and its oracle_sql() on the same parquet, compare
-row-count + column names + order-insensitive values.
+row-count + column names + per-column Arrow types + order-insensitive
+values. The type check catches an oracle whose DuckDB type crosses
+Arrow differently from Spark's (e.g. sum() over INT is HUGEINT, which
+arrives as decimal128 where Spark returns int64) before it fails a
+value hash downstream.
 
 Usage: python scripts/check_oracles.py [sf_dir] [query ...]
 """
@@ -41,9 +45,37 @@ def norm_rows(cols, rows):
     return sorted(tuple(norm_cell(r[i]) for i in order) for r in rows)
 
 
+def arrow_type(t):
+    """Arrow type with the large/regular offset variants folded (they
+    carry identical values)."""
+    import pyarrow as pa
+
+    if pa.types.is_large_string(t):
+        return pa.string()
+    if pa.types.is_large_binary(t):
+        return pa.binary()
+    if pa.types.is_large_list(t) or pa.types.is_list(t):
+        return pa.list_(arrow_type(t.value_type))
+    return t
+
+
+def arrow_type_mismatches(spark_schema, duck_schema) -> list[str]:
+    """'col: spark=<type> duck=<type>' for every shared column whose
+    Arrow types differ."""
+    duck = {f.name: arrow_type(f.type) for f in duck_schema}
+    out = []
+    for f in spark_schema:
+        st = arrow_type(f.type)
+        if f.name in duck and duck[f.name] != st:
+            out.append(f"{f.name}: spark={st} duck={duck[f.name]}")
+    return out
+
+
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
+
+    from pyspark.sql.pandas.types import to_arrow_schema
 
     import __spark_entry__ as entrymod
     from graph_rag_agent_spark.session import get_spark
@@ -74,6 +106,12 @@ def main():
             status.append(f"COLS spark={sorted(cols)} duck={sorted(ocols)}")
         if len(rows) != len(orows):
             status.append(f"COUNT spark={len(rows)} duck={len(orows)}")
+        types = arrow_type_mismatches(
+            to_arrow_schema(df.schema),
+            con.execute(oracles[name]).fetch_arrow_table().schema,
+        )
+        if types:
+            status.append(f"TYPES {'; '.join(types)}")
         if not status:
             a = norm_rows(cols, [[r[c] for c in cols] for r in rows])
             b = norm_rows(ocols, orows)

@@ -7,8 +7,9 @@ DISTRIBUTED loops), snapshots it, then runs the SAME 1%-conversation-
 drop delta cycle twice:
 
   A: round-5 defaults — CC+resolve delta + localized communities engage
-  B: localizations disabled (gates raised) — the pre-round-5 full
-     recompute path
+  B: localizations disabled (every node and edge gate raised) — the
+     pre-round-5 full recompute path; the run fails if either
+     localization's lineage marker appears anyway
 
 and prints both cycles' wall-clock, GRARS_DEBUG section decompositions
 going to stderr, and the lineage markers. Table-level equality between
@@ -75,11 +76,18 @@ def main() -> None:
         wh = tempfile.mkdtemp(prefix=f"ab_{tag}_")
         os.rmdir(wh)
         shutil.copytree(base_wh, wh)
-        old_cc = incr_mod.CC_DELTA_MIN_ENTITIES
-        old_loc = community_mod.LOCALIZE_MIN_ENTITIES
+        # every gate of both localizations — node AND edge conditions —
+        # so the OFF run cannot engage either path through the edge count
+        gates = [
+            (incr_mod, "CC_DELTA_MIN_ENTITIES"),
+            (incr_mod, "CC_DELTA_MIN_EDGES"),
+            (community_mod, "LOCALIZE_MIN_ENTITIES"),
+            (community_mod, "EDGE_DRIVER_THRESHOLD"),
+        ]
+        saved = [getattr(mod, name) for mod, name in gates]
         if disable:
-            incr_mod.CC_DELTA_MIN_ENTITIES = 10**12
-            community_mod.LOCALIZE_MIN_ENTITIES = 10**12
+            for mod, name in gates:
+                setattr(mod, name, 10**12)
         try:
             t0 = time.time()
             incremental_update(spark, v2, wh, cfg=BuildConfig(
@@ -87,8 +95,8 @@ def main() -> None:
             ))
             wall = round(time.time() - t0, 1)
         finally:
-            incr_mod.CC_DELTA_MIN_ENTITIES = old_cc
-            community_mod.LOCALIZE_MIN_ENTITIES = old_loc
+            for (mod, name), value in zip(gates, saved):
+                setattr(mod, name, value)
         lin = spark.read.parquet(f"{wh}/lineage")
         markers = {
             s: [r["rows"] for r in lin.where(F.col("stage") == s).collect()]
@@ -100,6 +108,13 @@ def main() -> None:
                 "incr_detection_reused",
             )
         }
+        if disable:
+            leaked = {
+                s: markers[s]
+                for s in ("incr_cc_delta", "incr_communities_localized")
+                if markers[s]
+            }
+            assert not leaked, f"localization engaged in the OFF run: {leaked}"
         return {"tag": tag, "wall_s": wall, "markers": markers, "wh": wh}
 
     a = run("localized", disable=False)

@@ -305,6 +305,11 @@ def test_stream_incremental_build_matches_batch_rebuild(
     deliver(batch1)
     deliver(batch2)
 
+    # the second micro-batch ran the incremental cycle's conv-keyed
+    # MERGEs, not a rebuild
+    stages = {r["stage"] for r in spark.read.parquet(f"{wh}/lineage").collect()}
+    assert "incr_merge_registry" in stages
+
     got = {
         (r["subj"], r["pred"], r["obj"])
         for r in spark.read.parquet(f"{wh}/triples").collect()
@@ -439,10 +444,13 @@ def test_delta_incremental_matches_rebuild_and_is_delta_proportional(
     )
     build_all(spark, transcripts_df, cfg)
 
-    from graph_rag_agent_spark.plans.incremental import _delta_capable
+    from graph_rag_agent_spark.operators.canonicalize import TRIPLE_KEY_COL
     from graph_rag_agent_spark.plans.build import _Warehouse
+    from graph_rag_agent_spark.plans.merge import table_bucket_spec
 
-    assert _delta_capable(_Warehouse(spark, wh))
+    assert table_bucket_spec(f"{wh}/triples")["key"] == TRIPLE_KEY_COL
+    for idx in ("entity_conv_index", "chunk_conv_index"):
+        assert table_bucket_spec(f"{wh}/{idx}") is not None
 
     # v2: drop conv-000003, truncate conv-000001
     v2_rows = [
@@ -452,15 +460,15 @@ def test_delta_incremental_matches_rebuild_and_is_delta_proportional(
         and not (r["conv_id"] == "conv-000001" and r["turn_idx"] >= 5)
     ]
     v2_df = spark.createDataFrame(v2_rows, schema=schemas.TRANSCRIPTS)
-    # snapshot the pre-update canonical mentions — the legacy cascade
-    # audit's input — before the cycle overwrites the table
+    # snapshot the pre-update canonical mentions — the input of
+    # cascade_delete_entities — before the cycle overwrites the table
     old_mentions = spark.read.parquet(f"{wh}/mentions").localCheckpoint(
         eager=True
     )
     tables = incremental_update(spark, v2_df, wh, cfg=cfg)
 
     # cascade-audit parity: the delta path's index-lookup cascade must
-    # equal the legacy reference count over the canonical mentions
+    # equal cascade_delete_entities' reference count over the mentions
     # table (dropped = deleted ∪ modified), at canonical granularity —
     # an alias seen only in a dropped conv must not flag a canonical
     # whose sibling alias survives elsewhere
@@ -665,10 +673,9 @@ def test_delta_incremental_lsh_linking_delta_path(
 def test_side_table_fallback_write_rebuckets(
     spark, transcripts_df, tmp_path_factory
 ):
-    """A side table that lost its bucket spec (legacy layout, torn
-    state) takes the full-overwrite fallback — which must re-bucket
-    on bucketed-config warehouses so the table re-enters the
-    delta-MERGE regime instead of overwriting forever."""
+    """A side table that lost its bucket spec (torn state) takes the
+    full-overwrite fallback — which must re-bucket so the table
+    re-enters the delta-MERGE regime instead of overwriting forever."""
     import os
 
     from graph_rag_agent_spark.plans.merge import table_bucket_spec
@@ -993,84 +1000,6 @@ def test_delta_incremental_shared_chunk_survives_conv_delete(
         assert twin_chunks and twin_chunks <= mention_chunks
 
 
-def test_pre_v2_warehouse_mentions_raw_repair(spark, tmp_path_factory):
-    """A warehouse written by pre-v2 code (corpus-wide mentions_raw
-    dedup, no format marker) is repaired on the next incremental
-    cycle: mentions_raw is rebuilt conv-complete from the undeduped
-    entities_raw, the format marker is stamped, and deleting the conv
-    the old dedup had pinned a shared pair to no longer loses it."""
-    import os
-
-    from pyspark.sql import Window
-
-    from graph_rag_agent_spark.plans.build import (
-        FORMAT_FILE,
-        FORMAT_VERSION,
-        _Warehouse,
-    )
-    from graph_rag_agent_spark.plans.merge import (
-        table_bucket_spec,
-        write_bucketed,
-    )
-
-    base = generate_transcripts(6)
-    clone = [
-        {**r, "conv_id": "conv-clone"}
-        for r in base
-        if r["conv_id"] == "conv-000002"
-    ]
-    v1 = base + clone
-    wh_path = str(tmp_path_factory.mktemp("wh_prev2"))
-    cfg = BuildConfig(
-        warehouse=wh_path,
-        similarity_method="exact",
-        extraction_buckets=2,
-        bucket_convs=8,
-    )
-    build_all(spark, spark.createDataFrame(v1, schema=schemas.TRANSCRIPTS), cfg)
-
-    # simulate the pre-v2 layout: pin each (chunk, entity) pair to its
-    # minimum conv (what dropDuplicates could have kept) and drop the
-    # format marker
-    wh = _Warehouse(spark, wh_path)
-    mr_path = wh.path("mentions_raw")
-    spec = table_bucket_spec(mr_path)
-    w = Window.partitionBy("chunk_id", "entity_id").orderBy("conv_id")
-    old_style = (
-        wh.read("mentions_raw")
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .drop("rn")
-        .localCheckpoint()  # materialize before overwriting its source
-    )
-    write_bucketed(old_style, mr_path, spec["key"], spec["num_buckets"])
-    os.remove(os.path.join(wh_path, FORMAT_FILE))
-    assert wh.stored_format_version() < FORMAT_VERSION
-
-    # delete the conv the old dedup pinned shared pairs to (min conv)
-    v2_rows = [r for r in v1 if r["conv_id"] != "conv-000002"]
-    v2_df = spark.createDataFrame(v2_rows, schema=schemas.TRANSCRIPTS)
-    tables = incremental_update(spark, v2_df, wh_path, cfg=cfg)
-    assert wh.stored_format_version() >= FORMAT_VERSION
-
-    wh2 = str(tmp_path_factory.mktemp("wh_prev2_ref"))
-    rebuilt = build_all(
-        spark,
-        v2_df,
-        BuildConfig(
-            warehouse=wh2,
-            similarity_method="exact",
-            extraction_buckets=2,
-            bucket_convs=8,
-        ),
-    )
-    for name in ["mentions", "mentions_raw", "triples"]:
-        cols = sorted(tables[name].columns)
-        a = {tuple(r) for r in tables[name].select(*cols).collect()}
-        b = {tuple(r) for r in rebuilt.tables[name].select(*cols).collect()}
-        assert a == b, f"{name} diverged after pre-v2 repair"
-
-
 def test_delta_extraction_cache_hits_across_conversations(
     spark, transcripts_df, tmp_path_factory
 ):
@@ -1129,117 +1058,6 @@ def test_delta_extraction_cache_hits_across_conversations(
     assert clone_ids and clone_ids == orig_ids
     reg = {r["conv_id"] for r in tables["registry"].collect()}
     assert "conv-clone" in reg
-
-
-def test_legacy_turn_log_migrates_to_partitioned_layout(
-    spark, tmp_path_factory
-):
-    """A turn log written by the pre-partitioning sink (root-level
-    part files, ingest_batch as a data column) must be migrated into
-    ingest_batch=N partitions before the first partitioned write —
-    mixing layouts breaks Spark partition discovery."""
-    from graph_rag_agent_spark.streaming.pipeline import (
-        stream_incremental_build,
-    )
-
-    src = str(tmp_path_factory.mktemp("mig_src"))
-    wh = str(tmp_path_factory.mktemp("mig_wh"))
-    ckpt = str(tmp_path_factory.mktemp("mig_ckpt"))
-    cfg = BuildConfig(
-        warehouse=wh, similarity_method="exact", extraction_buckets=2
-    )
-
-    rows = generate_transcripts(6)
-    legacy_rows = [r for r in rows if r["conv_id"] < "conv-000003"]
-    # legacy layout: unpartitioned append with ingest_batch column
-    (
-        spark.createDataFrame(legacy_rows, schema=schemas.TRANSCRIPTS)
-        .withColumn("ingest_batch", F.lit(0))
-        .coalesce(1)
-        .write.mode("append")
-        .parquet(f"{wh}/turn_log")
-    )
-
-    batch = [r for r in rows if r["conv_id"] >= "conv-000003"]
-    spark.createDataFrame(batch, schema=schemas.TRANSCRIPTS).coalesce(
-        1
-    ).write.mode("append").parquet(src)
-    q = stream_incremental_build(spark, src, wh, ckpt, cfg=cfg)
-    q.awaitTermination(300)
-
-    # the log reads back as one partitioned table holding BOTH eras
-    log = spark.read.parquet(f"{wh}/turn_log")
-    assert "ingest_batch" in log.columns
-    convs = {r["conv_id"] for r in log.select("conv_id").distinct().collect()}
-    assert convs == {r["conv_id"] for r in rows}
-    import os
-
-    root_files = [
-        f
-        for f in os.listdir(f"{wh}/turn_log")
-        if f.endswith(".parquet") and not f.startswith("_")
-    ]
-    assert root_files == []
-
-
-def test_legacy_turn_log_migration_empty_and_crash_retry(
-    spark, tmp_path_factory
-):
-    """Two legacy-migration edge cases: (a) a 0-row legacy root part
-    file (an empty micro-batch once appended by the pre-partitioning
-    sink) must not crash the migration — max(ingest_batch) is NULL
-    there; (b) a crash between the partitioned write and the root-file
-    removal must be retryable without duplicating rows (the shift is
-    deterministic and the write is a dynamic partition OVERWRITE)."""
-    import os
-
-    from graph_rag_agent_spark.streaming.pipeline import (
-        _migrate_legacy_turn_log,
-    )
-
-    # (a) 0-row legacy file: no TypeError, file dropped
-    log0 = str(tmp_path_factory.mktemp("mig_empty")) + "/turn_log"
-    (
-        spark.createDataFrame([], schema=schemas.TRANSCRIPTS)
-        .withColumn("ingest_batch", F.lit(0))
-        .coalesce(1)
-        .write.mode("append")
-        .parquet(log0)
-    )
-    _migrate_legacy_turn_log(spark, log0)
-    assert [
-        f
-        for f in os.listdir(log0)
-        if f.endswith(".parquet") and not f.startswith("_")
-    ] == []
-
-    # (b) crash-before-remove retry: same rows, no duplicates
-    log = str(tmp_path_factory.mktemp("mig_retry")) + "/turn_log"
-    rows = generate_transcripts(3)
-    (
-        spark.createDataFrame(rows, schema=schemas.TRANSCRIPTS)
-        .withColumn("ingest_batch", F.lit(0))
-        .coalesce(1)
-        .write.mode("append")
-        .parquet(log)
-    )
-    legacy = [
-        f
-        for f in os.listdir(log)
-        if f.endswith(".parquet") and not f.startswith("_")
-    ]
-    saved = {}
-    for f in legacy:
-        with open(os.path.join(log, f), "rb") as fh:
-            saved[f] = fh.read()
-    _migrate_legacy_turn_log(spark, log)
-    assert spark.read.parquet(log).count() == len(rows)
-    # restore the root files, as if os.remove never ran, and retry
-    for f, payload in saved.items():
-        with open(os.path.join(log, f), "wb") as fh:
-            fh.write(payload)
-    _migrate_legacy_turn_log(spark, log)
-    assert spark.read.parquet(log).count() == len(rows)
 
 
 def test_failed_delta_cycle_retry_self_heals(
@@ -1325,8 +1143,8 @@ def test_torn_linking_write_declines_reuse_on_retry(
     ]
     v2_df = spark.createDataFrame(v2_rows, schema=schemas.TRANSCRIPTS)
 
-    # the delta path lands canonical_map through the bucketed MERGE
-    # (upsert_groups), the legacy path through wh.write — inject the
+    # canonical_map lands through the bucketed MERGE (upsert_groups),
+    # or through wh.write on the missing-spec fallback — inject the
     # crash into both so the torn window opens regardless of route
     import graph_rag_agent_spark.plans.merge as merge_mod
 
@@ -1380,92 +1198,6 @@ def test_torn_linking_write_declines_reuse_on_retry(
         (r["subj"], r["pred"], r["obj"]) for r in tables["triples"].collect()
     }
     assert got == oracle_build(v2_rows).triple_set()
-
-
-def test_legacy_migration_partial_remove_crash_is_lossless(
-    spark, tmp_path_factory
-):
-    """Crash mid-way through the legacy root-file removal loop: some of
-    the migrated files are gone, others remain. The retry must not lose
-    or duplicate any turn. The old shift — derived from
-    max(ingest_batch) over the REMAINING files — re-parked surviving
-    batches onto partitions already holding newer batches' rows,
-    silently replacing them; the park target is now a per-row constant
-    shift and the rewrite unions the already-parked rows back in."""
-    import os
-
-    from graph_rag_agent_spark.streaming.pipeline import (
-        _LEGACY_PARK_SHIFT,
-        _migrate_legacy_turn_log,
-        latest_conversation_snapshot,
-    )
-
-    log = str(tmp_path_factory.mktemp("mig_partial")) + "/turn_log"
-    rows = generate_transcripts(3)
-    convs = sorted({r["conv_id"] for r in rows})
-    # batches 0-2 in one root file (old text for conv 0), batch 3 in
-    # another (NEW text for conv 0 — the version that must survive)
-    early = [
-        dict(r, text=f"old::{r['text']}") if r["conv_id"] == convs[0] else r
-        for r in rows
-    ]
-    batch_of = {c: i for i, c in enumerate(convs)}
-    # StructType.add MUTATES in place — never call it on the shared
-    # schemas.TRANSCRIPTS (it poisoned every later test's transcript
-    # schema with ingest_batch); build a fresh copy instead
-    from pyspark.sql import types as T
-
-    log_schema = T.StructType(list(schemas.TRANSCRIPTS.fields)).add(
-        "ingest_batch", "long"
-    )
-    df_early = spark.createDataFrame(
-        [dict(r, ingest_batch=batch_of[r["conv_id"]]) for r in early],
-        schema=log_schema,
-    )
-    df_early.coalesce(1).write.mode("append").parquet(log)
-    redelivered = [r for r in rows if r["conv_id"] == convs[0]]
-    (
-        spark.createDataFrame(redelivered, schema=schemas.TRANSCRIPTS)
-        .withColumn("ingest_batch", F.lit(3).cast("long"))
-        .coalesce(1)
-        .write.mode("append")
-        .parquet(log)
-    )
-
-    legacy = sorted(
-        f
-        for f in os.listdir(log)
-        if f.endswith(".parquet") and not f.startswith("_")
-    )
-    assert len(legacy) == 2
-    saved = {}
-    for f in legacy:
-        with open(os.path.join(log, f), "rb") as fh:
-            saved[f] = fh.read()
-
-    _migrate_legacy_turn_log(spark, log)
-
-    # simulate the crash window: restore ONLY the first root file, as
-    # if the removal loop died after deleting the second
-    first = legacy[0]
-    with open(os.path.join(log, first), "wb") as fh:
-        fh.write(saved[first])
-    _migrate_legacy_turn_log(spark, log)
-
-    merged = spark.read.parquet(log)
-    assert merged.count() == len(early) + len(redelivered)
-    # every batch parked at its constant-shift partition, none clobbered
-    batches = {
-        r[0] for r in merged.select("ingest_batch").distinct().collect()
-    }
-    assert batches == {b - _LEGACY_PARK_SHIFT for b in (0, 1, 2, 3)}
-    # latest-batch-wins snapshot: conv 0 reads back with batch-3 text
-    snap = latest_conversation_snapshot(merged)
-    texts = {
-        r["text"] for r in snap.where(F.col("conv_id") == convs[0]).collect()
-    }
-    assert texts == {r["text"] for r in redelivered}
-    assert not any(t.startswith("old::") for t in texts)
 
 
 def test_post_registry_crash_rewrites_recover_via_journal(
@@ -1784,3 +1516,81 @@ def test_localized_state_invalidated_below_crossover(
         a = {tuple(r) for r in tables[name].select(*cols).collect()}
         b = {tuple(r) for r in rebuilt.tables[name].select(*cols).collect()}
         assert a == b, name
+
+
+def test_old_format_and_unbucketed_warehouses_are_rejected(
+    spark, transcripts_df, tmp_path_factory
+):
+    """One layout: a warehouse stamped with an older format version,
+    or holding tables without any stamp, is refused by every entry
+    point that would read it — incremental_update, a resuming
+    build_all and maintain_warehouse — before anything is written;
+    build_all(resume=False) is the rebuild that makes it current. An
+    unbucketed config is rejected outright."""
+    import os
+
+    from graph_rag_agent_spark.plans.build import (
+        FORMAT_FILE,
+        FORMAT_VERSION,
+        _Warehouse,
+    )
+    from graph_rag_agent_spark.plans import fsio
+    from graph_rag_agent_spark.plans.maintenance import maintain_warehouse
+
+    assert FORMAT_VERSION == 3
+    with pytest.raises(ValueError, match="bucket_convs"):
+        BuildConfig(warehouse="unused", bucket_convs=0)
+
+    wh = str(tmp_path_factory.mktemp("wh_format"))
+    cfg = BuildConfig(
+        warehouse=wh, similarity_method="exact", extraction_buckets=2
+    )
+    build_all(spark, transcripts_df, cfg)
+    stamp = os.path.join(wh, FORMAT_FILE)
+    assert fsio.read_json(stamp) == {"version": 3}
+    lineage_files = sorted(os.listdir(os.path.join(wh, "lineage")))
+
+    def set_stamp(version):
+        if version is None:
+            fsio.remove(stamp)
+        else:
+            fsio.write_json(stamp, {"version": version})
+
+    for version, found in ((2, "format v2"), (None, "unstamped")):
+        set_stamp(version)
+        msg = f"is {found}, this engine reads v3 — rebuild with build_all"
+        with pytest.raises(ValueError, match=msg):
+            incremental_update(spark, transcripts_df, wh, cfg=cfg)
+        with pytest.raises(ValueError, match=msg):
+            build_all(spark, transcripts_df, cfg)
+        with pytest.raises(ValueError, match=msg):
+            maintain_warehouse(spark, wh)
+        # refused before any write: no lineage row was appended
+        assert sorted(os.listdir(os.path.join(wh, "lineage"))) == lineage_files
+
+    build_all(
+        spark,
+        transcripts_df,
+        BuildConfig(
+            warehouse=wh,
+            resume=False,
+            similarity_method="exact",
+            extraction_buckets=2,
+        ),
+    )
+    _Warehouse(spark, wh).check_format()
+
+
+def test_root_file_turn_log_is_rejected(spark, transcripts_df, tmp_path):
+    """A turn log written by an unpartitioned sink (root-level part
+    files) is refused before the stream starts."""
+    from graph_rag_agent_spark.streaming.pipeline import (
+        stream_incremental_build,
+    )
+
+    wh = str(tmp_path / "wh")
+    transcripts_df.limit(5).coalesce(1).write.parquet(f"{wh}/turn_log")
+    with pytest.raises(ValueError, match="root-level part files"):
+        stream_incremental_build(
+            spark, str(tmp_path / "src"), wh, str(tmp_path / "ckpt")
+        )

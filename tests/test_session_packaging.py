@@ -70,3 +70,14 @@ def test_zip_is_self_contained_import(tmp_path):
     )
     assert out.returncode == 0, out.stderr[-2000:]
     assert "OK" in out.stdout
+
+
+def test_default_driver_memory_is_half_of_host_ram_capped_at_32g():
+    """The driver heap default follows the host: half of MemTotal,
+    never above 32g, 32g when MemTotal can't be read."""
+    from graph_rag_agent_spark.session import _default_driver_memory
+
+    meminfo = "MemTotal:       16479424 kB\nMemFree:         1000 kB\n"
+    assert _default_driver_memory(meminfo) == "8046m"
+    assert _default_driver_memory("MemTotal: 268435456 kB\n") == "32768m"
+    assert _default_driver_memory("") == "32768m"
