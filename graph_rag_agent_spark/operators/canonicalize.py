@@ -263,46 +263,6 @@ def resolve_canonical(
     return resolve_canonical_grouped(entities_with_wcc)
 
 
-def resolve_canonical_delta(
-    local_components: DataFrame,
-    old_cmap: DataFrame,
-    affected_nodes: DataFrame,
-) -> DataFrame:
-    """Delta-localized canonical resolution: equals
-    ``resolve_canonical`` over the FULL new partition while running
-    the per-component resolver only on the recomputed components.
-
-    ``local_components`` is (node, component) for exactly the
-    components the CC delta recomputed (components.
-    connected_components_delta ``local``); ``affected_nodes`` is its
-    ``affected_nodes`` output — every old member of an affected
-    component (removed nodes included) plus every added node.
-
-    Soundness: the whole post-WCC chain decomposes by component
-    (resolve_canonical_grouped docstring) and each component's
-    resolution depends only on its sorted member-id set — so stored
-    rows of unaffected components are bit-identical to a fresh
-    recompute and are reused verbatim, and a map row can never
-    REFERENCE an affected entity from an unaffected component (a
-    (entity, canonical) pair shares a candidate group ⇒ shares a
-    component). The anti-join's right side is delta-proportional and
-    checkpointed by the caller, so AQE takes the broadcast form — the
-    catalog-scale stored map streams through unshuffled."""
-    kept = old_cmap.join(
-        affected_nodes.select(
-            F.col(affected_nodes.columns[0]).alias("entity_id")
-        ),
-        "entity_id",
-        "left_anti",
-    ).select("entity_id", "canonical_id")
-    fresh = resolve_canonical(
-        local_components.select(
-            F.col("node").alias("entity_id"), F.col("component").alias("wcc")
-        )
-    )
-    return kept.unionByName(fresh.select("entity_id", "canonical_id"))
-
-
 # Broadcast budget for the canonical map. The map is one row per
 # MERGED entity — tiny for any realistic catalog — but at a 100×
 # catalog (10⁸+ entities, long Chinese ids) an unconditional hint

@@ -32,35 +32,6 @@ from .components import EDGE_DRIVER_THRESHOLD, dense_number_labels
 # components.EDGE_DRIVER_THRESHOLD exactly like connected_components.
 DRIVER_THRESHOLD = 100_000
 
-# Crossover for the incremental LOCALIZED detection (plans/
-# incremental._localized_communities): below this entity count the
-# full detector's driver fast path (collect + pure-Python LPA) beats
-# the localized path's ~15 fixed-latency assembly jobs, so warehouses
-# skip both the localization AND the maintenance of its stored state
-# (community_labels / proj_wcc — ~2 s/cycle of writes + one
-# projection-CC run that would buy nothing). One patchable symbol
-# read at call time by every write/use site, so tests force the path
-# on sandbox-sized fixtures with a single monkeypatch.
-LOCALIZE_MIN_ENTITIES = DRIVER_THRESHOLD
-
-
-def localization_crossover(n_entities: int, n_edges_upper: int) -> bool:
-    """True when a full detection at this size takes the DISTRIBUTED
-    leveled loop — i.e. when the localized path and its stored aux
-    state pay off. Mirrors detect_communities' driver gate exactly:
-    the driver fast path needs BOTH node count ≤ the driver threshold
-    AND edge count ≤ EDGE_DRIVER_THRESHOLD, so a dense small-node
-    graph (the cliquey case the edge guard exists for) correctly
-    crosses over too. ``n_edges_upper`` may be any cheap UPPER bound
-    on the projection edge count (triple row count qualifies:
-    projection pairs ≤ triple rows) — an over-estimate can only
-    enable the localization early, never skip it where the full path
-    is distributed."""
-    return (
-        n_entities > LOCALIZE_MIN_ENTITIES
-        or n_edges_upper > EDGE_DRIVER_THRESHOLD
-    )
-
 
 def projection_edges(triples: DataFrame) -> DataFrame:
     """Canonical triples → undirected weighted edges: weight = COUNT of
@@ -140,18 +111,13 @@ def lpa_level(nodes: DataFrame, edges: DataFrame, max_sweeps: int = MAX_SWEEPS) 
     return labels.select("node", "label")
 
 
-LABELS_SCHEMA = "entity_id string, level int, label string"
-
-
 def _distributed_level_labels(
     nodes: DataFrame, edges: DataFrame, max_levels: int
 ) -> list[DataFrame]:
     """The leveled LPA/contraction loop, emitting the per-level RAW
-    label assignment (entity_id, label) instead of interleaving the
-    dense numbering — labels are the delta-maintainable state (they
-    are per-projection-component deterministic; numbers are one
-    global rank away, applied by assemble_communities_from_labels).
-    Returns one checkpointed frame per EXECUTED level."""
+    label assignment (entity_id, label); the dense numbering is
+    applied afterwards by assemble_communities_from_labels. Returns
+    one checkpointed frame per EXECUTED level."""
     # node → supernode of current level (starts as itself)
     assignment = nodes.withColumn("super", F.col("node"))
     parts: list[DataFrame] = []
@@ -205,78 +171,6 @@ def _distributed_level_labels(
     return parts
 
 
-def detect_level_labels(
-    nodes: DataFrame,
-    edges: DataFrame,
-    max_levels: int = MAX_LEVELS,
-    driver_threshold: int = DRIVER_THRESHOLD,
-    edge_driver_threshold: int = EDGE_DRIVER_THRESHOLD,
-) -> DataFrame:
-    """(nodes(node), weighted edges(a, b, w)) → per-level raw LPA
-    labels (entity_id, level, label) for the EXECUTED levels — the
-    subgraph entry point the incremental localized detection uses
-    (labels restricted to a union of whole projection components equal
-    the full run's labels for those components: LPA votes travel only
-    along edges). Same driver/distributed routing as
-    detect_communities."""
-    spark = nodes.sparkSession
-    nodes = nodes.select(F.col(nodes.columns[0]).alias("node")).distinct()
-    edges = edges.select("a", "b", "w").localCheckpoint()
-    if (
-        driver_threshold > 0
-        and nodes.count() <= driver_threshold
-        and edges.count() <= edge_driver_threshold
-    ):
-        from ..core.lpa import detect_label_hierarchy
-
-        node_list = [r["node"] for r in nodes.collect()]
-        edge_list = [(r["a"], r["b"], r["w"]) for r in edges.collect()]
-        lbl_levels = detect_label_hierarchy(
-            node_list, edge_list, max_levels=max_levels
-        )
-        rows = [
-            (n, level, lvl[n])
-            for level, lvl in enumerate(lbl_levels)
-            for n in node_list
-        ]
-        return spark.createDataFrame(rows or [], LABELS_SCHEMA)
-    parts = _distributed_level_labels(nodes, edges, max_levels)
-    labels = parts[0]
-    for part in parts[1:]:
-        labels = labels.unionByName(part)
-    return labels
-
-
-def extend_labels_to(labels: DataFrame, max_levels: int) -> DataFrame:
-    """Pad (entity_id, level, label) rows so every entity has a row at
-    every level 0..max_levels-1, carrying its deepest label forward.
-
-    Sound because the leveled loop is monotone per component: once a
-    component stops merging, its labels are constant at every deeper
-    level — so a stored/locally-computed prefix extends uniquely. The
-    incremental assembly pads reused and recomputed label sets to a
-    common depth, then truncates to the executed-level count a full
-    run would have chosen (merges-per-level rule)."""
-    last = labels.groupBy("entity_id").agg(F.max("level").alias("__ml"))
-    deepest = (
-        labels.join(last, "entity_id")
-        .where(F.col("level") == F.col("__ml"))
-        .select("entity_id", "label", "__ml")
-        .localCheckpoint()
-    )
-    parts = [labels]
-    for lvl in range(1, max_levels):
-        parts.append(
-            deepest.where(F.col("__ml") < lvl).select(
-                "entity_id", F.lit(lvl).alias("level"), "label"
-            )
-        )
-    out = parts[0]
-    for part in parts[1:]:
-        out = out.unionByName(part)
-    return out
-
-
 def assemble_communities_from_labels(
     labels: DataFrame,
 ) -> tuple[DataFrame, DataFrame]:
@@ -284,14 +178,11 @@ def assemble_communities_from_labels(
     (membership(entity_id, community_id, level),
      hierarchy(child_community, parent_community)).
 
-    The ONE numbering/assembly implementation shared by the full
-    detector and the incremental localized path: per level,
+    The distributed detector's numbering/assembly: per level,
     dense-number the distinct labels (range-partitioned two-phase —
     no global-sort Window) and stamp "{level}-{number}" ids; the
     hierarchy is the distinct (child, parent) co-membership of
-    adjacent levels. Deterministic in the label rows, so reused +
-    recomputed label sets assemble to exactly what a full recompute
-    would produce."""
+    adjacent levels."""
     spark = labels.sparkSession
     level_vals = sorted(
         r["level"] for r in labels.select("level").distinct().collect()
@@ -349,16 +240,12 @@ def detect_communities(
     max_levels: int = MAX_LEVELS,
     driver_threshold: int = DRIVER_THRESHOLD,
     edge_driver_threshold: int = EDGE_DRIVER_THRESHOLD,
-    return_labels: bool = False,
-) -> tuple[DataFrame, ...]:
+) -> tuple[DataFrame, DataFrame]:
     """→ (membership(entity_id, community_id, level),
-         hierarchy(child_community, parent_community))
-       [+ labels(entity_id, level, label) when return_labels].
+         hierarchy(child_community, parent_community)).
 
     Isolated entities keep their own label → singleton communities,
-    matching a GDS projection over all __Entity__ nodes. The raw
-    per-level labels are the incremental-maintenance state
-    (plans/incremental.py stores them as ``community_labels``)."""
+    matching a GDS projection over all __Entity__ nodes."""
     spark = entities.sparkSession
     nodes = entities.select(F.col("entity_id").alias("node")).distinct()
     # checkpoint before the threshold counts: both the driver collect
@@ -377,7 +264,7 @@ def detect_communities(
         lbl_levels = detect_label_hierarchy(
             node_list, edge_list, max_levels=max_levels
         )
-        m_rows, h_rows, l_rows = [], set(), []
+        m_rows, h_rows = [], set()
         numbers = [
             {lbl: i for i, lbl in enumerate(sorted(set(lvl.values())))}
             for lvl in lbl_levels
@@ -386,7 +273,6 @@ def detect_communities(
             arr = [num[lvl[n]] for lvl, num in zip(lbl_levels, numbers)]
             for level, num in enumerate(arr):
                 m_rows.append((n, f"{level}-{num}", level))
-                l_rows.append((n, level, lbl_levels[level][n]))
             for level in range(1, len(arr)):
                 h_rows.add((f"{level - 1}-{arr[level - 1]}", f"{level}-{arr[level]}"))
         membership = spark.createDataFrame(
@@ -396,31 +282,21 @@ def detect_communities(
             sorted(h_rows) or [],
             "child_community string, parent_community string",
         )
-        if return_labels:
-            return membership, hierarchy, spark.createDataFrame(
-                l_rows, LABELS_SCHEMA
-            )
         return membership, hierarchy
 
     parts = _distributed_level_labels(nodes, edges, max_levels)
     labels = parts[0]
     for part in parts[1:]:
         labels = labels.unionByName(part)
-    membership, hierarchy = assemble_communities_from_labels(labels)
-    if return_labels:
-        return membership, hierarchy, labels
-    return membership, hierarchy
+    return assemble_communities_from_labels(labels)
 
 
+# No package caller; kept only because perfbench/tracing.py WRAPPED names it (drop both together).
 def projection_components(
     entities: DataFrame, triples: DataFrame
 ) -> DataFrame:
     """(entity_id, pwcc): connected components of the undirected triple
-    projection graph — the stored state the incremental localized
-    detection's delta solver (components.connected_components_delta)
-    keys its affected-component computation off. ONE implementation so
-    every write site (build_all, both incremental paths) stores exactly
-    the labeling the solver's soundness precondition assumes."""
+    projection graph."""
     from .components import connected_components
 
     return connected_components(
@@ -440,26 +316,22 @@ def localized_community_catalog(
     entities: DataFrame,
     triples: DataFrame,
     mentions: DataFrame,
-    extra_changed_ids: DataFrame | None = None,
-) -> tuple[DataFrame, DataFrame]:
+) -> DataFrame:
     """Recompute catalog/summary rows ONLY for communities holding a
-    dirty entity (plus any explicitly named ids, e.g. renumbered
-    ones); stored rows stand in verbatim for the rest. Returns
-    (communities, changed_ids). Sound because community_catalog is
-    deterministic per community in (members, member entity rows,
-    intra-community triples, member mentions) — the caller's
+    dirty entity; stored rows stand in verbatim for the rest. Sound
+    because community_catalog is deterministic per community in
+    (members, member entity rows, intra-community triples, member
+    mentions) — the caller's
     dirty_entities must cover every entity whose contribution to any
     of those changed; `summary_created_at` on kept rows keeps the
     writing cycle's stamp (the one permitted divergence from a full
-    recompute). The frames returned are lazy; callers checkpoint."""
+    recompute). The frame returned is lazy; callers checkpoint."""
     changed_ids = (
         membership.join(dirty_entities, "entity_id", "left_semi")
         .select("community_id")
         .distinct()
+        .localCheckpoint()
     )
-    if extra_changed_ids is not None:
-        changed_ids = changed_ids.union(extra_changed_ids).distinct()
-    changed_ids = changed_ids.localCheckpoint()
     fresh = community_catalog(
         membership.join(changed_ids, "community_id", "left_semi"),
         entities,
@@ -474,7 +346,7 @@ def localized_community_catalog(
     kept = stored_communities.join(
         keep_ids, "community_id", "left_semi"
     ).select(*fresh.columns)
-    return kept.unionByName(fresh), changed_ids
+    return kept.unionByName(fresh)
 
 
 def detect_communities_factory(

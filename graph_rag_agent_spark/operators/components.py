@@ -127,13 +127,7 @@ def connected_components(
     # cheaper in-memory localCheckpoint suffices for it.
     labels = materialize(all_nodes.withColumn("label", F.col("node")), "cc-labels")
 
-    import os as _os
-    import time as _time
-
-    _debug = bool(_os.environ.get("GRARS_DEBUG"))
     for _round in range(max_iterations):
-        if _debug:
-            print(f"[cc] round {_round} start {_time.time():.1f}", flush=True)
         nbr_min = (
             e.join(labels.withColumnRenamed("node", "b2"), F.col("b") == F.col("b2"))
             .groupBy("a")
@@ -235,6 +229,7 @@ def connected_components(
     return labels.withColumnRenamed("label", "component")
 
 
+# No package caller; kept only because perfbench/tracing.py WRAPPED names it (drop both together).
 def connected_components_delta(
     edges: DataFrame,
     nodes: DataFrame,

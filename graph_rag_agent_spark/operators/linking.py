@@ -314,18 +314,10 @@ def similar_entities_lsh_delta(
     rows: int = LSH_ROWS,
     dim: int = DIM,
     broadcast_max_bytes: int = BROADCAST_SCORE_MAX_BYTES,
-    with_affected: bool = False,
-) -> DataFrame | tuple[DataFrame, DataFrame]:
+) -> DataFrame:
     """Incremental KNN maintenance: returns EXACTLY
     ``similar_entities_lsh(embedded)`` while recomputing only the
     rows that can differ from ``old_similar``.
-
-    ``with_affected=True`` returns ``(similar, affected)`` instead,
-    where ``affected`` is a one-column (entity_id) SUPERSET of the
-    sources whose edge rows may differ from ``old_similar`` (affected
-    sources ∪ removed entities) — the changed-source hint the
-    downstream CC delta (components.connected_components_delta) needs
-    to localize its own edge diff.
 
     Soundness: a source's top-k depends only on (its own vector, the
     vectors of its band-mates). Both are unchanged unless the source
@@ -366,8 +358,7 @@ def similar_entities_lsh_delta(
         changed_ids.limit(1).count() == 0
         and removed_ids.limit(1).count() == 0
     ):
-        # changed_ids is empty here — doubles as the empty affected set
-        return (old_similar, changed_ids) if with_affected else old_similar
+        return old_similar
 
     sig = _signature_udf(dim, bands, rows)
     signed = (
@@ -425,13 +416,7 @@ def similar_entities_lsh_delta(
         )
         .select("src", "dst", "score")
     )
-    out = kept.unionByName(fresh)
-    if with_affected:
-        affected = (
-            affected_srcs.unionByName(removed_ids).distinct()
-        )
-        return out, affected
-    return out
+    return kept.unionByName(fresh)
 
 
 # Driver-path ceiling. Above this the catalog goes through the

@@ -642,26 +642,13 @@ def build_all(
     else:
         t0 = time.time()
         wh.invalidate_community_params()
-        membership, hierarchy, comm_labels = detect_communities(
-            entities, triples, max_levels=cfg.max_levels, return_labels=True
+        membership, hierarchy = detect_communities(
+            entities, triples, max_levels=cfg.max_levels
         )
-        writes = [
+        membership, hierarchy = _run_parallel([
             lambda: wh.write(membership, "membership"),
             lambda: wh.write(hierarchy, "hierarchy"),
-        ]
-        # incremental-maintenance state (plans/incremental.py localized
-        # detection): raw per-level LPA labels + projection components,
-        # committed inside the same sidecar bracket as the community
-        # tables; written above the localization crossover, any STALE
-        # copy deleted below it (maintain_localized_state — one owner
-        # for the gate, the writes and the cleanup)
-        from .incremental import maintain_localized_state
-
-        aux = maintain_localized_state(wh, entities, triples, comm_labels)
-        writes += [
-            (lambda n=n, d=d: wh.write(d, n)) for n, d in aux.items()
-        ]
-        membership, hierarchy = _run_parallel(writes)[:2]
+        ])
         wh.append_lineage("membership", -1, membership.count(), t0, defer=True)
         fresh_detection = True
     res.tables.update(membership=membership, hierarchy=hierarchy)

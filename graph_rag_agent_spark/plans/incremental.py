@@ -25,8 +25,9 @@ incremental_graph_builder.py:880-958 + incremental/file_change_manager
      triples / mentions / entities are re-pointed only where the
      canonical map or a contributing conversation changed, found via
      the entity→conv and chunk→conv inverted indexes; linking and
-     community stages reuse or delta-localize their stored state and
-     fall back to a global recompute only when their inputs moved.
+     community stages reuse their stored state when their inputs did
+     not move and otherwise run one full recompute each — the same
+     operators build_all runs.
      Warehouses in any older format are rejected and rebuilt with
      ``build_all(resume=False)``.
 """
@@ -50,28 +51,6 @@ from .build import (
     entity_conv_pairs,
     link_fingerprint,
 )
-
-# Fixed-latency guard for the round-5 CC+resolve delta. Below this
-# catalog size the FULL recompute takes the solver's driver fast path
-# (collect + pure-Python union-find — a handful of jobs), which is
-# CHEAPER than the delta machinery's extra diff/assembly jobs
-# (~8-10 fixed-latency barriers). Above it the full path is the
-# iterative distributed loop the delta exists to avoid, so the
-# solver's own driver threshold is exactly the crossover. Tests lower
-# it to force the path on sandbox-sized fixtures. (The community
-# localization's analogous guard is community.LOCALIZE_MIN_ENTITIES,
-# shared with the aux-table write sites.)
-from ..operators.components import DRIVER_THRESHOLD as _CC_DRIVER_THRESHOLD
-from ..operators.components import (
-    EDGE_DRIVER_THRESHOLD as _CC_EDGE_DRIVER_THRESHOLD,
-)
-
-CC_DELTA_MIN_ENTITIES = _CC_DRIVER_THRESHOLD
-# the full solver's driver path also needs the EDGE list small — a
-# dense small-node similarity graph forces the distributed loop, so
-# the delta must engage there too (mirrors connected_components'
-# two-condition gate)
-CC_DELTA_MIN_EDGES = _CC_EDGE_DRIVER_THRESHOLD
 
 
 def detect_changes(
@@ -156,14 +135,20 @@ def incremental_update(
         ``vacuum_chunk_embeddings`` / ``maintain_warehouse``).
 
     Remaining corpus-proportional work, by design (matching the
-    reference's global index/community stage): ONE columnar scan of
-    the raw entity table to rebuild the entity catalog aggregate, the
-    community detection over the (entity-scale) graph, and the
-    community-rank countDistinct over mentions. When the rebuilt
-    catalog is bit-identical to the stored one, even the linking
-    recompute is skipped (_stored_linking_if_catalog_unchanged — the
-    chain is deterministic in the catalog, so the stored tables ARE
-    its output); and when the SOURCE is bit-identical (zero detected
+    reference, which re-runs entity linking and community detection
+    globally every cycle, incremental_graph_builder.py:880-958): ONE
+    columnar scan of the raw entity table to rebuild the entity
+    catalog aggregate, one full recompute per global stage — connected
+    components + canonical resolve over the similarity graph, and
+    community detection over the (entity-scale) graph, the same
+    operators build_all runs — and the community-rank countDistinct
+    over mentions. When the rebuilt catalog is bit-identical to the
+    stored one, even the linking recompute is skipped
+    (_stored_linking_if_catalog_unchanged — the chain is deterministic
+    in the catalog, so the stored tables ARE its output); when the
+    entity id set and triple key set are unchanged, detection is
+    skipped and only the communities holding a dirty entity
+    re-summarize; and when the SOURCE is bit-identical (zero detected
     changes, no surviving journal, config sidecars matching), the
     whole cycle is the reference's early return
     (incremental_graph_builder.py:903-905): change detection +
@@ -201,17 +186,19 @@ def incremental_update(
         TRIPLE_KEY_COL,
         canonical_entities,
         resolve_canonical,
-        resolve_canonical_delta,
         rewrite_mentions,
         rewrite_triples,
         with_triple_key,
     )
     from ..operators.chunk_index import with_chunk_embeddings
     from ..operators.chunking import chunk_conversations
-    from ..operators.community import community_catalog, detect_communities
+    from ..operators.community import (
+        community_catalog,
+        detect_communities,
+        localized_community_catalog,
+    )
     from ..operators.components import (
         connected_components,
-        connected_components_delta,
         consecutive_component_ids,
     )
     from ..operators.extraction import extract_chunks
@@ -231,17 +218,6 @@ def incremental_update(
 
     ck = lambda df: df.localCheckpoint()  # noqa: E731
 
-    import os as _os
-
-    _t_sect = [_time.time()]
-    _dbg = bool(_os.environ.get("GRARS_DEBUG"))
-
-    def _mark(section: str) -> None:
-        if _dbg:
-            now = _time.time()
-            print(f"[incr] {section}: {now - _t_sect[0]:.2f}s", flush=True)
-            _t_sect[0] = now
-
     # ---- 1. change detection -----------------------------------------
     old_registry = wh.read("registry")
     new_registry = ck(conversation_registry(new_transcripts))
@@ -251,8 +227,6 @@ def incremental_update(
     changed = ck(changes["added"].union(changes["modified"]).distinct())
     dropped = ck(changes["deleted"].union(changes["modified"]).distinct())
     stale = ck(dropped.union(changed).distinct())
-
-    _mark("1 change detection")
 
     # ---- 1.5. unchanged-source shortcut ------------------------------
     # The reference's incremental cycle returns right after change
@@ -267,10 +241,15 @@ def incremental_update(
     # else (no empty-frame chunk/extract/merge jobs, no catalog scan,
     # no EXCEPT probes). Any guard failing falls through to the normal
     # path, which handles partial reuse stage by stage.
+    # The stale probe (one limit(1) job) and the journal probes run once
+    # here and are reused by step 3.5.
     _heal_journal(wh)
+    journal_present = [n for n in _JOURNAL_TABLES if wh.exists(n)]
+    journal_on_disk = bool(journal_present)
+    has_new_obligations = bool(stale.limit(1).count())
     if (
-        not stale.limit(1).count()
-        and not any(wh.exists(n) for n in _JOURNAL_TABLES)
+        not has_new_obligations
+        and not journal_on_disk
         and wh.stored_link_params() == wh.link_params
         and wh.stored_community_params() == community_fingerprint(cfg)
         and all(wh.exists(n) for n in WAREHOUSE_TABLES)
@@ -286,7 +265,6 @@ def incremental_update(
         out["changes_added"] = changes["added"]
         out["changes_modified"] = changes["modified"]
         out["changes_deleted"] = changes["deleted"]
-        _mark("1.5 unchanged-source shortcut")
         return out
 
     # ---- 2. old-state slices (pruned reads, BEFORE any merge) --------
@@ -361,8 +339,6 @@ def incremental_update(
         .distinct()
     )
 
-    _mark("2 old slices + cascade")
-
     # ---- 3. per-conversation deltas ----------------------------------
     changed_transcripts = ck(
         new_transcripts.join(changed, "conv_id", "left_semi")
@@ -411,8 +387,6 @@ def incremental_update(
     t_raw_new = triples_raw(parsed_new)
     m_raw_new = mentions_raw(parsed_new)
 
-    _mark("3 per-conv deltas")
-
     # ---- 3.5. rewrite-intent journal --------------------------------
     # The conv-keyed merges below DESTROY the old-state evidence the
     # canonical rewrites (steps 8-10) need: once a deleted conv's raw
@@ -429,8 +403,7 @@ def incremental_update(
     # the whole cycle commits. Unioning with a previous crashed cycle's
     # journal (instead of overwriting it) keeps obligations alive even
     # when the retry's own change detection is empty.
-    journal = _read_journal(spark, wh)
-    journal_on_disk = any(wh.exists(n) for n in _JOURNAL_TABLES)
+    journal = _read_journal(spark, wh, journal_present)
     k_old_stale = ck(_triple_keys(old_traw_stale, old_cmap))
     pending_convs = ck(
         journal["pending_rewrite_convs"].union(stale).distinct()
@@ -448,9 +421,7 @@ def incremental_update(
     # no-op) adds no obligations: skip the three write jobs on the
     # steady-state hot path. A surviving journal is left in place —
     # this cycle still fulfils it through pending_* and clears it on
-    # commit. One limit(1) probe on the checkpointed stale frame
-    # replaces three parquet writes.
-    has_new_obligations = bool(stale.limit(1).count())
+    # commit.
     if has_new_obligations:
         _write_journal(
             wh,
@@ -461,8 +432,6 @@ def incremental_update(
             },
         )
     journal_live = has_new_obligations or journal_on_disk
-
-    _mark("3.5 rewrite journal")
 
     # ---- 4+5. conv-keyed MERGEs + inverted-index maintenance, all
     # mutually independent (distinct paths, inputs checkpointed) → one
@@ -563,8 +532,6 @@ def incremental_update(
         "registry", new_registry.join(changed, "conv_id", "left_semi")
     )
 
-    _mark("4+5 conv merges + indexes")
-
     # ---- 6. global linking over the merged catalog, embeddings
     # recomputed ONLY where (entity_id, description) changed ----------
     e_raw_merged = wh.read("entities_raw")
@@ -582,10 +549,6 @@ def incremental_update(
     # difference falls through to the full chain.
     reuse = _stored_linking_if_catalog_unchanged(wh, catalog)
     linked = None if reuse is not None else link_entities_driver_path(catalog)
-    # True when the CC delta proved the stored wcc/canonical_map ARE
-    # this cycle's output (partition unchanged) — step 11 then skips
-    # their writes entirely
-    wcc_cmap_unchanged = False
     if reuse is not None:
         embedded, similar, wcc, cmap = _run_parallel(
             [lambda t=t: ck(t) for t in reuse]
@@ -652,17 +615,15 @@ def incremental_update(
             stored_is_lsh = (
                 wh.read("entity_embeddings").count() > lsh_floor
             )
-        lsh_affected = None
         if use_lsh and stored_is_lsh:
             t0 = _time.time()
-            sim_raw, aff_raw = similar_entities_lsh_delta(
-                embedded,
-                wh.read("entity_embeddings"),
-                wh.read("similar"),
-                with_affected=True,
+            similar = ck(
+                similar_entities_lsh_delta(
+                    embedded,
+                    wh.read("entity_embeddings"),
+                    wh.read("similar"),
+                )
             )
-            similar = ck(sim_raw)
-            lsh_affected = ck(aff_raw)
             # marker row (rows=1, like incr_link_reused): the table
             # count would read catalog-proportional and obscure that
             # only the affected sources re-scored
@@ -673,86 +634,15 @@ def incremental_update(
             similar = ck(
                 similar_entities(embedded, method=cfg.similarity_method)
             )
-        # VERDICT r4 #1: delta-localize connected components + the
-        # canonical resolve — the last catalog-proportional stages of
-        # the linking chain. Gate (provable equality, mirroring the
-        # LSH delta's): the link-params sidecar survives only when
-        # entity_embeddings/similar/wcc/canonical_map all committed
-        # together under this cfg (step 11's torn-window dance), so
-        # the stored wcc IS connected_components(stored similar) and
-        # the stored canonical_map IS its resolve — exactly the
-        # precondition connected_components_delta's proof needs. The
-        # LSH delta's affected-source set localizes the edge diff;
-        # without it (exact/auto routing) the diff is one narrow
-        # full-list pass, still far cheaper than the iterative loop.
-        cc_delta = None
-        if (
-            wh.stored_link_params() == wh.link_params
-            and all(
-                wh.exists(n) for n in ("similar", "wcc", "canonical_map")
-            )
-            # fixed-latency guard (module constants above): when the
-            # full CC+resolve would be a driver-side union-find (small
-            # node AND edge counts — both conditions of the solver's
-            # driver gate), it is cheaper than the delta's extra
-            # diff/assembly jobs; either count crossing over means the
-            # full path runs the distributed iterative loop the delta
-            # exists to avoid
-            and (
-                embedded.count() > CC_DELTA_MIN_ENTITIES
-                or similar.count() > CC_DELTA_MIN_EDGES
-            )
-        ):
-            t0 = _time.time()
-            cc_delta = connected_components_delta(
-                similar.select("src", "dst"),
-                embedded.select("entity_id"),
-                wh.read("similar").select("src", "dst"),
-                wh.read("wcc").select("entity_id", "wcc"),
-                changed_src_hint=lsh_affected,
-            )
-        if cc_delta is not None and cc_delta["unchanged"]:
-            # edge/node delta empty ⇒ partition identical ⇒ the dense
-            # numbering and the resolve are identical too — stored
-            # tables reused verbatim (and step 11 skips their writes)
-            wcc, cmap = _run_parallel([
-                lambda: ck(wh.read("wcc")),
-                lambda: ck(wh.read("canonical_map")),
-            ])
-            wcc_cmap_unchanged = True
-            wh.append_lineage("incr_cc_delta", -1, 0, t0, defer=True)
-        elif cc_delta is not None:
-            affected = ck(cc_delta["affected_nodes"])
-            # ck before numbering: consecutive_component_ids evaluates
-            # its input twice (distinct labels + the join back)
-            comp_full = ck(cc_delta["components"])
-            wcc = ck(
-                consecutive_component_ids(comp_full).select(
-                    F.col("node").alias("entity_id"), "wcc"
+        wcc = ck(
+            consecutive_component_ids(
+                connected_components(
+                    similar.select("src", "dst"),
+                    nodes=embedded.select("entity_id"),
                 )
-            )
-            cmap = ck(
-                resolve_canonical_delta(
-                    cc_delta["local"], old_cmap, affected
-                )
-            )
-            # rows = recomputed-scope size: the delta-proportionality
-            # evidence (a full recompute would read catalog-sized)
-            wh.append_lineage(
-                "incr_cc_delta", -1, affected.count(), t0, defer=True
-            )
-        else:
-            wcc = ck(
-                consecutive_component_ids(
-                    connected_components(
-                        similar.select("src", "dst"),
-                        nodes=embedded.select("entity_id"),
-                    )
-                ).select(F.col("node").alias("entity_id"), "wcc")
-            )
-            cmap = ck(resolve_canonical(wcc))
-
-    _mark("6 global linking")
+            ).select(F.col("node").alias("entity_id"), "wcc")
+        )
+        cmap = ck(resolve_canonical(wcc))
 
     # ---- 7. canonical-map delta → affected scope ---------------------
     oc = old_cmap.select("entity_id", F.col("canonical_id").alias("__old_c"))
@@ -778,8 +668,6 @@ def incremental_update(
         defer=True,
     )
 
-    _mark("7 cmap delta scope")
-
     # ---- 8-10, 12: four mutually independent delta-rewrite tasks
     # (mentions / triples / entities / chunk embeddings — distinct
     # target tables, read-only sharing of the merged raw tables and
@@ -792,19 +680,16 @@ def incremental_update(
     # actually changed (delta-sized set diffs computed against the
     # PRE-upsert store), so the communities section can keep the
     # stored membership/hierarchy and recompute only the
-    # mentions-dependent catalog. Defaults True = safe (recompute).
-    detection_input_changed = {"triples": True, "entities": True}
-    # delta-sized frames the LOCALIZED community recompute (below)
-    # seeds from; None ⇒ the owning task failed to materialize them
-    # and the localized branch declines (full recompute). All are
-    # canonical-entity scoped and checkpointed by their writers.
-    delta_scope: dict[str, DataFrame | None] = {
-        "changed_key_pairs": None,  # (subj, obj) of added/removed keys
-        "triples_scope_entities": None,  # canon endpoints of affected keys
-        "entity_churn": None,  # added ∪ removed canonical entity ids
-        "changed_entity_rows": None,  # ids whose entity row changed
-        "mention_entities": None,  # ids whose mention rows may differ
-    }
+    # mentions-dependent catalog. _run_parallel re-raises any task
+    # failure, so every entry is set once the pool returns.
+    detection_input_changed: dict[str, bool] = {}
+    # delta-sized canonical entity ids whose community catalog rows may
+    # differ — the detection-reuse branch re-summarizes only their
+    # communities. Checkpointed by their writers:
+    #   triples_scope_entities — canon endpoints of affected keys
+    #   changed_entity_rows    — ids whose entity row changed
+    #   mention_entities       — ids whose mention rows may differ
+    delta_scope: dict[str, DataFrame] = {}
 
     def _rewrite_mentions_task():
         m_raw_delta = read_pruned(spark, wh.path("mentions_raw"), delta_convs)
@@ -831,7 +716,7 @@ def incremental_update(
         # canonical entities whose mention rows may differ after the
         # upsert: anything in the pre-merge slice of the affected
         # chunks ∪ anything in the delta (superset is fine — the
-        # localized community catalog recomputes their communities'
+        # detection-reuse catalog recomputes their communities'
         # rank). Materialized BEFORE the upsert destroys the old
         # slice; bounded by the affected-chunk footprint.
         delta_scope["mention_entities"] = ck(
@@ -894,29 +779,20 @@ def incremental_update(
         # affected scope keys are untouched by construction, so scope
         # equality ⇔ global (s,p,o) set equality. Keys are unique per
         # row on both sides (winner rows), so the anti-joins ARE the
-        # multiset diff; the changed pairs seed the localized
-        # community recompute (projection weights = counts over keys,
-        # so an added/removed key dirties exactly its unordered pair).
+        # multiset diff.
         old_scope = ck(
             read_pruned(spark, wh.path("triples"), stale_tkeys).select(
-                TRIPLE_KEY_COL, "subj", "obj"
+                TRIPLE_KEY_COL
             )
         )
-        new_scope = triples_delta.select(TRIPLE_KEY_COL, "subj", "obj")
-        changed_key_pairs = ck(
-            old_scope.join(new_scope, TRIPLE_KEY_COL, "left_anti")
-            .select("subj", "obj")
-            .union(
-                new_scope.join(old_scope, TRIPLE_KEY_COL, "left_anti").select(
-                    "subj", "obj"
-                )
-            )
-            .distinct()
-        )
-        delta_scope["changed_key_pairs"] = changed_key_pairs
+        new_scope = triples_delta.select(TRIPLE_KEY_COL)
         delta_scope["triples_scope_entities"] = ck(aff_canon)
         detection_input_changed["triples"] = (
-            changed_key_pairs.limit(1).count() > 0
+            old_scope.join(new_scope, TRIPLE_KEY_COL, "left_anti")
+            .union(new_scope.join(old_scope, TRIPLE_KEY_COL, "left_anti"))
+            .limit(1)
+            .count()
+            > 0
         )
         upsert_groups(
             spark, wh.path("triples"), triples_delta, stale_tkeys, TRIPLE_KEY_COL
@@ -957,13 +833,11 @@ def incremental_update(
         added_ids = changed_rows.select("entity_id").join(
             old_entities.select("entity_id"), "entity_id", "left_anti"
         )
-        entity_churn = ck(added_ids.union(removed_ids).distinct())
-        delta_scope["entity_churn"] = entity_churn
         delta_scope["changed_entity_rows"] = ck(
             changed_rows.select("entity_id")
         )
         detection_input_changed["entities"] = (
-            entity_churn.limit(1).count() > 0
+            added_ids.union(removed_ids).limit(1).count() > 0
         )
         t0 = _time.time()
         upsert_groups(
@@ -1021,8 +895,6 @@ def incremental_update(
             _chunk_embeddings_task,
         ]
     )
-
-    _mark("8-10,12 delta rewrites")
 
     # ---- 11. entity-scale side tables: delta-MERGE (parallel);
     # nothing to write when the stored tables were reused verbatim.
@@ -1095,7 +967,7 @@ def incremental_update(
 
     if reuse is None:
         fsio.remove(os.path.join(wh.root, LINK_PARAMS_FILE))
-        side_jobs = [
+        _run_parallel([
             lambda: _merge_side_table(
                 embedded, "entity_embeddings", "entity_id",
                 "incr_embeddings_merge",
@@ -1103,48 +975,24 @@ def incremental_update(
             lambda: _merge_side_table(
                 similar, "similar", "src", "incr_similar_merge"
             ),
-        ]
-        if not wcc_cmap_unchanged:
-            side_jobs.append(lambda: wh.write(wcc, "wcc"))
-        _run_parallel(side_jobs)
-        if not wcc_cmap_unchanged:
-            # skipped when the CC delta reused the stored tables
-            # verbatim — the fingerprint diff would scan the catalog
-            # just to find zero changed keys
-            _merge_side_table(
-                cmap, "canonical_map", "entity_id", "incr_cmap_merge"
-            )
+            lambda: wh.write(wcc, "wcc"),
+        ])
+        _merge_side_table(
+            cmap, "canonical_map", "entity_id", "incr_cmap_merge"
+        )
         if wh.link_params is not None:
             fsio.write_json(
                 os.path.join(wh.root, LINK_PARAMS_FILE), wh.link_params
             )
 
-    _mark("11 side-table writes")
-
-    # no-change-cycle communities reuse: detection + catalog are a
-    # deterministic function of (entities, triples, mentions,
-    # max_levels). When this cycle's linking was reused verbatim
-    # (catalog bit-identical ⇒ cmap unchanged ⇒ delta scope empty) AND
-    # no conv changed (stale empty) AND no crashed cycle's journal
-    # could have left the winner tables mid-rewrite, the stored
-    # community tables ARE this cycle's output — the steady-state
-    # no-op cycle skips the whole corpus-proportional detection loop.
-    # The sidecar fingerprint declines reuse across a max_levels change
-    # and across a crash inside the three-table overwrite window.
-    communities_reusable = (
-        reuse is not None
-        and not journal_live
-        and wh.stored_community_params() == community_fingerprint(cfg)
-        and all(
-            wh.exists(t) for t in ("membership", "hierarchy", "communities")
-        )
-    )
-    # detection reuse (weaker than full reuse): conversations changed,
-    # but the rewrite tasks proved the entity ID set and the triple
-    # (s,p,o) key set both unchanged — membership/hierarchy are a pure
-    # function of exactly those inputs (+ max_levels), so only the
-    # mentions/description-dependent community CATALOG recomputes.
-    # The corpus-proportional detection loop — the largest remaining
+    # Community detection is reused when the rewrite tasks proved the
+    # entity ID set and the triple (s,p,o) key set both unchanged —
+    # membership/hierarchy are a pure function of exactly those inputs
+    # (+ max_levels), so only the mentions/description-dependent
+    # community CATALOG recomputes, and only for communities holding a
+    # dirty entity (stored rows stand in for the rest; their
+    # summary_created_at keeps the writing cycle's stamp). The
+    # corpus-proportional detection loop — the largest remaining
     # non-delta cost of a small-delta cycle — is skipped.
     # journal_on_disk guard: after a crash BETWEEN the triple upsert
     # and the communities write, the retry's key diff reads the
@@ -1152,10 +1000,10 @@ def incremental_update(
     # still reflects the pre-crash key set — a surviving journal is
     # exactly the marker of that window, so it declines detection
     # reuse (the community sidecar alone can't: the crashed cycle may
-    # never have reached its invalidation).
+    # never have reached its invalidation). Otherwise detection runs
+    # in full, as in build_all.
     detection_reusable = (
-        not communities_reusable
-        and not journal_on_disk
+        not journal_on_disk
         and not detection_input_changed["triples"]
         and not detection_input_changed["entities"]
         and wh.stored_community_params() == community_fingerprint(cfg)
@@ -1163,91 +1011,19 @@ def incremental_update(
             wh.exists(t) for t in ("membership", "hierarchy", "communities")
         )
     )
-    # component-scoped recompute (VERDICT r4 #3): when the binary
-    # reuses decline because detection inputs DID change, localize the
-    # leveled-LPA loop + the summary regeneration to the touched
-    # projection components (see _localized_communities). Gates mirror
-    # detection_reusable's (sidecar, crash-journal residue) plus the
-    # round-5 aux tables and the rewrite tasks' materialized scopes.
-    detection_localizable = (
-        not communities_reusable
-        and not detection_reusable
-        and not journal_on_disk
-        and wh.stored_community_params() == community_fingerprint(cfg)
-        and all(
-            wh.exists(t)
-            for t in (
-                "membership",
-                "hierarchy",
-                "communities",
-                "community_labels",
-                "proj_wcc",
-            )
-        )
-        and all(v is not None for v in delta_scope.values())
-    )
-    localized = (
-        _localized_communities(spark, wh, cfg, delta_scope)
-        if detection_localizable
-        else None
-    )
-    if communities_reusable:
-        # nothing to compute or write — the stored tables are read back
-        # (with everything else) in the out-dict below
-        wh.append_lineage(
-            "incr_communities_reused", -1, 1, _time.time(), defer=True
-        )
-    elif localized is not None:
-        wh.invalidate_community_params()
-        _run_parallel(
-            [
-                lambda: wh.write(localized["membership"], "membership"),
-                lambda: wh.write(localized["hierarchy"], "hierarchy"),
-                lambda: wh.write(localized["communities"], "communities"),
-                lambda: wh.write(
-                    localized["community_labels"], "community_labels"
-                ),
-                lambda: wh.write(localized["proj_wcc"], "proj_wcc"),
-            ]
-        )
-        wh.commit_community_params(community_fingerprint(cfg))
-        # rows = recomputed-community count: the delta-proportionality
-        # evidence for the summary stage (the LLM boundary)
-        wh.append_lineage(
-            "incr_communities_localized",
-            -1,
-            localized["n_changed"],
-            localized["t0"],
-            defer=True,
-        )
-    elif detection_reusable:
+    entities_tbl = wh.read("entities")
+    triples_tbl = wh.read("triples")
+    mentions_tbl = wh.read("mentions")
+    if detection_reusable:
         membership = ck(wh.read("membership"))
-        entities_tbl = wh.read("entities")
-        triples_tbl = wh.read("triples")
-        mentions_tbl = wh.read("mentions")
-        # round 5: with membership verbatim-reused (no renumbering),
-        # the catalog stage localizes too — only communities holding a
-        # changed entity row / rewritten mention / rewritten triple
-        # re-summarize; stored rows stand in for the rest (same
-        # summary_created_at caveat as _localized_communities)
-        scope_ready = all(
-            delta_scope[k] is not None
-            for k in (
-                "changed_entity_rows",
-                "mention_entities",
-                "triples_scope_entities",
-            )
-        ) and wh.exists("communities")
-        if scope_ready:
-            from ..operators.community import localized_community_catalog
-
-            dirty_entities = ck(
-                delta_scope["changed_entity_rows"]
-                .union(delta_scope["mention_entities"])
-                .union(delta_scope["triples_scope_entities"])
-                .distinct()
-            )
-            communities, _ = localized_community_catalog(
+        dirty_entities = ck(
+            delta_scope["changed_entity_rows"]
+            .union(delta_scope["mention_entities"])
+            .union(delta_scope["triples_scope_entities"])
+            .distinct()
+        )
+        communities = ck(
+            localized_community_catalog(
                 membership,
                 dirty_entities,
                 ck(wh.read("communities")),
@@ -1255,13 +1031,7 @@ def incremental_update(
                 triples_tbl,
                 mentions_tbl,
             )
-            communities = ck(communities)
-        else:
-            communities = ck(
-                community_catalog(
-                    membership, entities_tbl, triples_tbl, mentions_tbl
-                )
-            )
+        )
         # same torn-window guard as the full path: the sidecar drops
         # before the catalog overwrite and is restored after, so a
         # crash mid-write declines every community reuse on retry
@@ -1272,42 +1042,26 @@ def incremental_update(
             "incr_detection_reused", -1, 1, _time.time(), defer=True
         )
     else:
-        entities_tbl = wh.read("entities")
-        triples_tbl = wh.read("triples")
-        membership, hierarchy, comm_labels = detect_communities(
-            entities_tbl,
-            triples_tbl,
-            max_levels=cfg.max_levels,
-            return_labels=True,
+        membership, hierarchy = detect_communities(
+            entities_tbl, triples_tbl, max_levels=cfg.max_levels
         )
         membership = ck(membership)
         hierarchy = ck(hierarchy)
-        mentions_tbl = wh.read("mentions")
         communities = ck(
             community_catalog(
                 membership, entities_tbl, triples_tbl, mentions_tbl
             )
         )
-        writes = [
-            lambda: wh.write(membership, "membership"),
-            lambda: wh.write(hierarchy, "hierarchy"),
-            lambda: wh.write(communities, "communities"),
-        ]
-        # localized-detection state for the NEXT cycle: written above
-        # the crossover, DELETED below it (maintain_localized_state —
-        # stale aux under a fresh sidecar would poison a later
-        # localized cycle). Both inside the sidecar bracket.
         wh.invalidate_community_params()
-        aux = maintain_localized_state(
-            wh, entities_tbl, triples_tbl, comm_labels
+        _run_parallel(
+            [
+                lambda: wh.write(membership, "membership"),
+                lambda: wh.write(hierarchy, "hierarchy"),
+                lambda: wh.write(communities, "communities"),
+            ]
         )
-        writes += [
-            (lambda n=n, d=d: wh.write(d, n)) for n, d in aux.items()
-        ]
-        _run_parallel(writes)
         wh.commit_community_params(community_fingerprint(cfg))
 
-    _mark("communities")
     wh.flush_lineage()
     # every table is committed — the rewrite obligations are met, so
     # the journal can go. A crash BEFORE this point leaves it in place
@@ -1334,215 +1088,6 @@ def _read_out_tables(wh) -> dict[str, DataFrame]:
             ),
         )
     )
-
-
-def maintain_localized_state(wh, entities_tbl, triples_tbl, comm_labels):
-    """The ONE owner of the localized-detection aux state
-    (community_labels + proj_wcc) for every full-detection write site
-    (build_all and the incremental cycle's full-detection branch).
-    Above the localization crossover
-    (community.localization_crossover — node AND edge conditions,
-    mirroring the detector's driver gate) returns the aux tables to
-    commit inside the caller's sidecar bracket; below it returns {}
-    AND DELETES any stale aux tables first. The deletion is a
-    correctness requirement, not hygiene: a catalog that dips under
-    the crossover and climbs back would otherwise leave aux tables
-    from an OLDER detection on disk under a freshly committed sidecar,
-    and the next localized cycle would patch its labels against a base
-    that no longer corresponds to the stored membership."""
-    from ..operators import community as community_mod
-    from ..operators.community import projection_components
-
-    if community_mod.localization_crossover(
-        entities_tbl.count(), triples_tbl.count()
-    ):
-        return {
-            "community_labels": comm_labels.localCheckpoint(),
-            "proj_wcc": projection_components(
-                entities_tbl, triples_tbl
-            ).localCheckpoint(),
-        }
-    for name in ("community_labels", "proj_wcc"):
-        fsio.rmtree(wh.path(name))
-    return {}
-
-
-def _localized_communities(spark, wh, cfg, delta_scope):
-    """Component-scoped community recompute (VERDICT r4 #3): the
-    leveled-LPA loop — the expensive multi-round shuffle stage — runs
-    only over projection components touched by the cycle's triple-key
-    / entity deltas; untouched components reuse their stored raw
-    labels verbatim. One global renumbering pass then assembles the
-    exact membership/hierarchy a full recompute would produce
-    (assemble_communities_from_labels is deterministic in the label
-    rows), and the catalog/summary stage — the LLM boundary at
-    production scale — recomputes ONLY communities whose members,
-    intra-community triples, mentions or dense ids changed; stored
-    rows stand in for the rest (their ``summary_created_at`` keeps the
-    writing cycle's stamp — the one permitted divergence from a full
-    recompute, matching the MERGE-table convention elsewhere).
-
-    Preconditions (checked by the caller's gate): the community
-    sidecar matches cfg, ``community_labels`` + ``proj_wcc`` exist
-    (committed inside the same sidecar bracket as the community
-    tables), no crashed cycle's journal survives, and every
-    delta_scope frame was materialized by its rewrite task.
-
-    Returns the new tables dict, or None when the projection delta
-    turns out empty (caller falls back — the binary reuse branches
-    should have caught that case).
-
-    Remaining corpus-proportional work, by design: the per-level
-    dense renumbering and the hierarchy joins (single-pass, narrow —
-    the dense-id contract of the reference schema is a global rank,
-    leiden.py:107), and the one projection-edges scan of the triples
-    table. The iterative sweeps and the summary regeneration — the
-    two costs that dominate at a 10⁸-entity catalog — are
-    delta-proportional.
-    """
-    import time as _time
-
-    from ..operators.community import (
-        assemble_communities_from_labels,
-        detect_level_labels,
-        extend_labels_to,
-        localized_community_catalog,
-        projection_edges,
-    )
-    from ..operators.components import connected_components_delta
-
-    ck = lambda df: df.localCheckpoint()  # noqa: E731
-
-    t0 = _time.time()
-    entities_tbl = wh.read("entities")
-    triples_tbl = wh.read("triples")
-    mentions_tbl = wh.read("mentions")
-    # fixed-latency guard: below the crossover the full detection is
-    # a collect + pure-Python LPA — cheaper than this path's ~15
-    # assembly jobs. Node AND edge conditions (a dense small-node
-    # projection also forces the distributed loop); triple row count
-    # is a sound upper bound on projection edges and is a parquet
-    # metadata read. Same call-time predicate gates the aux writes.
-    from ..operators import community as community_mod
-
-    if not community_mod.localization_crossover(
-        entities_tbl.count(), triples_tbl.count()
-    ):
-        return None
-    proj = ck(projection_edges(triples_tbl))
-    pairs = delta_scope["changed_key_pairs"].select(
-        F.col("subj").alias("src"), F.col("obj").alias("dst")
-    )
-    cc = connected_components_delta(
-        proj.select(F.col("a").alias("src"), F.col("b").alias("dst")),
-        entities_tbl.select("entity_id"),
-        None,
-        wh.read("proj_wcc").select("entity_id", "pwcc"),
-        changed_pairs=pairs,
-    )
-    if cc["unchanged"]:
-        return None
-    affected = ck(
-        cc["affected_nodes"].select(F.col("node").alias("entity_id"))
-    )
-    local_nodes = cc["local"].select("node")
-    # edge-closure (connected_components_delta proof): every projection
-    # edge touching the recomputed region lies wholly inside it
-    local_edges = proj.join(
-        local_nodes.withColumnRenamed("node", "a"), "a", "left_semi"
-    )
-    local_labels = detect_level_labels(
-        local_nodes, local_edges, max_levels=cfg.max_levels
-    )
-    stored_labels = ck(wh.read("community_labels"))
-    reused_labels = stored_labels.join(affected, "entity_id", "left_anti")
-    padded = ck(
-        extend_labels_to(
-            reused_labels.unionByName(local_labels), cfg.max_levels
-        )
-    )
-    # executed-level count a full run would choose: the loop executes
-    # level l iff every level before it merged something (component
-    # flattening is monotone, so global merge levels are contiguous);
-    # merges at level l ⟺ distinct labels at l < distinct at l-1
-    counts = {
-        r["level"]: r["n"]
-        for r in padded.groupBy("level")
-        .agg(F.countDistinct("label").alias("n"))
-        .collect()
-    }
-    prev = padded.where(F.col("level") == 0).count()  # = entity count
-    if prev == 0:
-        # the delta removed every entity — no labels to assemble; the
-        # full detect_communities path handles the empty catalog
-        return None
-    e_new = 1
-    for lvl in range(cfg.max_levels):
-        c = counts.get(lvl, prev)
-        if c < prev:
-            e_new = lvl + 1
-            prev = c
-        else:
-            break
-    final_labels = ck(padded.where(F.col("level") < e_new))
-    membership, hierarchy = assemble_communities_from_labels(final_labels)
-    membership, hierarchy = _run_parallel(
-        [lambda: ck(membership), lambda: ck(hierarchy)]
-    )
-    pwcc_new = ck(
-        cc["components"].select(
-            F.col("node").alias("entity_id"), F.col("component").alias("pwcc")
-        )
-    )
-
-    # communities whose catalog row can differ from the stored one:
-    # any member in the recomputed region or the cycle's entity /
-    # triple / mention change scope, plus every community whose dense
-    # id moved (renumbering changes the id inside summary/full_content)
-    old_membership = ck(wh.read("membership"))
-    dirty_entities = ck(
-        affected.select("entity_id")
-        .union(delta_scope["changed_entity_rows"])
-        .union(delta_scope["mention_entities"])
-        .union(delta_scope["triples_scope_entities"])
-        .distinct()
-    )
-    old_map = (
-        stored_labels.join(old_membership, ["entity_id", "level"])
-        .select("level", "label", F.col("community_id").alias("__old_id"))
-        .distinct()
-    )
-    new_map = (
-        final_labels.join(membership, ["entity_id", "level"])
-        .select("level", "label", "community_id")
-        .distinct()
-    )
-    renumbered = (
-        new_map.join(old_map, ["level", "label"], "left")
-        .where(
-            F.col("__old_id").isNull()
-            | (F.col("__old_id") != F.col("community_id"))
-        )
-        .select("community_id")
-    )
-    communities, changed_ids = localized_community_catalog(
-        membership,
-        dirty_entities,
-        ck(wh.read("communities")),
-        entities_tbl,
-        triples_tbl,
-        mentions_tbl,
-        extra_changed_ids=renumbered,
-    )
-    return {
-        "membership": membership,
-        "hierarchy": hierarchy,
-        "communities": ck(communities),
-        "community_labels": final_labels,
-        "proj_wcc": pwcc_new,
-        "n_changed": changed_ids.count(),
-        "t0": t0,
-    }
 
 
 def _stored_linking_if_catalog_unchanged(wh, catalog: DataFrame):
@@ -1621,16 +1166,18 @@ def _heal_journal(wh) -> None:
             fsio.rename(nxt, wh.path(name))
 
 
-def _read_journal(spark: SparkSession, wh) -> dict[str, DataFrame]:
+def _read_journal(
+    spark: SparkSession, wh, present: list[str]
+) -> dict[str, DataFrame]:
     """The surviving journal of a crashed cycle, empty frames when the
-    last cycle completed (or none ever ran). Heals an interrupted swap
-    first so the caller (and a subsequent _write_journal) always sees
-    one authoritative generation per table."""
-    _heal_journal(wh)
+    last cycle completed (or none ever ran). ``present`` names the
+    journal tables on disk, probed after _heal_journal so the caller
+    (and a subsequent _write_journal) sees one authoritative
+    generation per table."""
     return {
         name: (
             wh.read(name)
-            if wh.exists(name)
+            if name in present
             else spark.createDataFrame([], schema)
         )
         for name, schema in _JOURNAL_TABLES.items()

@@ -79,9 +79,6 @@ def main():
     # CC sub-steps
     from graph_rag_agent_spark.operators.components import connected_components
 
-    import os
-
-    os.environ["GRARS_DEBUG"] = "1"
     comp = timed(
         "cc_total",
         lambda: connected_components(

@@ -423,18 +423,12 @@ def test_gated_stream_build_only_closed_conversations(
 
 
 def test_delta_incremental_matches_rebuild_and_is_delta_proportional(
-    spark, transcripts_df, tmp_path_factory, monkeypatch
+    spark, transcripts_df, tmp_path_factory
 ):
     """The bucketed (delta-capable) warehouse path: incremental result
     equals a from-scratch rebuild, AND the lineage proves the triple/
     mention rewrites touched a delta-proportional slice, not the
     corpus (VERDICT r2 item #1)."""
-    import graph_rag_agent_spark.operators.community as community_mod
-
-    # force the localized community recompute on this sandbox-sized
-    # catalog (in production it engages above the driver threshold);
-    # the same symbol makes build_all store the aux state
-    monkeypatch.setattr(community_mod, "LOCALIZE_MIN_ENTITIES", 0)
     wh = str(tmp_path_factory.mktemp("wh_delta"))
     cfg = BuildConfig(
         warehouse=wh,
@@ -511,9 +505,8 @@ def test_delta_incremental_matches_rebuild_and_is_delta_proportional(
         b = {tuple(r) for r in rebuilt.tables[name].select(*cols).collect()}
         assert a == b, name
 
-    # round 5 (VERDICT r4 #3): the community tables must ALSO equal the
-    # rebuild — this delta moves triple keys, so the cycle takes the
-    # component-scoped localized recompute, not a full re-detection
+    # the community tables must ALSO equal the rebuild — this delta
+    # moves triple keys, so the cycle re-runs the full detection
     for name in ["membership", "hierarchy", "communities"]:
         cols = sorted(
             c for c in tables[name].columns if c != "summary_created_at"
@@ -567,13 +560,10 @@ def test_delta_incremental_matches_rebuild_and_is_delta_proportional(
     # linking chain must have re-run — no reuse marker
     assert lineage.where(F.col("stage") == "incr_link_reused").count() == 0
 
-    # the localized community recompute ran (triple keys moved), and
-    # its recomputed-summary scope stayed within the catalog
-    loc = lineage.where(
-        F.col("stage") == "incr_communities_localized"
-    ).collect()
-    assert len(loc) == 1
-    assert 0 <= loc[0]["rows"] <= tables["communities"].count()
+    # triple keys moved, so detection was not reused
+    assert (
+        lineage.where(F.col("stage") == "incr_detection_reused").count() == 0
+    )
 
     # entity-scale side tables were delta-MERGEd, not overwritten:
     # the merge lineage rows are a strict subset of the catalog/edge
@@ -619,10 +609,6 @@ def test_delta_incremental_lsh_linking_delta_path(
     # is small but BUILT via the forced LSH chain, so lower the floor
     monkeypatch.setattr(linking_mod, "EXACT_THRESHOLD", 0)
     monkeypatch.setattr(linking_mod, "LINK_DRIVER_THRESHOLD", 0)
-    import graph_rag_agent_spark.plans.incremental as incr_mod
-
-    # force the CC+resolve delta below its fixed-latency guard too
-    monkeypatch.setattr(incr_mod, "CC_DELTA_MIN_ENTITIES", 0)
     wh = str(tmp_path_factory.mktemp("wh_lshdelta"))
     cfg = BuildConfig(
         warehouse=wh,
@@ -643,12 +629,6 @@ def test_delta_incremental_lsh_linking_delta_path(
 
     lineage = spark.read.parquet(f"{wh}/lineage")
     assert lineage.where(F.col("stage") == "incr_similar_delta").count() == 1
-    # VERDICT r4 #1: the CC + resolve tail must ALSO take the delta
-    # path, with a recomputed scope smaller than the catalog
-    cc_rows = lineage.where(F.col("stage") == "incr_cc_delta").collect()
-    assert len(cc_rows) == 1
-    n_catalog = spark.read.parquet(f"{wh}/wcc").count()
-    assert 0 <= cc_rows[0]["rows"] < n_catalog
 
     wh2 = str(tmp_path_factory.mktemp("wh_lshdelta_ref"))
     rebuilt = build_all(
@@ -755,7 +735,7 @@ def test_lsh_delta_declines_exact_produced_store(
 
 
 def test_detection_reuse_on_membership_preserving_delta(
-    spark, transcripts_df, tmp_path_factory, monkeypatch
+    spark, transcripts_df, tmp_path_factory
 ):
     """A delta that changes conversations WITHOUT moving community
     detection's inputs (entity id set + triple key set) must reuse the
@@ -765,10 +745,6 @@ def test_detection_reuse_on_membership_preserving_delta(
     way."""
     import datetime
 
-    import graph_rag_agent_spark.operators.community as community_mod
-
-    # force the localized path on the sandbox-sized catalog (v3 phase)
-    monkeypatch.setattr(community_mod, "LOCALIZE_MIN_ENTITIES", 0)
     wh = str(tmp_path_factory.mktemp("wh_det_reuse"))
     cfg = BuildConfig(
         warehouse=wh,
@@ -798,10 +774,6 @@ def test_detection_reuse_on_membership_preserving_delta(
     assert (
         lineage.where(F.col("stage") == "incr_detection_reused").count() == 1
     )
-    assert (
-        lineage.where(F.col("stage") == "incr_communities_reused").count()
-        == 0
-    )
 
     wh2 = str(tmp_path_factory.mktemp("wh_det_reuse_ref"))
     rebuilt = build_all(
@@ -827,17 +799,11 @@ def test_detection_reuse_on_membership_preserving_delta(
     v3_df = spark.createDataFrame(v3_rows, schema=schemas.TRANSCRIPTS)
     tables3 = incremental_update(spark, v3_df, wh, cfg=cfg)
     lineage3 = spark.read.parquet(f"{wh}/lineage")
+    # no new reuse marker: detection reuse declined, so the cycle took
+    # the only other branch — a full re-detection
     assert (
         lineage3.where(F.col("stage") == "incr_detection_reused").count()
         == 1  # unchanged from the previous cycle
-    )
-    # round 5: the key-moving delta routes through the component-scoped
-    # localized recompute instead of a full re-detection
-    assert (
-        lineage3.where(
-            F.col("stage") == "incr_communities_localized"
-        ).count()
-        == 1
     )
     wh3 = str(tmp_path_factory.mktemp("wh_det_reuse_ref3"))
     rebuilt3 = build_all(
@@ -850,7 +816,7 @@ def test_detection_reuse_on_membership_preserving_delta(
             bucket_convs=8,
         ),
     )
-    for name in ["membership", "communities"]:
+    for name in ["membership", "hierarchy", "communities"]:
         cols = [
             c for c in tables3[name].columns if c != "summary_created_at"
         ]
@@ -1290,7 +1256,7 @@ def test_journal_torn_swap_heals_and_recovers(
     rename. A crash between the delete and the rename leaves the main
     path missing and a COMPLETE ``__next`` generation on disk; a plain
     exists() read would see an empty journal and orphan the crashed
-    cycle's winner rows. _read_journal must heal the torn swap forward
+    cycle's winner rows. The cycle must heal the torn swap forward
     and the retry must still converge to the oracle state."""
     import os
 
@@ -1431,91 +1397,6 @@ def test_no_change_cycle_skips_journal_writes_and_reuses_communities(
     # ... and the refreshed sidecar re-enables the shortcut next cycle
     incremental_update(spark, transcripts_df, wh, cfg=cfg2)
     assert detections == [1]
-
-
-def test_localized_state_invalidated_below_crossover(
-    spark, transcripts_df, tmp_path_factory, monkeypatch
-):
-    """A catalog that dips UNDER the localization crossover must
-    DELETE the stored community_labels/proj_wcc, not leave them on
-    disk under a freshly committed sidecar — a later above-crossover
-    cycle would otherwise patch its labels against aux state from an
-    OLDER detection. The climb back up self-heals: full detection
-    rewrites the aux state, and the following key-moving cycle
-    localizes again with results equal to a fresh rebuild."""
-    import os
-
-    import graph_rag_agent_spark.operators.community as community_mod
-
-    wh = str(tmp_path_factory.mktemp("wh_aux_dip"))
-    cfg = BuildConfig(
-        warehouse=wh,
-        similarity_method="exact",
-        extraction_buckets=2,
-        bucket_convs=8,
-    )
-    # phase 1: above the (patched) crossover — aux state stored
-    monkeypatch.setattr(community_mod, "LOCALIZE_MIN_ENTITIES", 0)
-    build_all(spark, transcripts_df, cfg)
-    assert os.path.isdir(f"{wh}/community_labels")
-    assert os.path.isdir(f"{wh}/proj_wcc")
-
-    # phase 2: "dip" below the crossover + a key-moving delta → full
-    # detection runs and must REMOVE the now-unmaintained aux state
-    monkeypatch.setattr(community_mod, "LOCALIZE_MIN_ENTITIES", 10**12)
-    v2_rows = [
-        r for r in generate_transcripts(12) if r["conv_id"] != "conv-000003"
-    ]
-    v2_df = spark.createDataFrame(v2_rows, schema=schemas.TRANSCRIPTS)
-    incremental_update(spark, v2_df, wh, cfg=cfg)
-    assert not os.path.isdir(f"{wh}/community_labels")
-    assert not os.path.isdir(f"{wh}/proj_wcc")
-
-    # phase 3: climb back above — this cycle's localized gate declines
-    # (aux missing), full detection rewrites the aux state…
-    monkeypatch.setattr(community_mod, "LOCALIZE_MIN_ENTITIES", 0)
-    v3_rows = [r for r in v2_rows if r["conv_id"] != "conv-000007"]
-    v3_df = spark.createDataFrame(v3_rows, schema=schemas.TRANSCRIPTS)
-    incremental_update(spark, v3_df, wh, cfg=cfg)
-    assert os.path.isdir(f"{wh}/community_labels")
-    lineage = spark.read.parquet(f"{wh}/lineage")
-    assert (
-        lineage.where(
-            F.col("stage") == "incr_communities_localized"
-        ).count()
-        == 0
-    )
-
-    # …and the NEXT key-moving cycle localizes against the fresh base,
-    # equal to a from-scratch rebuild
-    v4_rows = [r for r in v3_rows if r["conv_id"] != "conv-000009"]
-    v4_df = spark.createDataFrame(v4_rows, schema=schemas.TRANSCRIPTS)
-    tables = incremental_update(spark, v4_df, wh, cfg=cfg)
-    lineage = spark.read.parquet(f"{wh}/lineage")
-    assert (
-        lineage.where(
-            F.col("stage") == "incr_communities_localized"
-        ).count()
-        == 1
-    )
-    wh2 = str(tmp_path_factory.mktemp("wh_aux_dip_ref"))
-    rebuilt = build_all(
-        spark,
-        v4_df,
-        BuildConfig(
-            warehouse=wh2,
-            similarity_method="exact",
-            extraction_buckets=2,
-            bucket_convs=8,
-        ),
-    )
-    for name in ["membership", "hierarchy", "communities"]:
-        cols = sorted(
-            c for c in tables[name].columns if c != "summary_created_at"
-        )
-        a = {tuple(r) for r in tables[name].select(*cols).collect()}
-        b = {tuple(r) for r in rebuilt.tables[name].select(*cols).collect()}
-        assert a == b, name
 
 
 def test_old_format_and_unbucketed_warehouses_are_rejected(

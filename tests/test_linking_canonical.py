@@ -350,91 +350,3 @@ def test_degraded_knn_every_entity_queries(spark):
         assert {r["src"] for r in edges} & unsampled, (
             "unsampled entities must still query"
         )
-
-
-def test_cc_resolve_delta_equals_full_on_catalog_delta(spark):
-    """The full incremental linking tail — LSH-delta similar → CC
-    delta → resolve delta — must equal a from-scratch recompute on a
-    modify/remove/add catalog delta (the wiring
-    plans/incremental.py step 6 runs, tested here at operator level)."""
-    from graph_rag_agent_spark.operators.canonicalize import (
-        resolve_canonical,
-        resolve_canonical_delta,
-    )
-    from graph_rag_agent_spark.operators.components import (
-        connected_components_delta,
-    )
-    from graph_rag_agent_spark.operators.linking import (
-        similar_entities_lsh_delta,
-    )
-
-    schema = "entity_id string, entity_type string, description string"
-    base = [(f"Widget {i}", "Product", f"desc {i % 7}") for i in range(300)]
-    v1 = with_embeddings(spark.createDataFrame(base, schema)).localCheckpoint()
-    old_similar = similar_entities_lsh(v1, cutoff=0.3).localCheckpoint()
-    old_wcc = (
-        consecutive_component_ids(
-            connected_components(
-                old_similar.select("src", "dst"), nodes=v1.select("entity_id")
-            )
-        )
-        .select(F.col("node").alias("entity_id"), "wcc")
-        .localCheckpoint()
-    )
-    old_cmap = resolve_canonical(old_wcc).localCheckpoint()
-
-    rows2 = [
-        (eid, t, ("MODIFIED " + d) if i % 29 == 0 else d)
-        for i, (eid, t, d) in enumerate(base)
-        if i % 31 != 0
-    ] + [(f"Gadget {i}", "Product", f"fresh {i}") for i in range(8)]
-    v2 = with_embeddings(spark.createDataFrame(rows2, schema)).localCheckpoint()
-
-    new_similar, affected_hint = similar_entities_lsh_delta(
-        v2, v1, old_similar, cutoff=0.3, with_affected=True
-    )
-    new_similar = new_similar.localCheckpoint()
-    out = connected_components_delta(
-        new_similar.select("src", "dst"),
-        v2.select("entity_id"),
-        old_similar.select("src", "dst"),
-        old_wcc,
-        changed_src_hint=affected_hint.localCheckpoint(),
-    )
-    full_wcc = (
-        consecutive_component_ids(
-            connected_components(
-                new_similar.select("src", "dst"), nodes=v2.select("entity_id")
-            )
-        )
-        .select(F.col("node").alias("entity_id"), "wcc")
-        .localCheckpoint()
-    )
-    want_cmap = {
-        r["entity_id"]: r["canonical_id"]
-        for r in resolve_canonical(full_wcc).collect()
-    }
-    if out["unchanged"]:
-        got_cmap = {
-            r["entity_id"]: r["canonical_id"] for r in old_cmap.collect()
-        }
-    else:
-        got_comp = {
-            r["node"]: r["component"] for r in out["components"].collect()
-        }
-        want_comp = {
-            r["node"]: r["component"]
-            for r in connected_components(
-                new_similar.select("src", "dst"), nodes=v2.select("entity_id")
-            ).collect()
-        }
-        assert got_comp == want_comp
-        got_cmap = {
-            r["entity_id"]: r["canonical_id"]
-            for r in resolve_canonical_delta(
-                out["local"], old_cmap, out["affected_nodes"].localCheckpoint()
-            ).collect()
-        }
-    assert got_cmap == want_cmap
-    # the fixture's delta must actually exercise the recompute path
-    assert not out["unchanged"]
