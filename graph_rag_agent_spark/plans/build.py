@@ -229,7 +229,7 @@ class _Warehouse:
         df: DataFrame,
         name: str,
         group_key: str | None = None,
-        num_buckets: int = 0,
+        num_buckets: int | None = None,
     ) -> DataFrame:
         if name == "entity_embeddings":
             # entering the linking-table overwrite window: the four
@@ -244,7 +244,7 @@ class _Warehouse:
             # canonical_map write (the last of the four on every path)
             # makes the probe decline for the whole torn window.
             fsio.remove(os.path.join(self.root, LINK_PARAMS_FILE))
-        if group_key and num_buckets > 0:
+        if group_key:
             from .merge import write_bucketed
 
             write_bucketed(df, self.path(name), group_key, num_buckets)

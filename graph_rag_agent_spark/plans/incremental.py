@@ -464,10 +464,7 @@ def incremental_update(
     }
 
     def _merge_conv_table(name, delta):
-        target_cols = wh.read(name).columns
-        info = upsert_groups(
-            spark, wh.path(name), delta.select(*target_cols), stale, "conv_id"
-        )
+        info = upsert_groups(spark, wh.path(name), delta, stale, "conv_id")
         wh.append_lineage(
             f"incr_merge_{name}",
             len(info["touched_buckets"]),
@@ -476,46 +473,28 @@ def incremental_update(
             defer=True,
         )
 
-    def _merge_entity_index():
-        cur_idx = read_pruned(
-            spark, wh.path("entity_conv_index"), touched_entities
-        )
-        idx_rows = ck(
-            cur_idx.join(stale, "conv_id", "left_anti")
-            .unionByName(new_pairs)
+    def _merge_inverted_index(name, key, touched, new_index_rows):
+        rows = ck(
+            read_pruned(spark, wh.path(name), touched)
+            .join(stale, "conv_id", "left_anti")
+            .unionByName(new_index_rows)
             .distinct()
         )
-        upsert_groups(
-            spark,
-            wh.path("entity_conv_index"),
-            idx_rows,
-            touched_entities,
-            "entity_id",
-        )
-
-    def _merge_chunk_index():
-        cur_cidx = read_pruned(
-            spark, wh.path("chunk_conv_index"), touched_chunks
-        )
-        cidx_rows = ck(
-            cur_cidx.join(stale, "conv_id", "left_anti")
-            .unionByName(new_chunk_pairs)
-            .distinct()
-        )
-        upsert_groups(
-            spark,
-            wh.path("chunk_conv_index"),
-            cidx_rows,
-            touched_chunks,
-            "chunk_id",
-        )
+        upsert_groups(spark, wh.path(name), rows, touched, key)
 
     _run_parallel(
         [
             (lambda n=n, d=d: _merge_conv_table(n, d))
             for n, d in per_conv.items()
         ]
-        + [_merge_entity_index, _merge_chunk_index]
+        + [
+            lambda: _merge_inverted_index(
+                "entity_conv_index", "entity_id", touched_entities, new_pairs
+            ),
+            lambda: _merge_inverted_index(
+                "chunk_conv_index", "chunk_id", touched_chunks, new_chunk_pairs
+            ),
+        ]
     )
     # the registry commits LAST among the conv tables, after every
     # data-table merge above has succeeded: change detection keys
@@ -806,36 +785,20 @@ def incremental_update(
             ).select(*ent_cols)
         )
 
-        # fingerprint diff — same rationale as _merge_side_table: a
-        # full-row exceptAll would shuffle every embedding twice
-        def fp(df):
-            return df.select(
-                "entity_id",
-                F.hash(*ent_cols).alias("__h32"),
-                F.xxhash64(*ent_cols).alias("__h64"),
-            )
-
-        old_ents = old_entities.select(*ent_cols)
-        changed_keys = fp(entities_full).join(
-            ck(fp(old_ents)), ["entity_id", "__h32", "__h64"], "left_anti"
-        ).select("entity_id")
+        changed_keys, removed_ids = _changed_and_removed_keys(
+            old_entities, entities_full, "entity_id"
+        )
         changed_rows = ck(
             entities_full.join(changed_keys, "entity_id", "left_semi")
         )
-        removed_ids = old_entities.select("entity_id").exceptAll(
-            entities_full.select("entity_id")
-        )
-        stale_ent_ids = ck(
-            changed_rows.select("entity_id").union(removed_ids).distinct()
-        )
+        changed_ids = changed_rows.select("entity_id")
+        stale_ent_ids = ck(changed_ids.union(removed_ids).distinct())
         # id-SET diff (changed_rows may be description/embedding-only
         # updates, which don't move community detection)
-        added_ids = changed_rows.select("entity_id").join(
+        added_ids = changed_ids.join(
             old_entities.select("entity_id"), "entity_id", "left_anti"
         )
-        delta_scope["changed_entity_rows"] = ck(
-            changed_rows.select("entity_id")
-        )
+        delta_scope["changed_entity_rows"] = ck(changed_ids)
         detection_input_changed["entities"] = (
             added_ids.union(removed_ids).limit(1).count() > 0
         )
@@ -924,41 +887,14 @@ def incremental_update(
                 df_new, name, group_key=key, num_buckets=cfg.bucket_convs
             )
             return
-        cols = [c for c in df_new.columns]
-        old = wh.read(name).select(*cols)
-        new = df_new.select(*cols)
-
-        # the diff rides compact row FINGERPRINTS, not rows: a
-        # full-row exceptAll would shuffle the embedding arrays twice
-        # — O(catalog bytes), i.e. exactly what the overwrite this
-        # merge replaces costs. (key, murmur3-32, xxhash64) is ~16
-        # bytes/row; with ~96 independent hash bits a changed row
-        # masquerading as unchanged needs a 2⁻⁹⁶ double collision,
-        # and its worst case is one stale side-table row until the
-        # next cycle that touches the key. Rows are unique per key
-        # group in all three tables (single-row keys resp. unique
-        # (src, dst) pairs), which the anti-join shape relies on.
-        def fp(df):
-            return df.select(
-                F.col(key),
-                F.hash(*cols).alias("__h32"),
-                F.xxhash64(*cols).alias("__h64"),
-            )
-
-        # new + modified rows by fingerprint anti-join; the multiset
-        # key diff catches pure removals (a key with fewer — but
-        # individually unchanged — rows still lands in the stale set)
-        oldk = ck(fp(old))
-        newk = fp(new)
-        changed_keys = newk.join(
-            oldk, [key, "__h32", "__h64"], "left_anti"
-        ).select(key)
-        removed = oldk.select(key).exceptAll(newk.select(key))
-        stale = ck(changed_keys.union(removed).distinct())
+        changed, removed = _changed_and_removed_keys(
+            wh.read(name), df_new, key
+        )
+        stale = ck(changed.union(removed).distinct())
         # group semantics: re-insert EVERY current row of a stale key
         # (for per-key-grouped tables like `similar` a partially
         # changed group must be replaced whole)
-        new_rows = new.join(stale, key, "left_semi")
+        new_rows = df_new.join(stale, key, "left_semi")
         t0 = _time.time()
         upsert_groups(spark, path, new_rows, stale, key)
         wh.append_lineage(
@@ -1209,6 +1145,39 @@ def _clear_journal(wh) -> None:
     for name in _JOURNAL_TABLES:
         fsio.rmtree(wh.path(name))
         fsio.rmtree(wh.path(name) + _JOURNAL_NEXT_SUFFIX)
+
+
+def _changed_and_removed_keys(
+    old: DataFrame, new: DataFrame, key: str
+) -> tuple[DataFrame, DataFrame]:
+    """(changed, removed) keys of ``new`` against ``old``, compared on
+    ``new``'s columns: changed = keys of new or modified rows, removed
+    = the multiset key diff old − new (a key with fewer — but
+    individually unchanged — rows lands here too).
+
+    The diff rides compact row FINGERPRINTS, not rows: a full-row
+    exceptAll would shuffle the embedding arrays twice — O(catalog
+    bytes), i.e. exactly what the overwrite a delta merge replaces
+    costs. (key, murmur3-32, xxhash64) is ~16 bytes/row; with ~96
+    independent hash bits a changed row masquerading as unchanged needs
+    a 2⁻⁹⁶ double collision, and its worst case is one stale row until
+    the next cycle that touches the key. Rows are unique per key group
+    in every diffed table (single-row keys resp. unique (src, dst)
+    pairs), which the anti-join shape relies on."""
+    cols = new.columns
+
+    def fp(df):
+        return df.select(
+            F.col(key),
+            F.hash(*cols).alias("__h32"),
+            F.xxhash64(*cols).alias("__h64"),
+        )
+
+    oldk = fp(old.select(*cols)).localCheckpoint()
+    newk = fp(new)
+    changed = newk.join(oldk, [key, "__h32", "__h64"], "left_anti").select(key)
+    removed = oldk.select(key).exceptAll(newk.select(key))
+    return changed, removed
 
 
 def _triple_keys(t_raw: DataFrame, cmap: DataFrame) -> DataFrame:

@@ -49,6 +49,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import fsio
+from .merge import _rewrite_partitions
 
 
 def _data_files(d: str) -> list[str]:
@@ -115,9 +116,10 @@ def vacuum_turn_log(spark: SparkSession, warehouse: str) -> dict:
     snapshot's own rule — streaming/pipeline.latest_conversation_
     snapshot); every row of an older batch is shadowed and can be
     reclaimed. Only partitions containing superseded rows are
-    rewritten (dynamic partition overwrite); fully-superseded batch
-    partitions are removed outright. The streaming checkpoint tracks
-    SOURCE files, not the log, so vacuuming between passes is safe.
+    rewritten (the merge layer's copy-on-write partition rewrite);
+    fully-superseded batch partitions are removed outright. The
+    streaming checkpoint tracks SOURCE files, not the log, so
+    vacuuming between passes is safe.
     """
     turn_log = os.path.join(warehouse, "turn_log")
     if not fsio.is_dir(turn_log) or not _partition_dirs(turn_log):
@@ -139,36 +141,17 @@ def vacuum_turn_log(spark: SparkSession, warehouse: str) -> dict:
         return {"rows_deleted": 0, "partitions_rewritten": 0,
                 "partitions_removed": 0}
     n_deleted = superseded.count()
-    kept_touched = (
-        tagged.where(
-            F.col("ingest_batch").isin(touched)
-            & (F.col("ingest_batch") == F.col("__live_batch"))
-        )
-        .drop("__live_batch")
-        .localCheckpoint(eager=True)
+    kept_touched = tagged.where(
+        F.col("ingest_batch").isin(touched)
+        & (F.col("ingest_batch") == F.col("__live_batch"))
+    ).drop("__live_batch")
+    surviving, emptied = _rewrite_partitions(
+        kept_touched, turn_log, "ingest_batch", touched
     )
-    surviving = {
-        r[0] for r in kept_touched.select("ingest_batch").distinct().collect()
-    }
-    if surviving:
-        (
-            kept_touched.repartition(
-                max(1, len(surviving)), F.col("ingest_batch")
-            )
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ingest_batch")
-            .parquet(turn_log)
-        )
-    removed = 0
-    for b in touched:
-        if b not in surviving:
-            fsio.rmtree(os.path.join(turn_log, f"ingest_batch={b}"))
-            removed += 1
     return {
         "rows_deleted": n_deleted,
-        "partitions_rewritten": len(surviving & set(touched)),
-        "partitions_removed": removed,
+        "partitions_rewritten": len(surviving),
+        "partitions_removed": len(emptied),
     }
 
 

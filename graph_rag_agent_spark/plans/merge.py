@@ -9,11 +9,16 @@ No Iceberg jars ship in this sandbox, so this module implements the
 same shape over directory-partitioned parquet:
 
 - tables are written partitioned by ``__bucket = pmod(xxhash64(key), n)``
-  (a stable hash of the merge key — Iceberg's bucket transform);
-- MERGE reads ONLY the bucket partitions the source keys hash into
-  (partition pruning bounds the read to delta-touched files);
-- the merged result is written back with dynamic partition overwrite,
-  so untouched bucket directories are never rewritten.
+  (a stable hash of the merge key — Iceberg's bucket transform); the
+  bucket spec sidecar is written once, when ``write_bucketed`` creates
+  the table;
+- ``upsert_groups`` is the one copy-on-write rewrite: it reads ONLY
+  the bucket partitions the affected keys hash into (partition pruning
+  bounds the read to delta-touched files) and writes the merged slice
+  back with dynamic partition overwrite, so untouched bucket
+  directories are never rewritten. ``merge_into``/``delete_where`` and
+  the turn-log vacuum (plans/maintenance.py) are calls into it or its
+  partition-rewrite helper.
 
 At 100 TB with a 1 % delta and 1024 buckets, a merge rewrites the
 ~delta-sized slice of the table instead of the full 100 TB — the exact
@@ -23,15 +28,15 @@ copy-on-write economics Iceberg provides, minus snapshot isolation
 Merge semantics follow Iceberg/ANSI MERGE INTO:
   WHEN MATCHED THEN UPDATE SET *   (or DELETE)
   WHEN NOT MATCHED THEN INSERT *
-Source rows must be unique per key (enforced — ANSI MERGE raises on
-multiple matches; we dropDuplicates after an explicit check hook).
+ANSI MERGE raises when a target row matches several source rows; here
+the source is deduplicated on the key instead (one survivor per key).
 
 Table state (bucket spec sidecar, partition listing, emptied-bucket
 removal) is probed through plans/fsio, which resolves the
 scheme-appropriate Hadoop FileSystem from the active session — the
 same code drives local disk, HDFS, or any object store whose
-connector is on the classpath. These are metadata ops (O(buckets)
-listings, O(bytes) sidecar reads), never data reads. Real
+connector is on the classpath. These are metadata ops (one O(buckets)
+listing per merge, O(bytes) sidecar reads), never data reads. Real
 deployments would use actual Iceberg MERGE INTO anyway (see module
 intro).
 """
@@ -105,11 +110,14 @@ def write_bucketed(
         .partitionBy(BUCKET_COL)
         .parquet(path)
     )
+    # the spec is written here, once: merges only rewrite partition
+    # directories, which leave the table's root files alone
     _write_spec(path, key, num_buckets)
     # an EMPTY frame (a canonical map with no merges, a similarity
     # table with no pairs) writes zero partition directories — park
     # the schema-bearing 0-row marker so the table stays readable
-    _keep_readable(with_bucket, path, key, num_buckets)
+    if not _table_buckets(path):
+        _keep_readable(with_bucket, path)
 
 
 def read_bucketed(spark: SparkSession, path: str) -> DataFrame:
@@ -124,23 +132,48 @@ def _table_buckets(path: str) -> list[int]:
     return sorted(out)
 
 
-def _keep_readable(df: DataFrame, path: str, key: str, num_buckets: int) -> None:
-    """A merge that empties EVERY bucket would leave only
+def _keep_readable(df: DataFrame, path: str) -> None:
+    """A table whose every bucket is empty would leave only
     _bucket_spec.json behind — and the next ``spark.read.parquet``
     dies with 'Unable to infer schema'. Park a 0-row file (valid
     parquet footer = schema survives) inside one partition directory
     so the emptied table stays readable and the layout stays pure
     partition-dirs; a later write to bucket 0 dynamically overwrites
     the marker."""
-    if _table_buckets(path):
-        return
     (
         df.drop(BUCKET_COL)
         .limit(0)
         .write.mode("overwrite")
         .parquet(os.path.join(path, f"{BUCKET_COL}=0"))
     )
-    _write_spec(path, key, num_buckets)
+
+
+def _rewrite_partitions(
+    merged: DataFrame, path: str, part_col: str, rewritten
+) -> tuple[set, set]:
+    """Copy-on-write commit of the partitions named in ``rewritten``:
+    ``merged`` is their complete new content. It is materialized first
+    to break its lineage to ``path`` (Spark refuses to overwrite a path
+    that is still being read from); dynamic overwrite then replaces ONLY
+    the partitions present in it, and a partition left with no rows
+    writes nothing — so a rewritten partition missing from ``merged``
+    is removed by hand. Returns (surviving, emptied) partition values;
+    the surviving collect is ≤ one value per partition, bounded
+    regardless of data size."""
+    merged = merged.localCheckpoint(eager=True)
+    surviving = {r[0] for r in merged.select(part_col).distinct().collect()}
+    if surviving:
+        (
+            merged.repartition(len(surviving), F.col(part_col))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy(part_col)
+            .parquet(path)
+        )
+    emptied = set(rewritten) - surviving
+    for p in sorted(emptied):
+        fsio.rmtree(os.path.join(path, f"{part_col}={p}"))
+    return surviving, emptied
 
 
 def merge_into(
@@ -155,88 +188,21 @@ def merge_into(
     WHEN MATCHED THEN {UPDATE SET * | DELETE}
     WHEN NOT MATCHED THEN INSERT *.
 
-    Copy-on-write at bucket-partition granularity: reads and rewrites
-    only the partitions whose bucket appears in the source. Returns
-    {"touched_buckets": [...], "total_buckets": n} so callers (and
-    tests) can verify the pruning actually bounded the work.
+    Both forms are an ``upsert_groups`` call: UPDATE deletes the source
+    keys and inserts the (key-deduplicated) source rows; DELETE removes
+    the source keys and inserts nothing. Returns {"touched_buckets":
+    [...], "total_buckets": n} so callers (and tests) can verify the
+    pruning actually bounded the work.
     """
     if when_matched not in ("update", "delete"):
         raise ValueError(f"when_matched must be update|delete: {when_matched}")
-    if not fsio.exists(path):
-        # WHEN NOT MATCHED over an absent table = CREATE TABLE AS
-        if when_matched == "delete":
-            return {"touched_buckets": [], "total_buckets": 0}
-        write_bucketed(
-            source.dropDuplicates([key]), path, key, num_buckets or 64
-        )
-        return {
-            "touched_buckets": _table_buckets(path),
-            "total_buckets": len(_table_buckets(path)),
-        }
-    num_buckets = _resolve_buckets(path, key, num_buckets)
-    src = source.withColumn(BUCKET_COL, bucket_of(F.col(key), num_buckets))
-    # the touched-partition list is ≤ num_buckets values — a bounded
-    # driver-side collect by construction, independent of data size
-    touched = sorted(
-        r[0]
-        for r in src.select(BUCKET_COL).distinct().collect()
-    )
-    existing = set(_table_buckets(path))
-    if not touched:
-        return {"touched_buckets": [], "total_buckets": len(existing)}
-
-    read_buckets = [b for b in touched if b in existing]
-    if read_buckets:
-        target = spark.read.parquet(path).where(
-            F.col(BUCKET_COL).isin(read_buckets)
-        )
-    else:
-        target = spark.read.parquet(path).where(F.lit(False))
-
     if when_matched == "update":
-        cols = [c for c in target.columns if c != BUCKET_COL]
-        src = src.select(
-            *[F.col(c) for c in cols], F.col(BUCKET_COL)
-        ).dropDuplicates([key])
-        # UPDATE SET * + INSERT *: source wins on key collision
-        merged = src.unionByName(
-            target.join(src.select(key), key, "left_anti")
-        )
-    else:
-        # DELETE + INSERT nothing: matched keys vanish from the slice
-        merged = target.join(
-            src.select(key).dropDuplicates([key]), key, "left_anti"
-        )
-
-    # the merged slice is delta-sized; materialize it to break the
-    # lineage to `path` (Spark refuses to overwrite a path that is
-    # still being read from)
-    merged = merged.localCheckpoint(eager=True)
-
-    # dynamic overwrite replaces ONLY the partitions present in merged
-    # — but a delete that empties a bucket writes no partition, so the
-    # stale directory would survive; remove fully-emptied buckets by hand
-    surviving = {r[0] for r in merged.select(BUCKET_COL).distinct().collect()}
-    if surviving:
-        (
-            merged.repartition(
-                max(1, min(len(surviving), num_buckets)), F.col(BUCKET_COL)
-            )
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(BUCKET_COL)
-            .parquet(path)
-        )
-        _write_spec(path, key, num_buckets)
-    if when_matched == "delete":
-        for b in read_buckets:
-            if b not in surviving:
-                fsio.rmtree(os.path.join(path, f"{BUCKET_COL}={b}"))
-        _keep_readable(merged, path, key, num_buckets)
-    return {
-        "touched_buckets": touched,
-        "total_buckets": len(set(_table_buckets(path))),
-    }
+        rows = source.dropDuplicates([key])
+        return upsert_groups(spark, path, rows, rows.limit(0), key, num_buckets)
+    if not fsio.exists(path):
+        return {"touched_buckets": [], "total_buckets": 0}
+    nothing = read_bucketed(spark, path).limit(0)
+    return upsert_groups(spark, path, nothing, source, key, num_buckets)
 
 
 def upsert_groups(
@@ -247,13 +213,15 @@ def upsert_groups(
     key: str,
     num_buckets: int | None = None,
 ) -> dict:
-    """Group-wise MERGE: delete every row whose key is stale or
-    re-ingested, then insert new_rows — Iceberg's
-    ``MERGE … WHEN MATCHED THEN DELETE`` followed by an append, the
-    per-conversation upsert shape an incremental KG cycle needs
-    (a conversation's chunk/extraction rows are a group, not one row).
-    Copy-on-write at bucket granularity exactly as merge_into: only
-    partitions holding affected keys are read or rewritten."""
+    """Group-wise MERGE, the one copy-on-write rewrite of this module:
+    delete every row whose key is stale or re-ingested, then insert
+    new_rows — Iceberg's ``MERGE … WHEN MATCHED THEN DELETE`` followed
+    by an append, the per-conversation upsert shape an incremental KG
+    cycle needs (a conversation's chunk/extraction rows are a group,
+    not one row). Only partitions holding affected keys are read or
+    rewritten; new_rows are aligned to the target's columns. Over an
+    absent table it creates the table from new_rows. One partition
+    listing per call."""
     if not fsio.exists(path):
         write_bucketed(new_rows, path, key, num_buckets or 64)
         bs = _table_buckets(path)
@@ -265,6 +233,8 @@ def upsert_groups(
         .distinct()
         .withColumn(BUCKET_COL, bucket_of(F.col(key), num_buckets))
     )
+    # the touched-partition list is ≤ num_buckets values — a bounded
+    # driver-side collect by construction, independent of data size
     touched = sorted(
         r[0] for r in gone.select(BUCKET_COL).distinct().collect()
     )
@@ -272,62 +242,37 @@ def upsert_groups(
     if not touched:
         return {"touched_buckets": [], "total_buckets": len(existing)}
     read_buckets = [b for b in touched if b in existing]
-
-    new_b = new_rows.withColumn(BUCKET_COL, bucket_of(F.col(key), num_buckets))
-    cols = new_b.columns
-    if read_buckets:
-        target = spark.read.parquet(path).where(
-            F.col(BUCKET_COL).isin(read_buckets)
-        )
-        survivors = target.select(*cols).join(
-            gone.select(key), key, "left_anti"
-        )
-        merged = survivors.unionByName(new_b)
-    else:
-        merged = new_b
-    # break the lineage to `path` before overwriting it (see merge_into)
-    merged = merged.localCheckpoint(eager=True)
-    surviving = {r[0] for r in merged.select(BUCKET_COL).distinct().collect()}
-    if surviving:
-        (
-            merged.repartition(
-                max(1, min(len(surviving), num_buckets)), F.col(BUCKET_COL)
-            )
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(BUCKET_COL)
-            .parquet(path)
-        )
-        _write_spec(path, key, num_buckets)
-    for b in read_buckets:
-        if b not in surviving:
-            fsio.rmtree(os.path.join(path, f"{BUCKET_COL}={b}"))
-    _keep_readable(merged, path, key, num_buckets)
-    return {
-        "touched_buckets": touched,
-        "total_buckets": len(set(_table_buckets(path))),
-    }
+    target = spark.read.parquet(path)
+    cols = [c for c in target.columns if c != BUCKET_COL]
+    new_b = new_rows.select(*cols).withColumn(
+        BUCKET_COL, bucket_of(F.col(key), num_buckets)
+    )
+    survivors = target.where(F.col(BUCKET_COL).isin(read_buckets)).join(
+        gone.select(key), key, "left_anti"
+    )
+    surviving, emptied = _rewrite_partitions(
+        survivors.unionByName(new_b), path, BUCKET_COL, read_buckets
+    )
+    buckets = (existing - emptied) | surviving
+    if not buckets:
+        _keep_readable(new_b, path)
+        buckets = {0}
+    return {"touched_buckets": touched, "total_buckets": len(buckets)}
 
 
-def read_pruned(
-    spark: SparkSession, path: str, keys: DataFrame, key: str | None = None
-) -> DataFrame:
+def read_pruned(spark: SparkSession, path: str, keys: DataFrame) -> DataFrame:
     """Read ONLY the bucket partitions of a bucketed table that can
-    contain the given keys, then left-semi filter to exactly those
-    keys. This is the lookup half of delta-proportional incremental
-    maintenance: at 100 TB, 'the raw triples of 500 changed
-    conversations' must cost 500 conversations of I/O, not a corpus
-    scan. Only the touched BUCKET ids are collected (≤ num_buckets —
-    bounded regardless of key count)."""
+    contain the given keys (on the table's bucket key), then left-semi
+    filter to exactly those keys. This is the lookup half of
+    delta-proportional incremental maintenance: at 100 TB, 'the raw
+    triples of 500 changed conversations' must cost 500 conversations
+    of I/O, not a corpus scan. Only the touched BUCKET ids are
+    collected (≤ num_buckets — bounded regardless of key count); the
+    partition filter prunes to the ones that exist, so no listing."""
     spec = table_bucket_spec(path)
     if spec is None:
         raise ValueError(f"read_pruned requires a bucketed table: {path}")
-    key = key or spec["key"]
-    if key != spec["key"]:
-        raise ValueError(
-            f"read_pruned key {key!r} != table bucket key {spec['key']!r}"
-        )
-    n = spec["num_buckets"]
+    key, n = spec["key"], spec["num_buckets"]
     keys = keys.select(key).distinct()
     touched = sorted(
         r[0]
@@ -335,16 +280,12 @@ def read_pruned(
         .distinct()
         .collect()
     )
-    existing = set(_table_buckets(path))
-    read_buckets = [b for b in touched if b in existing]
-    base = spark.read.parquet(path)
-    if not read_buckets:
-        return base.where(F.lit(False)).drop(BUCKET_COL)
     # no broadcast hint: the key set is usually delta-small (AQE will
     # broadcast it), but a 100 TB cycle's affected-chunk set can be
     # too big to pin driver-side — let the optimizer choose
     return (
-        base.where(F.col(BUCKET_COL).isin(read_buckets))
+        spark.read.parquet(path)
+        .where(F.col(BUCKET_COL).isin(touched))
         .join(keys, key, "left_semi")
         .drop(BUCKET_COL)
     )

@@ -90,6 +90,7 @@ def stream_incremental_build(
     Returns the StreamingQuery (caller awaits termination)."""
     from ..plans.build import BuildConfig, build_all
     from ..plans.incremental import incremental_update
+    from ..plans.merge import _rewrite_partitions
 
     turn_log = f"{warehouse}/turn_log"
     _check_turn_log_layout(turn_log)
@@ -100,13 +101,13 @@ def stream_incremental_build(
         # partial/complete append must not duplicate turns. Partitioning
         # the log by ingest_batch and dynamically overwriting makes the
         # retry replace exactly its own partition — the standard
-        # idempotent-sink pattern for transactional foreachBatch writes.
-        (
-            batch_df.withColumn("ingest_batch", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ingest_batch")
-            .parquet(turn_log)
+        # idempotent-sink pattern for transactional foreachBatch writes
+        # (the merge layer's copy-on-write partition rewrite).
+        _rewrite_partitions(
+            batch_df.withColumn("ingest_batch", F.lit(batch_id)),
+            turn_log,
+            "ingest_batch",
+            (),
         )
         snapshot = latest_conversation_snapshot(
             spark.read.parquet(turn_log)

@@ -9,11 +9,14 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from graph_rag_agent_spark.plans import fsio
 from graph_rag_agent_spark.plans.merge import (
     BUCKET_COL,
     delete_where,
     merge_into,
     read_bucketed,
+    read_pruned,
+    upsert_groups,
     write_bucketed,
 )
 
@@ -58,6 +61,64 @@ def test_merge_update_and_insert(spark, table):
     expected |= {("k3", 300), ("k7", 700), ("new1", 1000)}
     assert got == expected
     assert set(info["touched_buckets"]) <= set(range(N_BUCKETS))
+
+
+def test_merge_aligns_source_columns_to_the_target(spark, table):
+    # the query-cache shape: the key column is appended last
+    src = spark.createDataFrame([(300, "k3"), (1000, "new1")], "v int, k string")
+    merge_into(spark, table, src, "k")
+    expected = {(f"k{i}", i) for i in range(100)} - {("k3", 3)}
+    assert _rows(spark, table) == expected | {("k3", 300), ("new1", 1000)}
+
+
+def test_delete_from_absent_table_creates_nothing(spark, tmp_path):
+    path = str(tmp_path / "absent")
+    keys = spark.createDataFrame([("a",)], "k string")
+    info = merge_into(spark, path, keys, "k", when_matched="delete")
+    assert info == {"touched_buckets": [], "total_buckets": 0}
+    assert not os.path.exists(path)
+
+
+def _spec_state(path):
+    spec = os.path.join(path, "_bucket_spec.json")
+    with open(spec, "rb") as fh:
+        return fh.read(), os.stat(spec).st_mtime_ns
+
+
+def test_merges_leave_the_bucket_spec_untouched(spark, table):
+    """The spec is written when the table is created, never by a merge:
+    not by an update, a delete, or a delete that empties the table."""
+    before = _spec_state(table)
+    src = spark.createDataFrame([("k3", 300), ("new1", 1)], "k string, v int")
+    merge_into(spark, table, src, "k")
+    assert _spec_state(table) == before
+    keys = spark.createDataFrame([("k4",)], "k string")
+    merge_into(spark, table, keys, "k", when_matched="delete")
+    assert _spec_state(table) == before
+    delete_where(spark, table, F.lit(True), "k")
+    assert _spec_state(table) == before
+    out = read_bucketed(spark, table)
+    assert out.count() == 0 and set(out.columns) == {"k", "v"}
+
+
+def test_merge_metadata_cost(spark, table, monkeypatch):
+    """A merge into an existing table lists its partitions once and
+    writes no sidecar; a pruned read lists nothing."""
+    calls = dict.fromkeys(("listdir", "write_json", "write_text"), 0)
+    for name in calls:
+
+        def counted(*args, _name=name, _real=getattr(fsio, name), **kwargs):
+            calls[_name] += 1
+            return _real(*args, **kwargs)
+
+        monkeypatch.setattr(fsio, name, counted)
+    src = spark.createDataFrame([("k3", 300), ("new1", 1)], "k string, v int")
+    upsert_groups(spark, table, src, src.select("k").limit(0), "k")
+    assert calls == {"listdir": 1, "write_json": 0, "write_text": 0}
+    keys = spark.createDataFrame([("k3",), ("absent",)], "k string")
+    got = read_pruned(spark, table, keys).collect()
+    assert calls["listdir"] == 1
+    assert [(r["k"], r["v"]) for r in got] == [("k3", 300)]
 
 
 def test_merge_rewrites_only_touched_buckets(spark, table):
