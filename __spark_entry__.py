@@ -770,21 +770,13 @@ def _q_entity_canonical_map(spark, sf_dir):
     iterative distributed connected components → blocked lev<3 theta
     join → judge (applyInPandas) → canonical survivor map.
 
-    Every driver fast path is disabled (threshold=0, asserted), so a
-    green row here proves the distributed operators themselves produce
-    the closed-form canonicalization the oracle computes.
+    Every driver fast path is disabled (link_catalog's
+    driver_threshold=0), so a green row here proves the distributed
+    operators themselves produce the closed-form canonicalization the
+    oracle computes.
     """
     from graph_rag_agent_spark.core.vocab import PATTERN_REGEX, PATTERN_TYPES
-    from graph_rag_agent_spark.operators.canonicalize import resolve_canonical
-    from graph_rag_agent_spark.operators.components import (
-        connected_components,
-        consecutive_component_ids,
-    )
-    from graph_rag_agent_spark.operators.linking import (
-        link_entities_driver_path,
-        similar_entities_lsh,
-        with_embeddings,
-    )
+    from graph_rag_agent_spark.operators.linking import link_catalog
     from graph_rag_agent_spark.sources.transcripts import transcripts_from_documents
 
     transcripts = transcripts_from_documents(spark, sf_dir, plant_mentions=True)
@@ -801,17 +793,7 @@ def _q_entity_canonical_map(spark, sf_dir):
         etype.alias("entity_type"),
         F.concat("entity_id", F.lit(" is a "), etype).alias("description"),
     )
-    assert link_entities_driver_path(catalog, threshold=0) is None  # distributed
-    embedded = with_embeddings(catalog).localCheckpoint()
-    similar = similar_entities_lsh(embedded)
-    wcc = consecutive_component_ids(
-        connected_components(
-            similar.select("src", "dst"),
-            nodes=embedded.select("entity_id"),
-            driver_threshold=0,
-        )
-    ).select(F.col("node").alias("entity_id"), "wcc")
-    cmap = resolve_canonical(wcc, driver_threshold=0)
+    cmap = link_catalog(catalog, "lsh", driver_threshold=0)["canonical_map"]
     return forms.join(cmap, "entity_id", "left").select(
         "entity_id", F.coalesce("canonical_id", "entity_id").alias("canonical_id")
     )

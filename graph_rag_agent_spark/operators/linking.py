@@ -20,6 +20,11 @@ Reference behavior reproduced:
         re-rank keeps correctness where it matters). This is the
         100 TB path: candidate generation is an equi-join on the
         band key instead of a cross join.
+
+``link_catalog`` is the one entry point that composes the stage
+(catalog → embeddings → similar → connected components → canonical
+map); build_all, incremental_update, plans/inmem, plans/benchjob and
+the entity_canonical_map entry query all call it.
 """
 
 from __future__ import annotations
@@ -458,8 +463,10 @@ def link_entities_driver_path(
     small — one collect in, four createDataFrames out, zero shuffle
     jobs. Runs the same core spec as the oracle
     (core/stub_embed + core/linkage), so results are identical to the
-    distributed chain (tested). Returns None when the catalog exceeds
-    ``threshold`` — callers then use the distributed operators.
+    distributed chain (tests/test_linking_canonical.py,
+    test_link_catalog_driver_path_equals_distributed_chain). Returns
+    None when the catalog exceeds ``threshold`` — link_catalog then
+    runs the distributed chain.
 
     Rationale: the canonical entity catalog is typically orders of
     magnitude smaller than the corpus (vocabulary-bound); spending
@@ -546,6 +553,105 @@ def similar_entities(
     if n <= exact_threshold:
         return similar_entities_exact(embedded, **kwargs)
     return similar_entities_lsh(embedded, **kwargs)
+
+
+def link_catalog(
+    catalog: DataFrame,
+    method: str = "auto",
+    prior: dict[str, DataFrame] | None = None,
+    driver_threshold: int | None = None,
+) -> dict:
+    """The linking stage: entity catalog → {"embedded", "similar",
+    "wcc", "canonical_map"} plus a report — ``embedded_rows`` (rows the
+    distributed chain embedded given a ``prior``; None when the whole
+    catalog was embedded) and ``lsh_delta`` (whether the incremental
+    KNN maintenance ran).
+
+    ``prior`` is a committed linking set of an earlier run, keyed by
+    warehouse table name ("entity_embeddings", "similar"). A small
+    catalog takes link_entities_driver_path. Otherwise the
+    distributed chain runs: embeddings only for rows whose
+    (entity_id, description) differs from ``prior["entity_embeddings"]``
+    (the rest reuse the stored vectors) → similar_entities, or
+    similar_entities_lsh_delta when the method routes to LSH and
+    ``prior["similar"]`` is LSH-produced → connected components
+    → consecutive ids → resolve_canonical, each intermediate
+    local-checkpointed. ``driver_threshold=0`` disables all three
+    driver fast paths (linking, components, resolve); None keeps the
+    operators' defaults. Operators are looked up at call time so
+    wrappers installed on their modules see every call."""
+    from . import canonicalize, components
+
+    limit = {} if driver_threshold is None else {"threshold": driver_threshold}
+    linked = link_entities_driver_path(catalog, **limit)
+    if linked is not None:
+        return {**linked, "embedded_rows": None, "lsh_delta": False}
+
+    cols = ["entity_id", "entity_type", "description", "embedding"]
+    embedded_rows = None
+    if prior is None:
+        embedded = with_embeddings(catalog).localCheckpoint()
+    else:
+        old_emb = prior["entity_embeddings"].select(
+            "entity_id", F.col("description").alias("__old_desc"), "embedding"
+        )
+        with_old = catalog.join(old_emb, "entity_id", "left")
+        kept = with_old.where(
+            F.col("__old_desc").isNotNull()
+            & (F.col("__old_desc") == F.col("description"))
+        ).select(*cols)
+        todo = with_old.where(
+            F.col("__old_desc").isNull()
+            | (F.col("__old_desc") != F.col("description"))
+        ).select("entity_id", "entity_type", "description")
+        embedded = kept.unionByName(
+            with_embeddings(todo).select(*cols)
+        ).localCheckpoint()
+        embedded_rows = todo.count()
+
+    use_lsh = method == "lsh" or (
+        method == "auto" and embedded.count() > EXACT_THRESHOLD
+    )
+    # a stored `similar` is LSH-produced only if its catalog exceeded
+    # both the driver fast-path and the exact-method thresholds
+    # (routing is deterministic in catalog size + method) — exact or
+    # driver KNN tables hold pairs no band join generates, so reusing
+    # their rows would diverge from the LSH recompute
+    lsh_delta = (
+        use_lsh
+        and prior is not None
+        and prior["entity_embeddings"].count()
+        > max(EXACT_THRESHOLD, LINK_DRIVER_THRESHOLD)
+    )
+    if lsh_delta:
+        similar = similar_entities_lsh_delta(
+            embedded, prior["entity_embeddings"], prior["similar"]
+        )
+    else:
+        similar = similar_entities(embedded, method=method)
+    similar = similar.localCheckpoint()
+
+    fast = {} if driver_threshold is None else {"driver_threshold": driver_threshold}
+    wcc = (
+        components.consecutive_component_ids(
+            components.connected_components(
+                similar.select("src", "dst"),
+                nodes=embedded.select("entity_id"),
+                **fast,
+            )
+        )
+        .select(F.col("node").alias("entity_id"), "wcc")
+        .localCheckpoint()
+    )
+    cmap = canonicalize.resolve_canonical(wcc, **fast).localCheckpoint()
+    return {
+        "embedded": embedded,
+        "similar": similar,
+        "wcc": wcc,
+        "canonical_map": cmap,
+        "embedded_rows": embedded_rows,
+        "lsh_delta": lsh_delta,
+    }
 
 
 def similar_entities_degraded(

@@ -15,7 +15,6 @@ from __future__ import annotations
 import time
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
 
 def run_kg_job(spark: SparkSession, n_convs: int, warm: bool = True) -> dict:
@@ -27,20 +26,11 @@ def run_kg_job(spark: SparkSession, n_convs: int, warm: bool = True) -> dict:
     per-worker module imports (pandas/numpy/this package — a one-time
     cluster cost) stay out of the measured window.
     """
-    from ..operators.canonicalize import resolve_canonical, rewrite_triples
+    from ..operators.canonicalize import rewrite_triples
     from ..operators.chunking import chunk_conversations
-    from ..operators.components import (
-        connected_components,
-        consecutive_component_ids,
-    )
     from ..operators.dedup import chunk_signature_columns
     from ..operators.extraction import extract_chunks
-    from ..operators.linking import (
-        entity_catalog,
-        link_entities_driver_path,
-        similar_entities,
-        with_embeddings,
-    )
+    from ..operators.linking import entity_catalog, link_catalog
     from ..operators.parsing import entities_raw, parse_extractions, triples_raw
     from ..sources.transcripts import synthesize_transcripts
     from .inmem import build_kg_tables
@@ -64,24 +54,8 @@ def run_kg_job(spark: SparkSession, n_convs: int, warm: bool = True) -> dict:
     phases["corpus"] = round(time.time() - t0, 2)  # data-proportional
 
     t1 = time.time()
-    catalog = entity_catalog(e_raw, chunks)
-    linked = link_entities_driver_path(catalog)
-    if linked is not None:
-        embedded, cmap = linked["embedded"], linked["canonical_map"]
-    else:
-        embedded = with_embeddings(catalog).localCheckpoint()
-        similar = similar_entities(embedded, method="auto").localCheckpoint()
-        wcc = (
-            consecutive_component_ids(
-                connected_components(
-                    similar.select("src", "dst"),
-                    nodes=embedded.select("entity_id"),
-                )
-            )
-            .select(F.col("node").alias("entity_id"), "wcc")
-            .localCheckpoint()
-        )
-        cmap = resolve_canonical(wcc).localCheckpoint()
+    linked = link_catalog(entity_catalog(e_raw, chunks), "auto")
+    embedded, cmap = linked["embedded"], linked["canonical_map"]
     n_entities = embedded.count()
     phases["link"] = round(time.time() - t1, 2)  # catalog-proportional
 

@@ -30,8 +30,10 @@ partition"):
 
 from __future__ import annotations
 
+import functools
 import os
 import time
+from contextlib import contextmanager, nullcontext
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -40,20 +42,13 @@ from pyspark.sql import functions as F
 from .. import schemas
 from ..operators.canonicalize import (
     canonical_entities,
-    resolve_canonical,
     rewrite_mentions,
     rewrite_triples,
 )
 from ..operators.chunking import chunk_conversations
 from ..operators.community import community_catalog, detect_communities
-from ..operators.components import connected_components, consecutive_component_ids
 from ..operators.extraction import extract_chunks
-from ..operators.linking import (
-    entity_catalog,
-    link_entities_driver_path,
-    similar_entities,
-    with_embeddings,
-)
+from ..operators.linking import entity_catalog, link_catalog
 from ..operators.parsing import (
     entities_raw,
     mentions_raw,
@@ -177,11 +172,11 @@ WAREHOUSE_TABLES = (
 def link_fingerprint(cfg) -> dict:
     """The linking-config fingerprint persisted beside canonical_map —
     the ONE place that decides which BuildConfig knobs the linking
-    chain's output depends on. Every canonical_map writer sets
-    ``wh.link_params = link_fingerprint(cfg)`` and the
-    catalog-unchanged reuse in plans/incremental.py compares against
-    the stored copy; adding a linking-relevant knob here invalidates
-    stale warehouses automatically at every call site."""
+    chain's output depends on. Every linking-table writer commits it
+    through ``wh.sidecar_window(LINK_PARAMS_FILE, link_fingerprint(cfg))``
+    and the catalog-unchanged reuse in plans/incremental.py compares
+    against the stored copy; adding a linking-relevant knob here
+    invalidates stale warehouses automatically at every call site."""
     return {"similarity_method": cfg.similarity_method}
 
 
@@ -201,12 +196,6 @@ class _Warehouse:
         self.spark = spark
         self.root = root
         self._lineage_buffer: list = []
-        # linking-config fingerprint of the CURRENT plan run; persisted
-        # alongside canonical_map so a later cycle can tell whether the
-        # stored linking tables were produced under the same config
-        # (the catalog-unchanged reuse in plans/incremental.py is only
-        # sound for identical (catalog, config) pairs)
-        self.link_params: dict | None = None
 
     def path(self, name: str) -> str:
         return os.path.join(self.root, name)
@@ -231,68 +220,49 @@ class _Warehouse:
         group_key: str | None = None,
         num_buckets: int | None = None,
     ) -> DataFrame:
-        if name == "entity_embeddings":
-            # entering the linking-table overwrite window: the four
-            # linking tables (entity_embeddings/similar/wcc/
-            # canonical_map) are only mutually consistent once ALL are
-            # written, and the catalog-unchanged reuse probe
-            # (plans/incremental.py) compares the catalog against
-            # entity_embeddings while handing back canonical_map — so a
-            # crash between the two overwrites would otherwise let the
-            # probe pair a NEW catalog with an OLD map. Deleting the
-            # sidecar here and re-creating it only with the
-            # canonical_map write (the last of the four on every path)
-            # makes the probe decline for the whole torn window.
-            fsio.remove(os.path.join(self.root, LINK_PARAMS_FILE))
         if group_key:
             from .merge import write_bucketed
 
             write_bucketed(df, self.path(name), group_key, num_buckets)
         else:
             df.write.mode("overwrite").parquet(self.path(name))
-        if name == "canonical_map" and self.link_params is not None:
-            fsio.write_json(
-                os.path.join(self.root, LINK_PARAMS_FILE), self.link_params
-            )
         return self.read(name)
 
-    def invalidate_community_params(self) -> None:
-        """Entering the community-table overwrite window: membership/
-        hierarchy/communities are only mutually consistent once ALL are
-        written (they're overwritten in parallel), so the sidecar the
-        no-change-cycle reuse probes is deleted first and re-created by
-        commit_community_params after the last write — a crash inside
-        the window makes the probe decline instead of pairing fresh
-        membership with a stale catalog."""
-        fsio.remove(os.path.join(self.root, COMMUNITY_PARAMS_FILE))
+    @contextmanager
+    def sidecar_window(self, sidecar: str, params: dict):
+        """Overwrite window of a table set that is only mutually
+        consistent once ALL of it is written — the four linking tables
+        (sidecar LINK_PARAMS_FILE) or the community tables
+        (COMMUNITY_PARAMS_FILE). The sidecar is the config fingerprint
+        the reuse probes compare against: it is removed on entry and
+        written with ``params`` after the body. A body that raises
+        leaves it absent, so every reuse probe declines for the whole
+        torn window instead of pairing fresh tables with stale ones."""
+        path = os.path.join(self.root, sidecar)
+        fsio.remove(path)
+        yield
+        fsio.write_json(path, params)
 
-    def commit_community_params(self, params: dict) -> None:
-        fsio.write_json(
-            os.path.join(self.root, COMMUNITY_PARAMS_FILE), params
-        )
+    def _stored_params(self, sidecar: str) -> dict | None:
+        try:
+            return fsio.read_json(os.path.join(self.root, sidecar))
+        except Exception:
+            return None
 
     def stored_community_params(self) -> dict | None:
         """Fingerprint persisted with the last completed community
         write, or None inside a torn write window / for a corrupt
         sidecar — the safe direction: reuse is declined and detection
         re-runs."""
-        try:
-            return fsio.read_json(
-                os.path.join(self.root, COMMUNITY_PARAMS_FILE)
-            )
-        except Exception:
-            return None
+        return self._stored_params(COMMUNITY_PARAMS_FILE)
 
     def stored_link_params(self) -> dict | None:
-        """Fingerprint persisted with the last canonical_map write, or
-        None inside a torn linking write window. A corrupt/partial
-        sidecar (crash mid-dump) also reads as None — the safe
-        direction: reuse is declined and the chain recomputes (same
-        fallback shape as merge.table_bucket_spec)."""
-        try:
-            return fsio.read_json(os.path.join(self.root, LINK_PARAMS_FILE))
-        except Exception:
-            return None
+        """Fingerprint persisted with the last completed linking-table
+        write, or None inside a torn linking write window. A
+        corrupt/partial sidecar (crash mid-dump) also reads as None —
+        the safe direction: reuse is declined and the chain recomputes
+        (same fallback shape as merge.table_bucket_spec)."""
+        return self._stored_params(LINK_PARAMS_FILE)
 
     def write_format_version(self) -> None:
         fsio.write_json(
@@ -465,7 +435,6 @@ def build_all(
     spark: SparkSession, transcripts: DataFrame, cfg: BuildConfig
 ) -> BuildResult:
     wh = _Warehouse(spark, cfg.warehouse)
-    wh.link_params = link_fingerprint(cfg)
     fsio.makedirs(cfg.warehouse)
     res = BuildResult()
     t_start = time.time()
@@ -541,73 +510,38 @@ def build_all(
         ]
     )
 
-    # linking: one driver-side pass when the catalog is small (same
-    # core spec as the distributed chain — see linking.py), else the
-    # distributed operators stage by stage
-    _linked_cache: list = []
-
+    # linking: one link_catalog call (driver pass for a small catalog,
+    # else the distributed chain), computed only if a stage below
+    # needs it. entity_embeddings / similar / canonical_map are
+    # bucketed so incremental cycles can MERGE their deltas instead of
+    # overwriting O(catalog) bytes per cycle; wcc stays an overwrite —
+    # its dense component numbering is a global renumbering, so its
+    # rows have no stable per-key identity to merge on (and it is the
+    # smallest of the four)
+    @functools.cache
     def _linked():
-        if not _linked_cache:
-            _linked_cache.append(
-                link_entities_driver_path(entity_catalog(e_raw, chunks))
-            )
-        return _linked_cache[0]
+        return link_catalog(entity_catalog(e_raw, chunks), cfg.similarity_method)
 
-    # entity_embeddings / similar / canonical_map are bucketed so
-    # incremental cycles can MERGE their deltas instead of overwriting
-    # O(catalog) bytes per cycle; wcc stays an overwrite — its dense
-    # component numbering is a global renumbering, so its rows have no
-    # stable per-key identity to merge on (and it is the smallest of
-    # the four)
-    embedded = _stage(
-        wh,
-        "entity_embeddings",
-        cfg,
-        lambda: (
-            _linked()["embedded"]
-            if _linked() is not None
-            else with_embeddings(entity_catalog(e_raw, chunks))
-        ),
-        "entity_id",
+    relink = not cfg.resume or not all(
+        wh.exists(n)
+        for n in ("entity_embeddings", "similar", "wcc", "canonical_map")
     )
-
-    similar = _stage(
-        wh,
-        "similar",
-        cfg,
-        lambda: (
-            _linked()["similar"]
-            if _linked() is not None
-            else similar_entities(embedded, method=cfg.similarity_method)
-        ),
-        "src",
-    )
+    with (
+        wh.sidecar_window(LINK_PARAMS_FILE, link_fingerprint(cfg))
+        if relink
+        else nullcontext()
+    ):
+        embedded = _stage(
+            wh, "entity_embeddings", cfg, lambda: _linked()["embedded"],
+            "entity_id",
+        )
+        similar = _stage(wh, "similar", cfg, lambda: _linked()["similar"], "src")
+        wcc = _stage(wh, "wcc", cfg, lambda: _linked()["wcc"])
+        cmap = _stage(
+            wh, "canonical_map", cfg, lambda: _linked()["canonical_map"],
+            "entity_id",
+        )
     res.tables["similar"] = similar
-
-    def _wcc():
-        if _linked() is not None:
-            return _linked()["wcc"]
-        comp = connected_components(
-            similar.select("src", "dst"),
-            nodes=embedded.select("entity_id"),
-        )
-        return consecutive_component_ids(comp).select(
-            F.col("node").alias("entity_id"), "wcc"
-        )
-
-    wcc = _stage(wh, "wcc", cfg, _wcc)
-
-    cmap = _stage(
-        wh,
-        "canonical_map",
-        cfg,
-        lambda: (
-            _linked()["canonical_map"]
-            if _linked() is not None
-            else resolve_canonical(wcc)
-        ),
-        "entity_id",
-    )
     res.tables["canonical_map"] = cmap
 
     from ..operators.canonicalize import TRIPLE_KEY_COL, with_triple_key
@@ -636,51 +570,58 @@ def build_all(
     entities = _stage(wh, "entities", cfg, _entities, "entity_id")
     res.tables["entities"] = entities
 
-    if cfg.resume and wh.exists("membership") and wh.exists("hierarchy"):
-        membership, hierarchy = wh.read("membership"), wh.read("hierarchy")
-        fresh_detection = False
-    else:
-        t0 = time.time()
-        wh.invalidate_community_params()
-        membership, hierarchy = detect_communities(
-            entities, triples, max_levels=cfg.max_levels
-        )
-        membership, hierarchy = _run_parallel([
-            lambda: wh.write(membership, "membership"),
-            lambda: wh.write(hierarchy, "hierarchy"),
-        ])
-        wh.append_lineage("membership", -1, membership.count(), t0, defer=True)
-        fresh_detection = True
-    res.tables.update(membership=membership, hierarchy=hierarchy)
-
-    # build stage 3 (reference build/build_chunk_index.py:101-172):
-    # chunk embeddings for the chunk vector index — one pandas-UDF pass
-    def _chunk_embeddings():
-        from ..operators.chunk_index import with_chunk_embeddings
-
-        return with_chunk_embeddings(chunks).select("chunk_id", "embedding")
-
-    communities, chunk_embeddings = _run_parallel(
-        [
-            lambda: _stage(
-                wh,
-                "communities",
-                cfg,
-                lambda: community_catalog(membership, entities, triples, mentions),
-            ),
-            lambda: _stage(
-                wh, "chunk_embeddings", cfg, _chunk_embeddings, "chunk_id"
-            ),
-        ]
+    # the community sidecar describes the detection params of the
+    # STORED tables: its window opens only when this run detects with
+    # cfg (a resume that reuses membership/hierarchy leaves whatever
+    # stamp — if any — the writing run left, which is the truthful one)
+    redetect = not (
+        cfg.resume and wh.exists("membership") and wh.exists("hierarchy")
     )
+    with (
+        wh.sidecar_window(COMMUNITY_PARAMS_FILE, community_fingerprint(cfg))
+        if redetect
+        else nullcontext()
+    ):
+        if redetect:
+            t0 = time.time()
+            membership, hierarchy = detect_communities(
+                entities, triples, max_levels=cfg.max_levels
+            )
+            membership, hierarchy = _run_parallel([
+                lambda: wh.write(membership, "membership"),
+                lambda: wh.write(hierarchy, "hierarchy"),
+            ])
+            wh.append_lineage(
+                "membership", -1, membership.count(), t0, defer=True
+            )
+        else:
+            membership, hierarchy = wh.read("membership"), wh.read("hierarchy")
+        res.tables.update(membership=membership, hierarchy=hierarchy)
+
+        # build stage 3 (reference build/build_chunk_index.py:101-172):
+        # chunk embeddings for the chunk vector index — one pandas-UDF pass
+        def _chunk_embeddings():
+            from ..operators.chunk_index import with_chunk_embeddings
+
+            return with_chunk_embeddings(chunks).select("chunk_id", "embedding")
+
+        communities, chunk_embeddings = _run_parallel(
+            [
+                lambda: _stage(
+                    wh,
+                    "communities",
+                    cfg,
+                    lambda: community_catalog(
+                        membership, entities, triples, mentions
+                    ),
+                ),
+                lambda: _stage(
+                    wh, "chunk_embeddings", cfg, _chunk_embeddings, "chunk_id"
+                ),
+            ]
+        )
     res.tables["communities"] = communities
     res.tables["chunk_embeddings"] = chunk_embeddings
-    # the sidecar describes the detection params of the STORED tables:
-    # stamped only when this run actually detected with cfg (a resume
-    # that reused membership/hierarchy leaves whatever stamp — if any —
-    # the writing run left, which is the truthful one)
-    if fresh_detection:
-        wh.commit_community_params(community_fingerprint(cfg))
 
     wh.flush_lineage()
     res.metrics["build_seconds"] = time.time() - t_start

@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 from ..sources.transcripts import conversation_registry
 from . import fsio
 from .build import (
+    COMMUNITY_PARAMS_FILE,
     LINK_PARAMS_FILE,
     WAREHOUSE_TABLES,
     BuildConfig,
@@ -178,14 +179,13 @@ def incremental_update(
     cfg = cfg or BuildConfig(warehouse=warehouse, resume=False)
     wh = _Warehouse(spark, warehouse)
     wh.check_format()
-    wh.link_params = link_fingerprint(cfg)
+    link_params = link_fingerprint(cfg)
 
     import time as _time
 
     from ..operators.canonicalize import (
         TRIPLE_KEY_COL,
         canonical_entities,
-        resolve_canonical,
         rewrite_mentions,
         rewrite_triples,
         with_triple_key,
@@ -197,17 +197,8 @@ def incremental_update(
         detect_communities,
         localized_community_catalog,
     )
-    from ..operators.components import (
-        connected_components,
-        consecutive_component_ids,
-    )
     from ..operators.extraction import extract_chunks
-    from ..operators.linking import (
-        entity_catalog,
-        link_entities_driver_path,
-        similar_entities,
-        with_embeddings,
-    )
+    from ..operators.linking import entity_catalog, link_catalog
     from ..operators.parsing import (
         entities_raw,
         mentions_raw,
@@ -250,7 +241,7 @@ def incremental_update(
     if (
         not has_new_obligations
         and not journal_on_disk
-        and wh.stored_link_params() == wh.link_params
+        and wh.stored_link_params() == link_params
         and wh.stored_community_params() == community_fingerprint(cfg)
         and all(wh.exists(n) for n in WAREHOUSE_TABLES)
     ):
@@ -526,102 +517,39 @@ def incremental_update(
     # reuse them and skip the catalog-proportional recompute. Two
     # entity-scale EXCEPT probes decide; any table missing or any
     # difference falls through to the full chain.
-    reuse = _stored_linking_if_catalog_unchanged(wh, catalog)
-    linked = None if reuse is not None else link_entities_driver_path(catalog)
-    if reuse is not None:
+    stored, link_reused = _stored_linking_if_catalog_unchanged(
+        wh, catalog, link_params
+    )
+    if link_reused:
         embedded, similar, wcc, cmap = _run_parallel(
-            [lambda t=t: ck(t) for t in reuse]
+            [lambda t=t: ck(t) for t in stored.values()]
         )
         wh.append_lineage(
             "incr_link_reused", -1, 1, _time.time(), defer=True
         )
-    elif linked is not None:
-        embedded, similar, wcc, cmap = _run_parallel([
-            lambda: ck(linked["embedded"]),
-            lambda: ck(linked["similar"]),
-            lambda: ck(linked["wcc"]),
-            lambda: ck(linked["canonical_map"]),
-        ])
     else:
-        old_emb = wh.read("entity_embeddings").select(
-            "entity_id", F.col("description").alias("__old_desc"), "embedding"
-        )
-        with_old = catalog.join(old_emb, "entity_id", "left")
-        kept = with_old.where(
-            F.col("__old_desc").isNotNull()
-            & (F.col("__old_desc") == F.col("description"))
-        ).select("entity_id", "entity_type", "description", "embedding")
-        todo = with_old.where(
-            F.col("__old_desc").isNull()
-            | (F.col("__old_desc") != F.col("description"))
-        ).select("entity_id", "entity_type", "description")
+        # the committed linking set (None when the link-params sidecar
+        # declines) seeds the (entity_id, description) embedding reuse
+        # and the incremental KNN maintenance of the distributed chain
         t0 = _time.time()
-        embedded = ck(
-            kept.unionByName(
-                with_embeddings(todo).select(
-                    "entity_id", "entity_type", "description", "embedding"
-                )
-            )
+        linked = link_catalog(catalog, cfg.similarity_method, prior=stored)
+        embedded, similar, wcc, cmap = _run_parallel(
+            [
+                lambda k=k: ck(linked[k])
+                for k in ("embedded", "similar", "wcc", "canonical_map")
+            ]
         )
-        wh.append_lineage("incr_embed", -1, todo.count(), t0, defer=True)
-        # incremental KNN maintenance: when the full path would run
-        # the LSH chain AND the stored (entity_embeddings, similar)
-        # pair is a consistent committed set (the link-params sidecar
-        # survives only when all four linking tables landed together),
-        # re-score ONLY the sources sharing a band bucket with a
-        # changed/removed/added entity — provably equal to the full
-        # recompute (linking.similar_entities_lsh_delta), and
-        # delta-proportional instead of catalog-proportional.
-        from ..operators import linking as _linking
-        from ..operators.linking import similar_entities_lsh_delta
-
-        use_lsh = cfg.similarity_method == "lsh" or (
-            cfg.similarity_method == "auto"
-            and embedded.count() > _linking.EXACT_THRESHOLD
-        )
-        # the stored `similar` is LSH-produced ONLY if the previous
-        # cycle's catalog exceeded both the driver fast-path and the
-        # exact-method thresholds (routing is deterministic in
-        # catalog size + method) — a table produced by the exact or
-        # driver KNN contains pairs no band join would generate, and
-        # reusing those rows would diverge from the LSH recompute.
-        # Below the floor the full chain is cheap anyway.
-        lsh_floor = max(
-            _linking.EXACT_THRESHOLD, _linking.LINK_DRIVER_THRESHOLD
-        )
-        stored_is_lsh = False
-        if wh.stored_link_params() == wh.link_params and wh.exists("similar"):
-            stored_is_lsh = (
-                wh.read("entity_embeddings").count() > lsh_floor
+        if linked["embedded_rows"] is not None:
+            wh.append_lineage(
+                "incr_embed", -1, linked["embedded_rows"], t0, defer=True
             )
-        if use_lsh and stored_is_lsh:
-            t0 = _time.time()
-            similar = ck(
-                similar_entities_lsh_delta(
-                    embedded,
-                    wh.read("entity_embeddings"),
-                    wh.read("similar"),
-                )
-            )
+        if linked["lsh_delta"]:
             # marker row (rows=1, like incr_link_reused): the table
             # count would read catalog-proportional and obscure that
             # only the affected sources re-scored
             wh.append_lineage(
                 "incr_similar_delta", -1, 1, t0, defer=True
             )
-        else:
-            similar = ck(
-                similar_entities(embedded, method=cfg.similarity_method)
-            )
-        wcc = ck(
-            consecutive_component_ids(
-                connected_components(
-                    similar.select("src", "dst"),
-                    nodes=embedded.select("entity_id"),
-                )
-            ).select(F.col("node").alias("entity_id"), "wcc")
-        )
-        cmap = ck(resolve_canonical(wcc))
 
     # ---- 7. canonical-map delta → affected scope ---------------------
     oc = old_cmap.select("entity_id", F.col("canonical_id").alias("__old_c"))
@@ -870,8 +798,8 @@ def incremental_update(
     # every downstream label), so its rows have no stable per-key
     # identity worth diffing, and it is the smallest of the four.
     #
-    # Sidecar dance (same torn-window guard as before): the link-params
-    # sidecar is removed BEFORE the first side-table write and restored
+    # One sidecar window (the torn-window guard): the link-params
+    # sidecar is removed BEFORE the first side-table write and written
     # only after canonical_map lands — sequentially LAST, so the
     # catalog-unchanged reuse probe declines for any crash inside the
     # window instead of pairing new embeddings with a stale map.
@@ -901,24 +829,20 @@ def incremental_update(
             lineage_stage, -1, new_rows.count(), t0, defer=True
         )
 
-    if reuse is None:
-        fsio.remove(os.path.join(wh.root, LINK_PARAMS_FILE))
-        _run_parallel([
-            lambda: _merge_side_table(
-                embedded, "entity_embeddings", "entity_id",
-                "incr_embeddings_merge",
-            ),
-            lambda: _merge_side_table(
-                similar, "similar", "src", "incr_similar_merge"
-            ),
-            lambda: wh.write(wcc, "wcc"),
-        ])
-        _merge_side_table(
-            cmap, "canonical_map", "entity_id", "incr_cmap_merge"
-        )
-        if wh.link_params is not None:
-            fsio.write_json(
-                os.path.join(wh.root, LINK_PARAMS_FILE), wh.link_params
+    if not link_reused:
+        with wh.sidecar_window(LINK_PARAMS_FILE, link_params):
+            _run_parallel([
+                lambda: _merge_side_table(
+                    embedded, "entity_embeddings", "entity_id",
+                    "incr_embeddings_merge",
+                ),
+                lambda: _merge_side_table(
+                    similar, "similar", "src", "incr_similar_merge"
+                ),
+                lambda: wh.write(wcc, "wcc"),
+            ])
+            _merge_side_table(
+                cmap, "canonical_map", "entity_id", "incr_cmap_merge"
             )
 
     # Community detection is reused when the rewrite tasks proved the
@@ -968,12 +892,12 @@ def incremental_update(
                 mentions_tbl,
             )
         )
-        # same torn-window guard as the full path: the sidecar drops
-        # before the catalog overwrite and is restored after, so a
-        # crash mid-write declines every community reuse on retry
-        wh.invalidate_community_params()
-        wh.write(communities, "communities")
-        wh.commit_community_params(community_fingerprint(cfg))
+        # same torn-window guard as the full path: a crash mid-write
+        # declines every community reuse on retry
+        with wh.sidecar_window(
+            COMMUNITY_PARAMS_FILE, community_fingerprint(cfg)
+        ):
+            wh.write(communities, "communities")
         wh.append_lineage(
             "incr_detection_reused", -1, 1, _time.time(), defer=True
         )
@@ -988,15 +912,16 @@ def incremental_update(
                 membership, entities_tbl, triples_tbl, mentions_tbl
             )
         )
-        wh.invalidate_community_params()
-        _run_parallel(
-            [
-                lambda: wh.write(membership, "membership"),
-                lambda: wh.write(hierarchy, "hierarchy"),
-                lambda: wh.write(communities, "communities"),
-            ]
-        )
-        wh.commit_community_params(community_fingerprint(cfg))
+        with wh.sidecar_window(
+            COMMUNITY_PARAMS_FILE, community_fingerprint(cfg)
+        ):
+            _run_parallel(
+                [
+                    lambda: wh.write(membership, "membership"),
+                    lambda: wh.write(hierarchy, "hierarchy"),
+                    lambda: wh.write(communities, "communities"),
+                ]
+            )
 
     wh.flush_lineage()
     # every table is committed — the rewrite obligations are met, so
@@ -1026,10 +951,14 @@ def _read_out_tables(wh) -> dict[str, DataFrame]:
     )
 
 
-def _stored_linking_if_catalog_unchanged(wh, catalog: DataFrame):
-    """(embedded, similar, wcc, canonical_map) from the warehouse when
-    the merged entity catalog is BIT-IDENTICAL to the stored one, else
-    None.
+def _stored_linking_if_catalog_unchanged(
+    wh, catalog: DataFrame, link_params: dict
+) -> tuple[dict[str, DataFrame] | None, bool]:
+    """(stored, unchanged): the committed linking tables {name: frame}
+    in chain order — entity_embeddings, similar, wcc, canonical_map —
+    (None when the link-params sidecar does not match ``link_params``
+    or a table is missing) and whether the merged entity catalog is
+    BIT-IDENTICAL to the stored one.
 
     Soundness: every stage of the linking chain — the embedding stub,
     hyperplane-LSH banding (fixed seed), candidate scoring, connected
@@ -1038,40 +967,35 @@ def _stored_linking_if_catalog_unchanged(wh, catalog: DataFrame):
     (README "Determinism as a contract") PLUS the linking config, so
     identical (catalog, config) pairs produce identical outputs and
     the stored tables can stand in for the recompute. The config half
-    is checked against the _link_params.json sidecar persisted with
-    every canonical_map write — a warehouse built under a different
-    similarity_method (or predating the sidecar) declines reuse and
-    falls through to the full chain. The probe costs two entity-scale
-    EXCEPT jobs — cheap next to the LSH shuffle + CC loop it skips.
-    Any missing table or any difference (including entity count)
-    returns None.
+    is checked against the _link_params.json sidecar committed with
+    every linking-table write — a warehouse built under a different
+    similarity_method (or inside a torn write window) declines reuse
+    and falls through to the full chain. The probe costs two
+    entity-scale EXCEPT jobs — cheap next to the LSH shuffle + CC loop
+    it skips. Any difference (including entity count) reads as
+    changed.
     """
-    stored_params = wh.stored_link_params()
-    if stored_params is None or stored_params != wh.link_params:
-        return None
     cols = ["entity_id", "entity_type", "description"]
+    if wh.stored_link_params() != link_params:
+        return None, False
     try:
-        stored_emb = wh.read("entity_embeddings")
-        tables = (
-            stored_emb,
-            wh.read("similar"),
-            wh.read("wcc"),
-            wh.read("canonical_map"),
-        )
+        stored = {
+            n: wh.read(n)
+            for n in ("entity_embeddings", "similar", "wcc", "canonical_map")
+        }
     except Exception:
-        return None
-    if set(cols) - set(stored_emb.columns):
-        return None
+        return None, False
+    old_cat = stored["entity_embeddings"]
+    if set(cols) - set(old_cat.columns):
+        return None, False
     new_cat = catalog.select(*cols)
-    old_cat = stored_emb.select(*cols)
+    old_cat = old_cat.select(*cols)
     # both sides are unique per entity_id, so the symmetric difference
     # decides set equality; one UNION plan evaluates both EXCEPT legs
     # inside a single job (the probe is on every cycle's hot path —
     # one barrier, not two) and limit(1) short-circuits
     diff = new_cat.exceptAll(old_cat).unionAll(old_cat.exceptAll(new_cat))
-    if diff.limit(1).count():
-        return None
-    return tables
+    return stored, not diff.limit(1).count()
 
 
 # rewrite-intent journal (step 3.5 of the delta cycle): the

@@ -6,25 +6,17 @@ used where the driver just wants the resulting DataFrames.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 from ..operators.canonicalize import (
     canonical_entities,
-    resolve_canonical,
     rewrite_mentions,
     rewrite_triples,
 )
 from ..operators.chunking import chunk_conversations
 from ..operators.community import community_catalog, detect_communities
-from ..operators.components import connected_components, consecutive_component_ids
 from ..operators.extraction import extract_chunks
-from ..operators.linking import (
-    entity_catalog,
-    link_entities_driver_path,
-    similar_entities,
-    with_embeddings,
-)
+from ..operators.linking import entity_catalog, link_catalog
 from ..operators.parsing import (
     entities_raw,
     mentions_raw,
@@ -39,13 +31,8 @@ def build_kg_tables(
     with_communities: bool = False,
     with_signatures: bool = False,
     max_levels: int = 3,
-    link_driver_threshold: int | None = None,
     with_chunk_index: bool = False,
 ) -> dict[str, DataFrame]:
-    """``link_driver_threshold=0`` forces the fully distributed
-    linking chain (LSH → CC → candidates → judge) regardless of
-    catalog size — used by bench/CORRECTNESS to measure/verify the
-    100 TB path; None keeps the auto thresholds."""
     chunks = chunk_conversations(transcripts)
     if with_signatures:
         from ..operators.dedup import chunk_signature_columns
@@ -61,31 +48,9 @@ def build_kg_tables(
     t_raw = triples_raw(parsed)
     m_raw = mentions_raw(parsed)
 
-    catalog = entity_catalog(e_raw, chunks)
-    if link_driver_threshold is None:
-        linked = link_entities_driver_path(catalog)
-    else:
-        linked = link_entities_driver_path(catalog, threshold=link_driver_threshold)
-    if linked is not None:
-        embedded, similar = linked["embedded"], linked["similar"]
-        wcc, cmap = linked["wcc"], linked["canonical_map"]
-    else:
-        embedded = with_embeddings(catalog).localCheckpoint()
-        similar = similar_entities(embedded, method=similarity_method).localCheckpoint()
-        cc_kwargs = {} if link_driver_threshold is None else {
-            "driver_threshold": link_driver_threshold
-        }
-        wcc = consecutive_component_ids(
-            connected_components(
-                similar.select("src", "dst"),
-                nodes=embedded.select("entity_id"),
-                **cc_kwargs,
-            )
-        ).select(F.col("node").alias("entity_id"), "wcc").localCheckpoint()
-        resolve_kwargs = {} if link_driver_threshold is None else {
-            "driver_threshold": link_driver_threshold
-        }
-        cmap = resolve_canonical(wcc, **resolve_kwargs).localCheckpoint()
+    linked = link_catalog(entity_catalog(e_raw, chunks), similarity_method)
+    embedded, similar = linked["embedded"], linked["similar"]
+    wcc, cmap = linked["wcc"], linked["canonical_map"]
 
     triples = rewrite_triples(t_raw, cmap)
     mentions = rewrite_mentions(m_raw, cmap)

@@ -56,16 +56,11 @@ def test_cascade_delete_reference_counting(spark):
 
 
 def test_incremental_update_matches_full_rebuild(
-    spark, transcripts_df, tmp_path_factory
+    spark, v1_warehouse, exact_build
 ):
     """Build v1, then apply changes incrementally; final triples must
     equal a from-scratch oracle build of the v2 corpus."""
-    wh = str(tmp_path_factory.mktemp("wh_incr"))
-    build_all(
-        spark,
-        transcripts_df,
-        BuildConfig(warehouse=wh, similarity_method="exact", extraction_buckets=2),
-    )
+    wh = v1_warehouse
 
     # v2 corpus: drop conv-000003 entirely, truncate conv-000001
     v2_rows = [
@@ -105,12 +100,7 @@ def test_incremental_update_matches_full_rebuild(
     assert incr_chunks < total_chunks
 
     # and the final warehouse state equals a from-scratch rebuild
-    wh2 = str(tmp_path_factory.mktemp("wh_rebuild"))
-    rebuilt = build_all(
-        spark,
-        v2_df,
-        BuildConfig(warehouse=wh2, similarity_method="exact", extraction_buckets=2),
-    )
+    _, rebuilt = exact_build("v2")
     for name in ["chunks", "entities", "mentions"]:
         a = {tuple(r) for r in tables[name].drop("embedding").collect()}
         b = {tuple(r) for r in rebuilt.tables[name].drop("embedding").collect()}
@@ -423,20 +413,19 @@ def test_gated_stream_build_only_closed_conversations(
 
 
 def test_delta_incremental_matches_rebuild_and_is_delta_proportional(
-    spark, transcripts_df, tmp_path_factory
+    spark, v1_warehouse, exact_build
 ):
     """The bucketed (delta-capable) warehouse path: incremental result
     equals a from-scratch rebuild, AND the lineage proves the triple/
     mention rewrites touched a delta-proportional slice, not the
     corpus (VERDICT r2 item #1)."""
-    wh = str(tmp_path_factory.mktemp("wh_delta"))
+    wh = v1_warehouse
     cfg = BuildConfig(
         warehouse=wh,
         similarity_method="exact",
         extraction_buckets=2,
         bucket_convs=8,
     )
-    build_all(spark, transcripts_df, cfg)
 
     from graph_rag_agent_spark.operators.canonicalize import TRIPLE_KEY_COL
     from graph_rag_agent_spark.plans.build import _Warehouse
@@ -486,17 +475,7 @@ def test_delta_incremental_matches_rebuild_and_is_delta_proportional(
     got = {(r["subj"], r["pred"], r["obj"]) for r in tables["triples"].collect()}
     assert got == want
 
-    wh2 = str(tmp_path_factory.mktemp("wh_delta_ref"))
-    rebuilt = build_all(
-        spark,
-        v2_df,
-        BuildConfig(
-            warehouse=wh2,
-            similarity_method="exact",
-            extraction_buckets=2,
-            bucket_convs=8,
-        ),
-    )
+    wh2, rebuilt = exact_build("v2")
     for name in ["chunks", "entities", "mentions", "triples", "registry"]:
         cols = sorted(
             c for c in tables[name].columns if c != "embedding"
@@ -589,18 +568,12 @@ def test_delta_incremental_lsh_linking_delta_path(
     rebuild — the delta maintenance is provably-equal reuse, not an
     approximation."""
     import graph_rag_agent_spark.operators.linking as linking_mod
-    import graph_rag_agent_spark.plans.build as build_mod
 
-    # build.py binds the symbol at module import; incremental.py at
-    # call time — patch both so BOTH the rebuild and the delta cycle
-    # run the distributed LSH chain
+    # every build and cycle links through linking.link_catalog, so one
+    # seam sends BOTH the rebuild and the delta cycle down the
+    # distributed LSH chain
     monkeypatch.setattr(
         linking_mod,
-        "link_entities_driver_path",
-        lambda catalog, threshold=None: None,
-    )
-    monkeypatch.setattr(
-        build_mod,
         "link_entities_driver_path",
         lambda catalog, threshold=None: None,
     )
@@ -650,9 +623,7 @@ def test_delta_incremental_lsh_linking_delta_path(
         assert a == b, name
 
 
-def test_side_table_fallback_write_rebuckets(
-    spark, transcripts_df, tmp_path_factory
-):
+def test_side_table_fallback_write_rebuckets(spark, v1_warehouse):
     """A side table that lost its bucket spec (torn state) takes the
     full-overwrite fallback — which must re-bucket so the table
     re-enters the delta-MERGE regime instead of overwriting forever."""
@@ -660,14 +631,13 @@ def test_side_table_fallback_write_rebuckets(
 
     from graph_rag_agent_spark.plans.merge import table_bucket_spec
 
-    wh = str(tmp_path_factory.mktemp("wh_rebucket"))
+    wh = v1_warehouse
     cfg = BuildConfig(
         warehouse=wh,
         similarity_method="exact",
         extraction_buckets=2,
         bucket_convs=8,
     )
-    build_all(spark, transcripts_df, cfg)
     os.remove(os.path.join(wh, "similar", "_bucket_spec.json"))
     assert table_bucket_spec(os.path.join(wh, "similar")) is None
 
@@ -735,7 +705,7 @@ def test_lsh_delta_declines_exact_produced_store(
 
 
 def test_detection_reuse_on_membership_preserving_delta(
-    spark, transcripts_df, tmp_path_factory
+    spark, v1_warehouse, tmp_path_factory
 ):
     """A delta that changes conversations WITHOUT moving community
     detection's inputs (entity id set + triple key set) must reuse the
@@ -745,14 +715,13 @@ def test_detection_reuse_on_membership_preserving_delta(
     way."""
     import datetime
 
-    wh = str(tmp_path_factory.mktemp("wh_det_reuse"))
+    wh = v1_warehouse
     cfg = BuildConfig(
         warehouse=wh,
         similarity_method="exact",
         extraction_buckets=2,
         bucket_convs=8,
     )
-    build_all(spark, transcripts_df, cfg)
 
     # v2: one extra vocabulary-free turn — new chunk, zero new
     # mentions/entities/triples
@@ -826,18 +795,17 @@ def test_detection_reuse_on_membership_preserving_delta(
 
 
 def test_delta_incremental_noop_cycle_rewrites_nothing(
-    spark, transcripts_df, tmp_path_factory
+    spark, transcripts_df, v1_warehouse
 ):
     """Re-delivering an identical corpus must cost ~zero: no chunks
     re-extracted, no triples rewritten, tables unchanged."""
-    wh = str(tmp_path_factory.mktemp("wh_noop"))
+    wh = v1_warehouse
     cfg = BuildConfig(
         warehouse=wh,
         similarity_method="exact",
         extraction_buckets=2,
         bucket_convs=8,
     )
-    build_all(spark, transcripts_df, cfg)
     before = {
         (r["subj"], r["pred"], r["obj"])
         for r in spark.read.parquet(f"{wh}/triples").collect()
@@ -966,21 +934,18 @@ def test_delta_incremental_shared_chunk_survives_conv_delete(
         assert twin_chunks and twin_chunks <= mention_chunks
 
 
-def test_delta_extraction_cache_hits_across_conversations(
-    spark, transcripts_df, tmp_path_factory
-):
+def test_delta_extraction_cache_hits_across_conversations(spark, v1_warehouse):
     """chunk_id is a content hash, so a NEW conversation that shares
     chunk text with an UNCHANGED one must hit the extraction cache
     (chunk_conv_index lookup), not re-run the extractor: the cycle is
     driven with a poison extractor that fails on any real call."""
-    wh = str(tmp_path_factory.mktemp("wh_cache"))
+    wh = v1_warehouse
     cfg = BuildConfig(
         warehouse=wh,
         similarity_method="exact",
         extraction_buckets=2,
         bucket_convs=8,
     )
-    build_all(spark, transcripts_df, cfg)
 
     rows = generate_transcripts(12)
     clone = [
@@ -1027,7 +992,7 @@ def test_delta_extraction_cache_hits_across_conversations(
 
 
 def test_failed_delta_cycle_retry_self_heals(
-    spark, transcripts_df, tmp_path_factory, monkeypatch
+    spark, v1_warehouse, monkeypatch
 ):
     """The registry must commit LAST: a delta cycle that dies after
     some conv-table merges committed (injected triples_raw merge
@@ -1036,14 +1001,13 @@ def test_failed_delta_cycle_retry_self_heals(
     idempotent conv-keyed merges, and converges to the oracle state."""
     import graph_rag_agent_spark.plans.merge as merge_mod
 
-    wh = str(tmp_path_factory.mktemp("wh_retry"))
+    wh = v1_warehouse
     cfg = BuildConfig(
         warehouse=wh,
         similarity_method="exact",
         extraction_buckets=2,
         bucket_convs=8,
     )
-    build_all(spark, transcripts_df, cfg)
 
     v2_rows = [
         r
@@ -1078,7 +1042,7 @@ def test_failed_delta_cycle_retry_self_heals(
 
 
 def test_torn_linking_write_declines_reuse_on_retry(
-    spark, transcripts_df, tmp_path_factory, monkeypatch
+    spark, v1_warehouse, exact_build, monkeypatch
 ):
     """A delta cycle that dies between the entity_embeddings overwrite
     and the canonical_map overwrite (step 11) leaves the stored linking
@@ -1092,14 +1056,13 @@ def test_torn_linking_write_declines_reuse_on_retry(
     converge to the same canonical_map a fresh rebuild produces."""
     import graph_rag_agent_spark.plans.build as build_mod
 
-    wh = str(tmp_path_factory.mktemp("wh_torn_link"))
+    wh = v1_warehouse
     cfg = BuildConfig(
         warehouse=wh,
         similarity_method="exact",
         extraction_buckets=2,
         bucket_convs=8,
     )
-    build_all(spark, transcripts_df, cfg)
 
     v2_rows = [
         r
@@ -1141,14 +1104,7 @@ def test_torn_linking_write_declines_reuse_on_retry(
 
     tables = incremental_update(spark, v2_df, wh, cfg=cfg)
 
-    wh2 = str(tmp_path_factory.mktemp("wh_fresh_v2"))
-    cfg2 = BuildConfig(
-        warehouse=wh2,
-        similarity_method="exact",
-        extraction_buckets=2,
-        bucket_convs=8,
-    )
-    fresh = build_all(spark, v2_df, cfg2)
+    _, fresh = exact_build("v2")
     want_cmap = {
         (r["entity_id"], r["canonical_id"])
         for r in fresh.tables["canonical_map"].collect()
@@ -1167,7 +1123,7 @@ def test_torn_linking_write_declines_reuse_on_retry(
 
 
 def test_post_registry_crash_rewrites_recover_via_journal(
-    spark, transcripts_df, tmp_path_factory, monkeypatch
+    spark, v1_warehouse, monkeypatch
 ):
     """The registry commits BEFORE the canonical triple/mention
     rewrites, and the conv merges destroy the pre-merge evidence those
@@ -1182,14 +1138,13 @@ def test_post_registry_crash_rewrites_recover_via_journal(
 
     import graph_rag_agent_spark.plans.merge as merge_mod
 
-    wh = str(tmp_path_factory.mktemp("wh_journal"))
+    wh = v1_warehouse
     cfg = BuildConfig(
         warehouse=wh,
         similarity_method="exact",
         extraction_buckets=2,
         bucket_convs=8,
     )
-    build_all(spark, transcripts_df, cfg)
 
     v2_rows = [
         r
@@ -1250,7 +1205,7 @@ def test_post_registry_crash_rewrites_recover_via_journal(
 
 
 def test_journal_torn_swap_heals_and_recovers(
-    spark, transcripts_df, tmp_path_factory, monkeypatch
+    spark, v1_warehouse, monkeypatch
 ):
     """_write_journal swaps each table in via write-next → delete →
     rename. A crash between the delete and the rename leaves the main
@@ -1262,14 +1217,13 @@ def test_journal_torn_swap_heals_and_recovers(
 
     import graph_rag_agent_spark.plans.merge as merge_mod
 
-    wh = str(tmp_path_factory.mktemp("wh_torn"))
+    wh = v1_warehouse
     cfg = BuildConfig(
         warehouse=wh,
         similarity_method="exact",
         extraction_buckets=2,
         bucket_convs=8,
     )
-    build_all(spark, transcripts_df, cfg)
 
     v2_rows = [
         r for r in generate_transcripts(12) if r["conv_id"] != "conv-000003"
@@ -1316,7 +1270,7 @@ def test_journal_torn_swap_heals_and_recovers(
 
 
 def test_no_change_cycle_skips_journal_writes_and_reuses_communities(
-    spark, transcripts_df, tmp_path_factory, monkeypatch
+    spark, transcripts_df, v1_warehouse, monkeypatch
 ):
     """A steady-state cycle with zero detected changes takes the
     unchanged-source shortcut (the reference's early return,
@@ -1332,14 +1286,13 @@ def test_no_change_cycle_skips_journal_writes_and_reuses_communities(
     import graph_rag_agent_spark.operators.community as comm_mod
     import graph_rag_agent_spark.plans.incremental as incr_mod
 
-    wh = str(tmp_path_factory.mktemp("wh_nochange"))
+    wh = v1_warehouse
     cfg = BuildConfig(
         warehouse=wh,
         similarity_method="exact",
         extraction_buckets=2,
         bucket_convs=8,
     )
-    build_all(spark, transcripts_df, cfg)
     stored_members = {
         tuple(r) for r in spark.read.parquet(f"{wh}/membership").collect()
     }

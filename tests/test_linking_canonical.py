@@ -350,3 +350,63 @@ def test_degraded_knn_every_entity_queries(spark):
         assert {r["src"] for r in edges} & unsampled, (
             "unsampled entities must still query"
         )
+
+
+def test_link_catalog_driver_path_equals_distributed_chain(transcripts_df):
+    """link_catalog's driver pass and its distributed chain (every
+    driver fast path off) give the same four tables on the fixture
+    catalog: embeddings, similar pairs (scores to 1e-9), the wcc
+    partition and the canonical map."""
+    from graph_rag_agent_spark.operators.linking import link_catalog
+
+    chunks = chunk_conversations(transcripts_df)
+    parsed = parse_extractions(extract_chunks(chunks))
+    catalog = entity_catalog(entities_raw(parsed), chunks).cache()
+    driver = link_catalog(catalog, "exact")
+    dist = link_catalog(catalog, "exact", driver_threshold=0)
+    assert driver["embedded_rows"] is None and dist["embedded_rows"] is None
+    assert not driver["lsh_delta"] and not dist["lsh_delta"]
+
+    def cmap(out):
+        return {tuple(r) for r in out["canonical_map"].collect()}
+
+    def partition(out):
+        groups: dict = {}
+        for r in out["wcc"].collect():
+            groups.setdefault(r["wcc"], set()).add(r["entity_id"])
+        return {frozenset(g) for g in groups.values()}
+
+    def similar(out):
+        return {(r["src"], r["dst"]): r["score"] for r in out["similar"].collect()}
+
+    def embedded(out):
+        return {
+            r["entity_id"]: (r["entity_type"], r["description"], r["embedding"])
+            for r in out["embedded"].collect()
+        }
+
+    assert cmap(driver) and cmap(driver) == cmap(dist)
+    assert partition(driver) == partition(dist)
+    s_driver, s_dist = similar(driver), similar(dist)
+    assert s_driver and s_driver.keys() == s_dist.keys()
+    assert all(abs(s_driver[k] - s_dist[k]) <= 1e-9 for k in s_driver)
+    e_driver, e_dist = embedded(driver), embedded(dist)
+    assert e_driver.keys() == e_dist.keys()
+    for k, (etype, desc, vec) in e_driver.items():
+        assert e_dist[k][:2] == (etype, desc)
+        assert e_dist[k][2] == pytest.approx(vec, abs=1e-9)
+
+
+def test_plans_compose_no_linking_chain_of_their_own():
+    """The plans reach the linking operators only through
+    linking.link_catalog: none binds a chain operator of its own."""
+    import importlib
+
+    for mod in ("build", "incremental", "inmem", "benchjob"):
+        plan = importlib.import_module(f"graph_rag_agent_spark.plans.{mod}")
+        for name in (
+            "link_entities_driver_path",
+            "similar_entities",
+            "resolve_canonical",
+        ):
+            assert not hasattr(plan, name), f"plans.{mod}.{name}"

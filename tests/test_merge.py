@@ -208,7 +208,7 @@ def test_merge_source_duplicate_keys_last_write_is_deterministic(spark, table):
 
 
 def test_bucketed_incremental_merges_only_delta_partitions(
-    spark, transcripts_df, tmp_path_factory
+    spark, v1_warehouse, exact_build
 ):
     """Full cycle over a bucketed warehouse: build with
     BuildConfig.bucket_convs, change 2 of 12 conversations, run
@@ -218,18 +218,15 @@ def test_bucketed_incremental_merges_only_delta_partitions(
     from graph_rag_agent_spark import schemas
     from graph_rag_agent_spark.core.gen import generate_transcripts
     from graph_rag_agent_spark.oracle import oracle_build
-    from graph_rag_agent_spark.plans.build import BuildConfig, build_all
+    from graph_rag_agent_spark.plans.build import BuildConfig
     from graph_rag_agent_spark.plans.incremental import incremental_update
     from graph_rag_agent_spark.plans.merge import bucket_of, table_bucket_spec
 
-    wh = str(tmp_path_factory.mktemp("wh_bucketed"))
-    cfg = BuildConfig(
-        warehouse=wh,
-        similarity_method="exact",
-        extraction_buckets=2,
-        bucket_convs=N_BUCKETS,
-    )
-    res = build_all(spark, transcripts_df, cfg)
+    # the shared v1 build is BuildConfig(similarity_method="exact",
+    # extraction_buckets=2, bucket_convs=N_BUCKETS); this test cycles
+    # a private copy of it
+    wh = v1_warehouse
+    _, res = exact_build("v1")
     assert table_bucket_spec(os.path.join(wh, "chunks")) == {
         "key": "conv_id",
         "num_buckets": N_BUCKETS,
