@@ -309,6 +309,7 @@ def projection_components(
     )
 
 
+# No package caller; kept only because perfbench/tracing.py WRAPPED names it (drop both together).
 def localized_community_catalog(
     membership: DataFrame,
     dirty_entities: DataFrame,

@@ -40,13 +40,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import schemas
-from ..operators.canonicalize import (
-    canonical_entities,
-    rewrite_mentions,
-    rewrite_triples,
-)
+from ..operators.canonicalize import rewrite_mentions, rewrite_triples
 from ..operators.chunking import chunk_conversations
-from ..operators.community import community_catalog, detect_communities
 from ..operators.extraction import extract_chunks
 from ..operators.linking import entity_catalog, link_catalog
 from ..operators.parsing import (
@@ -99,10 +94,11 @@ def _run_parallel(tasks):
 
     if not tasks:
         return []
-    # cap 16: the widest pool (delta step 4+5) holds 10 conv-table
-    # merges + 2 index merges — one wave, not two; each task is a
-    # short chain of small jobs, so driver-thread count, not executor
-    # contention, is the binding resource
+    # cap 16: the widest pool (incremental._read_out_tables) holds 19
+    # table reads and the delta step 4+5 pool 7 conv-table merges + 2
+    # index merges; each task is a short chain of small jobs, so
+    # driver-thread count, not executor contention, is the binding
+    # resource
     with ThreadPoolExecutor(max_workers=min(16, len(tasks))) as ex:
         futures = [ex.submit(fn) for fn in tasks]
         return [f.result() for f in futures]
@@ -123,6 +119,19 @@ def entity_conv_pairs(
         .unionByName(m_raw.select("entity_id", "conv_id"))
         .distinct()
     )
+
+
+def canonical_entity_rows(
+    embedded: DataFrame, wcc: DataFrame, cmap: DataFrame
+) -> DataFrame:
+    """The ``entities`` table: the embedded catalog with its component
+    id, collapsed onto canonical ids. ``canonical_entities`` is looked
+    up at call time so wrappers installed on its module see the call."""
+    from ..operators import canonicalize
+
+    return canonicalize.canonical_entities(
+        embedded.join(wcc, "entity_id", "left"), cmap
+    ).select("entity_id", "entity_type", "description", "embedding", "wcc")
 
 
 @dataclass
@@ -173,21 +182,24 @@ def link_fingerprint(cfg) -> dict:
     """The linking-config fingerprint persisted beside canonical_map —
     the ONE place that decides which BuildConfig knobs the linking
     chain's output depends on. Every linking-table writer commits it
-    through ``wh.sidecar_window(LINK_PARAMS_FILE, link_fingerprint(cfg))``
-    and the catalog-unchanged reuse in plans/incremental.py compares
-    against the stored copy; adding a linking-relevant knob here
-    invalidates stale warehouses automatically at every call site."""
+    through ``wh.sidecar_window(LINK_PARAMS_FILE, link_fingerprint(cfg))``.
+    plans/incremental.py compares it against the stored copy to guard
+    the unchanged-source shortcut and to decide whether the committed
+    embeddings and similar rows may seed ``link_catalog`` as its
+    ``prior``; adding a linking-relevant knob here invalidates stale
+    warehouses automatically at every call site."""
     return {"similarity_method": cfg.similarity_method}
 
 
 def community_fingerprint(cfg) -> dict:
     """The community-config fingerprint persisted beside the community
     tables — the ONE place that decides which BuildConfig knobs the
-    detection output depends on. The no-change-cycle communities reuse
-    in plans/incremental.py compares against the stored copy; adding a
-    detection-relevant knob here invalidates stale warehouses
-    automatically. Implementation-semantics changes are covered by
-    FORMAT_VERSION, not this fingerprint."""
+    detection output depends on. write_communities commits it; the
+    unchanged-source shortcut in plans/incremental.py compares against
+    the stored copy, so adding a detection-relevant knob here
+    invalidates stale warehouses automatically.
+    Implementation-semantics changes are covered by FORMAT_VERSION,
+    not this fingerprint."""
     return {"max_levels": cfg.max_levels}
 
 
@@ -234,10 +246,11 @@ class _Warehouse:
         consistent once ALL of it is written — the four linking tables
         (sidecar LINK_PARAMS_FILE) or the community tables
         (COMMUNITY_PARAMS_FILE). The sidecar is the config fingerprint
-        the reuse probes compare against: it is removed on entry and
-        written with ``params`` after the body. A body that raises
-        leaves it absent, so every reuse probe declines for the whole
-        torn window instead of pairing fresh tables with stale ones."""
+        the unchanged-source shortcut and the linking ``prior``
+        compare against: it is removed on entry and written with
+        ``params`` after the body. A body that raises leaves it absent,
+        so both decline for the whole torn window instead of pairing
+        fresh tables with stale ones."""
         path = os.path.join(self.root, sidecar)
         fsio.remove(path)
         yield
@@ -252,16 +265,17 @@ class _Warehouse:
     def stored_community_params(self) -> dict | None:
         """Fingerprint persisted with the last completed community
         write, or None inside a torn write window / for a corrupt
-        sidecar — the safe direction: reuse is declined and detection
-        re-runs."""
+        sidecar — the safe direction: the unchanged-source shortcut is
+        declined and detection re-runs."""
         return self._stored_params(COMMUNITY_PARAMS_FILE)
 
     def stored_link_params(self) -> dict | None:
         """Fingerprint persisted with the last completed linking-table
         write, or None inside a torn linking write window. A
         corrupt/partial sidecar (crash mid-dump) also reads as None —
-        the safe direction: reuse is declined and the chain recomputes
-        (same fallback shape as merge.table_bucket_spec)."""
+        the safe direction: the unchanged-source shortcut is declined
+        and the chain recomputes without a ``prior`` (same fallback
+        shape as merge.table_bucket_spec)."""
         return self._stored_params(LINK_PARAMS_FILE)
 
     def write_format_version(self) -> None:
@@ -345,6 +359,50 @@ class _Warehouse:
         except Exception:
             return set()
         return {r["partition_id"] for r in rows}
+
+
+def community_tables(
+    entities: DataFrame,
+    triples: DataFrame,
+    mentions: DataFrame,
+    max_levels: int,
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """(membership, hierarchy, communities) of a canonical graph, each
+    local-checkpointed: detect_communities, then community_catalog.
+    Both operators are looked up on ``operators.community`` at call
+    time so wrappers installed on that module see every call."""
+    from ..operators import community
+
+    membership, hierarchy = community.detect_communities(
+        entities, triples, max_levels=max_levels
+    )
+    membership = membership.localCheckpoint()
+    hierarchy = hierarchy.localCheckpoint()
+    communities = community.community_catalog(
+        membership, entities, triples, mentions
+    ).localCheckpoint()
+    return membership, hierarchy, communities
+
+
+def write_communities(
+    wh: _Warehouse,
+    cfg: BuildConfig,
+    entities: DataFrame,
+    triples: DataFrame,
+    mentions: DataFrame,
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The community stage of build_all and of every incremental cycle:
+    one full detection over the stored graph, its membership, hierarchy
+    and communities committed inside one community sidecar window.
+    Returns the three tables as read back."""
+    tables = community_tables(entities, triples, mentions, cfg.max_levels)
+    names = ("membership", "hierarchy", "communities")
+    with wh.sidecar_window(COMMUNITY_PARAMS_FILE, community_fingerprint(cfg)):
+        return tuple(
+            _run_parallel(
+                [(lambda n=n, t=t: wh.write(t, n)) for n, t in zip(names, tables)]
+            )
+        )
 
 
 def _stage(
@@ -561,67 +619,44 @@ def build_all(
     )
     res.tables.update(triples=triples, mentions=mentions)
 
-    def _entities():
-        catalog_wcc = embedded.join(wcc, "entity_id", "left")
-        return canonical_entities(catalog_wcc, cmap).select(
-            "entity_id", "entity_type", "description", "embedding", "wcc"
-        )
-
-    entities = _stage(wh, "entities", cfg, _entities, "entity_id")
+    entities = _stage(
+        wh, "entities", cfg, lambda: canonical_entity_rows(embedded, wcc, cmap),
+        "entity_id",
+    )
     res.tables["entities"] = entities
 
-    # the community sidecar describes the detection params of the
-    # STORED tables: its window opens only when this run detects with
-    # cfg (a resume that reuses membership/hierarchy leaves whatever
-    # stamp — if any — the writing run left, which is the truthful one)
-    redetect = not (
-        cfg.resume and wh.exists("membership") and wh.exists("hierarchy")
+    # a resume keeps a complete community set; anything less re-detects
+    # and rewrites all three tables in one sidecar window
+    def _communities():
+        names = ("membership", "hierarchy", "communities")
+        if cfg.resume and all(wh.exists(n) for n in names):
+            return tuple(wh.read(n) for n in names)
+        t0 = time.time()
+        out = write_communities(wh, cfg, entities, triples, mentions)
+        wh.append_lineage("communities", -1, out[2].count(), t0, defer=True)
+        return out
+
+    # build stage 3 (reference build/build_chunk_index.py:101-172):
+    # chunk embeddings for the chunk vector index — one pandas-UDF pass
+    def _chunk_embeddings():
+        from ..operators.chunk_index import with_chunk_embeddings
+
+        return with_chunk_embeddings(chunks).select("chunk_id", "embedding")
+
+    (membership, hierarchy, communities), chunk_embeddings = _run_parallel(
+        [
+            _communities,
+            lambda: _stage(
+                wh, "chunk_embeddings", cfg, _chunk_embeddings, "chunk_id"
+            ),
+        ]
     )
-    with (
-        wh.sidecar_window(COMMUNITY_PARAMS_FILE, community_fingerprint(cfg))
-        if redetect
-        else nullcontext()
-    ):
-        if redetect:
-            t0 = time.time()
-            membership, hierarchy = detect_communities(
-                entities, triples, max_levels=cfg.max_levels
-            )
-            membership, hierarchy = _run_parallel([
-                lambda: wh.write(membership, "membership"),
-                lambda: wh.write(hierarchy, "hierarchy"),
-            ])
-            wh.append_lineage(
-                "membership", -1, membership.count(), t0, defer=True
-            )
-        else:
-            membership, hierarchy = wh.read("membership"), wh.read("hierarchy")
-        res.tables.update(membership=membership, hierarchy=hierarchy)
-
-        # build stage 3 (reference build/build_chunk_index.py:101-172):
-        # chunk embeddings for the chunk vector index — one pandas-UDF pass
-        def _chunk_embeddings():
-            from ..operators.chunk_index import with_chunk_embeddings
-
-            return with_chunk_embeddings(chunks).select("chunk_id", "embedding")
-
-        communities, chunk_embeddings = _run_parallel(
-            [
-                lambda: _stage(
-                    wh,
-                    "communities",
-                    cfg,
-                    lambda: community_catalog(
-                        membership, entities, triples, mentions
-                    ),
-                ),
-                lambda: _stage(
-                    wh, "chunk_embeddings", cfg, _chunk_embeddings, "chunk_id"
-                ),
-            ]
-        )
-    res.tables["communities"] = communities
-    res.tables["chunk_embeddings"] = chunk_embeddings
+    res.tables.update(
+        membership=membership,
+        hierarchy=hierarchy,
+        communities=communities,
+        chunk_embeddings=chunk_embeddings,
+    )
 
     wh.flush_lineage()
     res.metrics["build_seconds"] = time.time() - t_start

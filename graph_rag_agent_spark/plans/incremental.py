@@ -24,10 +24,11 @@ incremental_graph_builder.py:880-958 + incremental/file_change_manager
      conv-keyed MERGE of the changed conversations; the canonical
      triples / mentions / entities are re-pointed only where the
      canonical map or a contributing conversation changed, found via
-     the entity→conv and chunk→conv inverted indexes; linking and
-     community stages reuse their stored state when their inputs did
-     not move and otherwise run one full recompute each — the same
-     operators build_all runs.
+     the entity→conv and chunk→conv inverted indexes; linking reuses
+     its stored tables when the entity catalog did not move and
+     otherwise runs one full recompute (``link_catalog``, as
+     build_all); community detection runs one full recompute on every
+     cycle with work (build.write_communities, shared with build_all).
      Warehouses in any older format are rejected and rebuilt with
      ``build_all(resume=False)``.
 """
@@ -42,15 +43,16 @@ from pyspark.sql import functions as F
 from ..sources.transcripts import conversation_registry
 from . import fsio
 from .build import (
-    COMMUNITY_PARAMS_FILE,
     LINK_PARAMS_FILE,
     WAREHOUSE_TABLES,
     BuildConfig,
     _run_parallel,
     _Warehouse,
+    canonical_entity_rows,
     community_fingerprint,
     entity_conv_pairs,
     link_fingerprint,
+    write_communities,
 )
 
 
@@ -142,16 +144,14 @@ def incremental_update(
     catalog aggregate, one full recompute per global stage — connected
     components + canonical resolve over the similarity graph, and
     community detection over the (entity-scale) graph, the same
-    operators build_all runs — and the community-rank countDistinct
-    over mentions. When the rebuilt catalog is bit-identical to the
-    stored one, even the linking recompute is skipped
+    code build_all runs — and the community-rank countDistinct over
+    mentions. When the rebuilt catalog is bit-identical to the stored
+    one, the linking recompute is skipped
     (_stored_linking_if_catalog_unchanged — the chain is deterministic
-    in the catalog, so the stored tables ARE its output); when the
-    entity id set and triple key set are unchanged, detection is
-    skipped and only the communities holding a dirty entity
-    re-summarize; and when the SOURCE is bit-identical (zero detected
-    changes, no surviving journal, config sidecars matching), the
-    whole cycle is the reference's early return
+    in the catalog, so the stored tables ARE its output); and when the
+    SOURCE is bit-identical (zero detected changes, no surviving
+    journal, config sidecars matching), the whole cycle is the
+    reference's early return
     (incremental_graph_builder.py:903-905): change detection +
     metadata probes, then the stored tables (step 1.5). Entity-scale
     side tables are delta-MERGEd where their rows have stable keys
@@ -180,23 +180,21 @@ def incremental_update(
     wh = _Warehouse(spark, warehouse)
     wh.check_format()
     link_params = link_fingerprint(cfg)
+    # each config sidecar is read once per cycle: the link sidecar
+    # guards step 1.5 and the linking reuse (step 6), the community
+    # sidecar only step 1.5
+    link_sidecar_ok = wh.stored_link_params() == link_params
 
     import time as _time
 
     from ..operators.canonicalize import (
         TRIPLE_KEY_COL,
-        canonical_entities,
         rewrite_mentions,
         rewrite_triples,
         with_triple_key,
     )
     from ..operators.chunk_index import with_chunk_embeddings
     from ..operators.chunking import chunk_conversations
-    from ..operators.community import (
-        community_catalog,
-        detect_communities,
-        localized_community_catalog,
-    )
     from ..operators.extraction import extract_chunks
     from ..operators.linking import entity_catalog, link_catalog
     from ..operators.parsing import (
@@ -230,7 +228,7 @@ def incremental_update(
     # warehouse IS this cycle's output. A polling stream that finds a
     # quiet source pays change detection + metadata probes — nothing
     # else (no empty-frame chunk/extract/merge jobs, no catalog scan,
-    # no EXCEPT probes). Any guard failing falls through to the normal
+    # no EXCEPT probe). Any guard failing falls through to the normal
     # path, which handles partial reuse stage by stage.
     # The stale probe (one limit(1) job) and the journal probes run once
     # here and are reused by step 3.5.
@@ -241,7 +239,7 @@ def incremental_update(
     if (
         not has_new_obligations
         and not journal_on_disk
-        and wh.stored_link_params() == link_params
+        and link_sidecar_ok
         and wh.stored_community_params() == community_fingerprint(cfg)
         and all(wh.exists(n) for n in WAREHOUSE_TABLES)
     ):
@@ -512,13 +510,14 @@ def incremental_update(
     # → CC → resolve) is a DETERMINISTIC pure function of the
     # (entity_id, entity_type, description) catalog, so when a cycle
     # leaves the catalog bit-identical to the stored one (re-delivered
-    # data; edits that only move mentions around existing entities),
-    # the stored similar/wcc/canonical_map ARE the chain's output —
-    # reuse them and skip the catalog-proportional recompute. Two
-    # entity-scale EXCEPT probes decide; any table missing or any
-    # difference falls through to the full chain.
+    # data; edits that only move mentions around existing entities, as
+    # in 2 of the 10 seeded perfbench delta_refresh deltas), the stored
+    # similar/wcc/canonical_map ARE the chain's output — reuse them and
+    # skip the catalog-proportional recompute. One entity-scale EXCEPT
+    # probe decides; any table missing or any difference falls through
+    # to the full chain.
     stored, link_reused = _stored_linking_if_catalog_unchanged(
-        wh, catalog, link_params
+        wh, catalog, link_sidecar_ok
     )
     if link_reused:
         embedded, similar, wcc, cmap = _run_parallel(
@@ -580,24 +579,6 @@ def incremental_update(
     # target tables, read-only sharing of the merged raw tables and
     # indexes) run from one driver-thread pool -------------------------
 
-    # community detection is a pure function of (entity id set,
-    # triple (s,p,o) key set, max_levels) — projection weight is
-    # COUNT over keys, nodes are entity ids (detect_communities).
-    # The rewrite tasks therefore record whether those two inputs
-    # actually changed (delta-sized set diffs computed against the
-    # PRE-upsert store), so the communities section can keep the
-    # stored membership/hierarchy and recompute only the
-    # mentions-dependent catalog. _run_parallel re-raises any task
-    # failure, so every entry is set once the pool returns.
-    detection_input_changed: dict[str, bool] = {}
-    # delta-sized canonical entity ids whose community catalog rows may
-    # differ — the detection-reuse branch re-summarizes only their
-    # communities. Checkpointed by their writers:
-    #   triples_scope_entities — canon endpoints of affected keys
-    #   changed_entity_rows    — ids whose entity row changed
-    #   mention_entities       — ids whose mention rows may differ
-    delta_scope: dict[str, DataFrame] = {}
-
     def _rewrite_mentions_task():
         m_raw_delta = read_pruned(spark, wh.path("mentions_raw"), delta_convs)
         chunks_repointed = m_raw_delta.join(
@@ -619,18 +600,6 @@ def incremental_update(
         mentions_delta = ck(rewrite_mentions(m_contrib, cmap))
         wh.append_lineage(
             "incr_mentions_rewrite", -1, mentions_delta.count(), t0, defer=True
-        )
-        # canonical entities whose mention rows may differ after the
-        # upsert: anything in the pre-merge slice of the affected
-        # chunks ∪ anything in the delta (superset is fine — the
-        # detection-reuse catalog recomputes their communities'
-        # rank). Materialized BEFORE the upsert destroys the old
-        # slice; bounded by the affected-chunk footprint.
-        delta_scope["mention_entities"] = ck(
-            read_pruned(spark, wh.path("mentions"), affected_chunks)
-            .select("entity_id")
-            .union(mentions_delta.select("entity_id"))
-            .distinct()
         )
         upsert_groups(
             spark, wh.path("mentions"), mentions_delta, affected_chunks,
@@ -682,36 +651,12 @@ def incremental_update(
             "incr_triples_rewrite", -1, triples_delta.count(), t0, defer=True
         )
         stale_tkeys = with_triple_key(affected_keys).select(TRIPLE_KEY_COL)
-        # delta-sized key-set diff BEFORE the upsert: outside the
-        # affected scope keys are untouched by construction, so scope
-        # equality ⇔ global (s,p,o) set equality. Keys are unique per
-        # row on both sides (winner rows), so the anti-joins ARE the
-        # multiset diff.
-        old_scope = ck(
-            read_pruned(spark, wh.path("triples"), stale_tkeys).select(
-                TRIPLE_KEY_COL
-            )
-        )
-        new_scope = triples_delta.select(TRIPLE_KEY_COL)
-        delta_scope["triples_scope_entities"] = ck(aff_canon)
-        detection_input_changed["triples"] = (
-            old_scope.join(new_scope, TRIPLE_KEY_COL, "left_anti")
-            .union(new_scope.join(old_scope, TRIPLE_KEY_COL, "left_anti"))
-            .limit(1)
-            .count()
-            > 0
-        )
         upsert_groups(
             spark, wh.path("triples"), triples_delta, stale_tkeys, TRIPLE_KEY_COL
         )
 
     def _merge_entities_task():
-        ent_cols = ["entity_id", "entity_type", "description", "embedding", "wcc"]
-        entities_full = ck(
-            canonical_entities(
-                embedded.join(wcc, "entity_id", "left"), cmap
-            ).select(*ent_cols)
-        )
+        entities_full = ck(canonical_entity_rows(embedded, wcc, cmap))
 
         changed_keys, removed_ids = _changed_and_removed_keys(
             old_entities, entities_full, "entity_id"
@@ -719,16 +664,8 @@ def incremental_update(
         changed_rows = ck(
             entities_full.join(changed_keys, "entity_id", "left_semi")
         )
-        changed_ids = changed_rows.select("entity_id")
-        stale_ent_ids = ck(changed_ids.union(removed_ids).distinct())
-        # id-SET diff (changed_rows may be description/embedding-only
-        # updates, which don't move community detection)
-        added_ids = changed_ids.join(
-            old_entities.select("entity_id"), "entity_id", "left_anti"
-        )
-        delta_scope["changed_entity_rows"] = ck(changed_ids)
-        detection_input_changed["entities"] = (
-            added_ids.union(removed_ids).limit(1).count() > 0
+        stale_ent_ids = ck(
+            changed_rows.select("entity_id").union(removed_ids).distinct()
         )
         t0 = _time.time()
         upsert_groups(
@@ -800,9 +737,10 @@ def incremental_update(
     #
     # One sidecar window (the torn-window guard): the link-params
     # sidecar is removed BEFORE the first side-table write and written
-    # only after canonical_map lands — sequentially LAST, so the
-    # catalog-unchanged reuse probe declines for any crash inside the
-    # window instead of pairing new embeddings with a stale map.
+    # only after canonical_map lands — sequentially LAST, so for any
+    # crash inside the window the retry declines the step-1.5 shortcut
+    # and the catalog-unchanged reuse probe instead of pairing new
+    # embeddings with a stale map.
     def _merge_side_table(df_new, name: str, key: str, lineage_stage: str):
         from .merge import table_bucket_spec
 
@@ -845,83 +783,12 @@ def incremental_update(
                 cmap, "canonical_map", "entity_id", "incr_cmap_merge"
             )
 
-    # Community detection is reused when the rewrite tasks proved the
-    # entity ID set and the triple (s,p,o) key set both unchanged —
-    # membership/hierarchy are a pure function of exactly those inputs
-    # (+ max_levels), so only the mentions/description-dependent
-    # community CATALOG recomputes, and only for communities holding a
-    # dirty entity (stored rows stand in for the rest; their
-    # summary_created_at keeps the writing cycle's stamp). The
-    # corpus-proportional detection loop — the largest remaining
-    # non-delta cost of a small-delta cycle — is skipped.
-    # journal_on_disk guard: after a crash BETWEEN the triple upsert
-    # and the communities write, the retry's key diff reads the
-    # already-updated store as "unchanged" while the stored membership
-    # still reflects the pre-crash key set — a surviving journal is
-    # exactly the marker of that window, so it declines detection
-    # reuse (the community sidecar alone can't: the crashed cycle may
-    # never have reached its invalidation). Otherwise detection runs
-    # in full, as in build_all.
-    detection_reusable = (
-        not journal_on_disk
-        and not detection_input_changed["triples"]
-        and not detection_input_changed["entities"]
-        and wh.stored_community_params() == community_fingerprint(cfg)
-        and all(
-            wh.exists(t) for t in ("membership", "hierarchy", "communities")
-        )
+    # ---- 13. community detection: one full recompute over the
+    # upserted graph, committed in one sidecar window (build_all's
+    # community stage) -----------------------------------------------
+    write_communities(
+        wh, cfg, wh.read("entities"), wh.read("triples"), wh.read("mentions")
     )
-    entities_tbl = wh.read("entities")
-    triples_tbl = wh.read("triples")
-    mentions_tbl = wh.read("mentions")
-    if detection_reusable:
-        membership = ck(wh.read("membership"))
-        dirty_entities = ck(
-            delta_scope["changed_entity_rows"]
-            .union(delta_scope["mention_entities"])
-            .union(delta_scope["triples_scope_entities"])
-            .distinct()
-        )
-        communities = ck(
-            localized_community_catalog(
-                membership,
-                dirty_entities,
-                ck(wh.read("communities")),
-                entities_tbl,
-                triples_tbl,
-                mentions_tbl,
-            )
-        )
-        # same torn-window guard as the full path: a crash mid-write
-        # declines every community reuse on retry
-        with wh.sidecar_window(
-            COMMUNITY_PARAMS_FILE, community_fingerprint(cfg)
-        ):
-            wh.write(communities, "communities")
-        wh.append_lineage(
-            "incr_detection_reused", -1, 1, _time.time(), defer=True
-        )
-    else:
-        membership, hierarchy = detect_communities(
-            entities_tbl, triples_tbl, max_levels=cfg.max_levels
-        )
-        membership = ck(membership)
-        hierarchy = ck(hierarchy)
-        communities = ck(
-            community_catalog(
-                membership, entities_tbl, triples_tbl, mentions_tbl
-            )
-        )
-        with wh.sidecar_window(
-            COMMUNITY_PARAMS_FILE, community_fingerprint(cfg)
-        ):
-            _run_parallel(
-                [
-                    lambda: wh.write(membership, "membership"),
-                    lambda: wh.write(hierarchy, "hierarchy"),
-                    lambda: wh.write(communities, "communities"),
-                ]
-            )
 
     wh.flush_lineage()
     # every table is committed — the rewrite obligations are met, so
@@ -952,13 +819,14 @@ def _read_out_tables(wh) -> dict[str, DataFrame]:
 
 
 def _stored_linking_if_catalog_unchanged(
-    wh, catalog: DataFrame, link_params: dict
+    wh, catalog: DataFrame, link_sidecar_ok: bool
 ) -> tuple[dict[str, DataFrame] | None, bool]:
     """(stored, unchanged): the committed linking tables {name: frame}
     in chain order — entity_embeddings, similar, wcc, canonical_map —
-    (None when the link-params sidecar does not match ``link_params``
-    or a table is missing) and whether the merged entity catalog is
-    BIT-IDENTICAL to the stored one.
+    (None when ``link_sidecar_ok`` is False — the link-params sidecar
+    does not match this cycle's config — or a table is missing) and
+    whether the merged entity catalog is BIT-IDENTICAL to the stored
+    one.
 
     Soundness: every stage of the linking chain — the embedding stub,
     hyperplane-LSH banding (fixed seed), candidate scoring, connected
@@ -967,16 +835,15 @@ def _stored_linking_if_catalog_unchanged(
     (README "Determinism as a contract") PLUS the linking config, so
     identical (catalog, config) pairs produce identical outputs and
     the stored tables can stand in for the recompute. The config half
-    is checked against the _link_params.json sidecar committed with
-    every linking-table write — a warehouse built under a different
-    similarity_method (or inside a torn write window) declines reuse
-    and falls through to the full chain. The probe costs two
-    entity-scale EXCEPT jobs — cheap next to the LSH shuffle + CC loop
-    it skips. Any difference (including entity count) reads as
-    changed.
+    is the _link_params.json sidecar committed with every linking-table
+    write — a warehouse built under a different similarity_method (or
+    inside a torn write window) declines reuse and falls through to the
+    full chain. The probe costs one entity-scale EXCEPT job — cheap
+    next to the chain it skips. Any difference (including entity
+    count) reads as changed.
     """
     cols = ["entity_id", "entity_type", "description"]
-    if wh.stored_link_params() != link_params:
+    if not link_sidecar_ok:
         return None, False
     try:
         stored = {

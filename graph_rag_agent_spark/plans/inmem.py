@@ -8,13 +8,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from ..operators.canonicalize import (
-    canonical_entities,
-    rewrite_mentions,
-    rewrite_triples,
-)
+from ..operators.canonicalize import rewrite_mentions, rewrite_triples
 from ..operators.chunking import chunk_conversations
-from ..operators.community import community_catalog, detect_communities
 from ..operators.extraction import extract_chunks
 from ..operators.linking import entity_catalog, link_catalog
 from ..operators.parsing import (
@@ -23,6 +18,7 @@ from ..operators.parsing import (
     parse_extractions,
     triples_raw,
 )
+from .build import canonical_entity_rows, community_tables
 
 
 def build_kg_tables(
@@ -54,9 +50,7 @@ def build_kg_tables(
 
     triples = rewrite_triples(t_raw, cmap)
     mentions = rewrite_mentions(m_raw, cmap)
-    entities = canonical_entities(embedded.join(wcc, "entity_id", "left"), cmap).select(
-        "entity_id", "entity_type", "description", "embedding", "wcc"
-    )
+    entities = canonical_entity_rows(embedded, wcc, cmap)
 
     tables = {
         "chunks": chunks,
@@ -72,12 +66,7 @@ def build_kg_tables(
     if with_communities:
         triples = triples.localCheckpoint()
         entities = entities.localCheckpoint()
-        membership, hierarchy = detect_communities(
-            entities, triples, max_levels=max_levels
-        )
-        tables["membership"] = membership
-        tables["hierarchy"] = hierarchy
-        tables["communities"] = community_catalog(
-            membership, entities, triples, mentions
+        tables["membership"], tables["hierarchy"], tables["communities"] = (
+            community_tables(entities, triples, mentions, max_levels)
         )
     return tables

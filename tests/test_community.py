@@ -141,3 +141,21 @@ def test_edge_guard_routes_dense_graph_to_distributed_loop(spark):
     assert {tuple(r) for r in h_dist.collect()} == {
         tuple(r) for r in h_drv.collect()
     }
+
+
+def test_plans_bind_no_community_operator_of_their_own():
+    """The plans reach detection and the entity-row collapse only
+    through plans.build.community_tables / canonical_entity_rows, which
+    look the operators up at call time: no plan binds one of its own,
+    so a wrapper installed on the operator module sees every call."""
+    import importlib
+
+    for mod in ("build", "incremental", "inmem"):
+        plan = importlib.import_module(f"graph_rag_agent_spark.plans.{mod}")
+        for name in (
+            "detect_communities",
+            "community_catalog",
+            "localized_community_catalog",
+            "canonical_entities",
+        ):
+            assert not hasattr(plan, name), f"plans.{mod}.{name}"
