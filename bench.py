@@ -255,7 +255,7 @@ def main() -> None:
     # wall-clock companion to the lineage delta-proportionality proof.
     # Bootstrap build_all is the untimed one-time cost; the timed row
     # is one incremental cycle (detection → conv MERGEs → link →
-    # delta re-winnering → side-table delta-MERGE) and should sit far
+    # delta re-winnering → whole entity-scale tables) and should sit far
     # under kg_build_synthetic.
     def delta_cycle():
         import shutil

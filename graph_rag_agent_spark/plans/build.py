@@ -63,14 +63,14 @@ class BuildConfig:
     max_levels: int = 3
     extractor: object = None  # None → deterministic stub
     fail_after_bucket: int | None = None  # test hook: simulate a crash
-    # bucket count of the warehouse's one layout: every per-key table
-    # (per-conversation tables by conv_id, the inverted indexes,
-    # entity-scale side tables, triples by triple key, mentions and
-    # chunk embeddings by chunk id) is stored bucket-partitioned so an
-    # incremental cycle MERGEs only the delta-touched partitions
-    # (plans/merge.py) — Iceberg's bucket transform is the managed
-    # equivalent. Warehouses written in any other layout must be
-    # rebuilt (FORMAT_VERSION).
+    # bucket count of the warehouse's one layout: every corpus-scale
+    # table (per-conversation tables by conv_id, the inverted indexes,
+    # triples by triple key, mentions and chunk embeddings by chunk id)
+    # is stored bucket-partitioned so an incremental cycle MERGEs only
+    # the delta-touched partitions (plans/merge.py) — Iceberg's bucket
+    # transform is the managed equivalent. Entity-scale tables are
+    # recomputed in full every cycle and written whole. Warehouses
+    # written in any other layout must be rebuilt (FORMAT_VERSION).
     bucket_convs: int = 8
 
     def __post_init__(self):
@@ -95,8 +95,9 @@ def _run_parallel(tasks):
     if not tasks:
         return []
     # cap 16: the widest pool (incremental._read_out_tables) holds 19
-    # table reads and the delta step 4+5 pool 7 conv-table merges + 2
-    # index merges; each task is a short chain of small jobs, so
+    # table reads, the delta step 4+5 pool 7 conv-table merges + 2
+    # index merges and the step-11 pool the 4 linking-table writes;
+    # each task is a short chain of small jobs, so
     # driver-thread count, not executor contention, is the binding
     # resource
     with ThreadPoolExecutor(max_workers=min(16, len(tasks))) as ex:
@@ -145,12 +146,15 @@ LINK_PARAMS_FILE = "_link_params.json"
 COMMUNITY_PARAMS_FILE = "_community_params.json"
 
 FORMAT_FILE = "_format_version.json"
-# 3: bucketed + conv-complete — every per-key table is bucket-
+# 3: bucketed + conv-complete — every corpus-scale table is bucket-
 #    partitioned (BuildConfig.bucket_convs) with the triple-key /
 #    entity→conv / chunk→conv layout the incremental cycle MERGEs
 #    into, and mentions_raw holds one row per CONTRIBUTING conv for a
-#    shared content-hash chunk (operators/parsing.mentions_raw)
+#    shared content-hash chunk (operators/parsing.mentions_raw). The
+#    entity-scale tables are read whole, bucketed or plain alike.
 FORMAT_VERSION = 3
+
+NEXT_SUFFIX = "__next"  # the sibling _Warehouse.overwrite swaps in
 
 # the tables of a warehouse (build_all writes them all; an incremental
 # cycle returns them all) — a directory holding any of them is a
@@ -176,6 +180,16 @@ WAREHOUSE_TABLES = (
     "communities",
     "chunk_embeddings",
 )
+
+# the rewrite-intent journal of an incremental cycle (plans/
+# incremental.py step 3.5): the delta-proportional obligations a retry
+# needs after the conv merges have destroyed the pre-merge evidence
+# and the registry has committed
+JOURNAL_TABLES = {
+    "pending_rewrite_convs": "conv_id string",
+    "pending_rewrite_tkeys": "subj string, pred string, obj string",
+    "pending_rewrite_chunks": "chunk_id string",
+}
 
 
 def link_fingerprint(cfg) -> dict:
@@ -237,20 +251,64 @@ class _Warehouse:
 
             write_bucketed(df, self.path(name), group_key, num_buckets)
         else:
-            df.write.mode("overwrite").parquet(self.path(name))
+            self.overwrite(df, name)
         return self.read(name)
+
+    def overwrite(self, df: DataFrame, name: str) -> None:
+        """Crash-safe whole-table overwrite: write ``<name>__next``,
+        remove ``<name>``, rename ``__next`` into place. A plain Spark
+        overwrite deletes first, so a crash mid-write leaves no readable
+        files; here a crash leaves the old table intact or a complete
+        ``__next`` that heal() promotes."""
+        path = self.path(name)
+        df.write.mode("overwrite").parquet(path + NEXT_SUFFIX)
+        fsio.rmtree(path)
+        fsio.rename(path + NEXT_SUFFIX, path)
+
+    def heal(self) -> set[str]:
+        """Finish every overwrite a crash interrupted: one root listing,
+        and each complete ``__next`` (its _SUCCESS exists) replaces its
+        table. A complete sibling is always the newer generation, since
+        overwrite() swaps it in right after writing it. Returns the
+        root's entry names, promoted tables included."""
+        names = set(fsio.listdir(self.root))
+        for nxt in sorted(n for n in names if n.endswith(NEXT_SUFFIX)):
+            name = nxt[: -len(NEXT_SUFFIX)]
+            if fsio.exists(os.path.join(self.path(nxt), "_SUCCESS")):
+                fsio.rmtree(self.path(name))
+                fsio.rename(self.path(nxt), self.path(name))
+                names.add(name)
+        return names
+
+    def clear_build_outputs(self) -> None:
+        """Remove what build_all and incremental_update write, so a
+        fresh build cannot resume into an older build's tables,
+        lineage or extraction cache. The format stamp goes first: a
+        crash inside this loop leaves an unstamped warehouse that every
+        reader refuses. The streaming sinks' turn_log and
+        closed_sessions are kept."""
+        fsio.remove(self.path(FORMAT_FILE))
+        for name in WAREHOUSE_TABLES + tuple(JOURNAL_TABLES) + (
+            "entity_conv_index", "chunk_conv_index", "lineage",
+            "extraction_cache",
+        ):
+            fsio.rmtree(self.path(name))
+            fsio.rmtree(self.path(name) + NEXT_SUFFIX)
+        for sidecar in (LINK_PARAMS_FILE, COMMUNITY_PARAMS_FILE):
+            fsio.remove(self.path(sidecar))
 
     @contextmanager
     def sidecar_window(self, sidecar: str, params: dict):
-        """Overwrite window of a table set that is only mutually
+        """Commit window of a table set that is only mutually
         consistent once ALL of it is written — the four linking tables
         (sidecar LINK_PARAMS_FILE) or the community tables
-        (COMMUNITY_PARAMS_FILE). The sidecar is the config fingerprint
-        the unchanged-source shortcut and the linking ``prior``
-        compare against: it is removed on entry and written with
-        ``params`` after the body. A body that raises leaves it absent,
-        so both decline for the whole torn window instead of pairing
-        fresh tables with stale ones."""
+        (COMMUNITY_PARAMS_FILE). Each table write is itself crash-safe
+        (overwrite); the window covers the set. The sidecar is the
+        config fingerprint the unchanged-source shortcut and the
+        linking ``prior`` compare against: it is removed on entry and
+        written with ``params`` after the body. A body that raises
+        leaves it absent, so both decline for the whole torn window
+        instead of pairing fresh tables with stale ones."""
         path = os.path.join(self.root, sidecar)
         fsio.remove(path)
         yield
@@ -413,9 +471,10 @@ def _stage(
     key: str | None = None,
 ) -> DataFrame:
     """Materialize-or-reuse one stage; lineage row on compute. ``key``
-    names the bucket key of a per-key table (None: plain overwrite
-    table — wcc and the community tables, whose dense numbering has no
-    stable per-key identity).
+    names the bucket key of a corpus-scale table that incremental
+    cycles MERGE into. None writes the table whole through the
+    crash-safe overwrite: the entity-scale tables (linking, entities,
+    communities) are recomputed in full, so they are written whole.
 
     Stage lineage is deferred (one batched write at the end of
     build_all): resume() keys off each table's _SUCCESS marker, not
@@ -439,12 +498,8 @@ def _extraction_stage(
         return wh.read(name)
 
     cache_path = wh.path("extraction_cache")
-    done = wh.completed_partitions("extract") if cfg.resume else set()
-    if not cfg.resume and fsio.exists(cache_path):
-        # fresh rebuild must not reuse a stale cache: a changed
-        # extractor/config would otherwise survive via the
-        # dropDuplicates(chunk_id) pick (nondeterministic winner)
-        fsio.rmtree(cache_path)
+    # a fresh build cleared the lineage and the cache (build_all)
+    done = wh.completed_partitions("extract")
     cache = None
     if fsio.exists(cache_path):
         try:
@@ -498,11 +553,12 @@ def build_all(
     t_start = time.time()
 
     # a resume continues only a current-format warehouse; anything else
-    # is stamped BEFORE its first table, so a killed fresh build
-    # resumes under the stamp it started with
+    # loses the previous build's outputs and is stamped BEFORE its first
+    # table, so a killed fresh build resumes only into its own tables
     if cfg.resume and wh.holds_tables():
         wh.check_format()
     else:
+        wh.clear_build_outputs()
         wh.write_format_version()
 
     transcripts = _stage(wh, "transcripts", cfg, lambda: transcripts, "conv_id")
@@ -570,12 +626,8 @@ def build_all(
 
     # linking: one link_catalog call (driver pass for a small catalog,
     # else the distributed chain), computed only if a stage below
-    # needs it. entity_embeddings / similar / canonical_map are
-    # bucketed so incremental cycles can MERGE their deltas instead of
-    # overwriting O(catalog) bytes per cycle; wcc stays an overwrite —
-    # its dense component numbering is a global renumbering, so its
-    # rows have no stable per-key identity to merge on (and it is the
-    # smallest of the four)
+    # needs it. Its four tables are entity-scale and recomputed in full
+    # by every cycle, so they are written whole
     @functools.cache
     def _linked():
         return link_catalog(entity_catalog(e_raw, chunks), cfg.similarity_method)
@@ -590,14 +642,12 @@ def build_all(
         else nullcontext()
     ):
         embedded = _stage(
-            wh, "entity_embeddings", cfg, lambda: _linked()["embedded"],
-            "entity_id",
+            wh, "entity_embeddings", cfg, lambda: _linked()["embedded"]
         )
-        similar = _stage(wh, "similar", cfg, lambda: _linked()["similar"], "src")
+        similar = _stage(wh, "similar", cfg, lambda: _linked()["similar"])
         wcc = _stage(wh, "wcc", cfg, lambda: _linked()["wcc"])
         cmap = _stage(
-            wh, "canonical_map", cfg, lambda: _linked()["canonical_map"],
-            "entity_id",
+            wh, "canonical_map", cfg, lambda: _linked()["canonical_map"]
         )
     res.tables["similar"] = similar
     res.tables["canonical_map"] = cmap
@@ -620,8 +670,7 @@ def build_all(
     res.tables.update(triples=triples, mentions=mentions)
 
     entities = _stage(
-        wh, "entities", cfg, lambda: canonical_entity_rows(embedded, wcc, cmap),
-        "entity_id",
+        wh, "entities", cfg, lambda: canonical_entity_rows(embedded, wcc, cmap)
     )
     res.tables["entities"] = entities
 

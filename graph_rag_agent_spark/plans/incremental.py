@@ -22,20 +22,21 @@ incremental_graph_builder.py:880-958 + incremental/file_change_manager
      per-key tables, build.FORMAT_VERSION 3) and ONE cycle
      (``incremental_update``). Per-conversation tables take a
      conv-keyed MERGE of the changed conversations; the canonical
-     triples / mentions / entities are re-pointed only where the
-     canonical map or a contributing conversation changed, found via
-     the entity→conv and chunk→conv inverted indexes; linking reuses
-     its stored tables when the entity catalog did not move and
-     otherwise runs one full recompute (``link_catalog``, as
-     build_all); community detection runs one full recompute on every
-     cycle with work (build.write_communities, shared with build_all).
-     Warehouses in any older format are rejected and rebuilt with
+     triples / mentions are re-pointed only where the canonical map or
+     a contributing conversation changed, found via the entity→conv
+     and chunk→conv inverted indexes; linking reuses its stored tables
+     when the entity catalog did not move and otherwise runs one full
+     recompute (``link_catalog``, as build_all); community detection
+     runs one full recompute on every cycle with work
+     (build.write_communities, shared with build_all). The
+     entity-scale tables (linking, entities, communities) are
+     recomputed in full, so they are written whole, each through the
+     crash-safe overwrite (build._Warehouse.overwrite). Warehouses in
+     any older format are rejected and rebuilt with
      ``build_all(resume=False)``.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -43,7 +44,9 @@ from pyspark.sql import functions as F
 from ..sources.transcripts import conversation_registry
 from . import fsio
 from .build import (
+    JOURNAL_TABLES,
     LINK_PARAMS_FILE,
+    NEXT_SUFFIX,
     WAREHOUSE_TABLES,
     BuildConfig,
     _run_parallel,
@@ -128,8 +131,6 @@ def incremental_update(
         index → pruned read), MERGEd by triple key.
       * mentions: recomputed ONLY for affected chunks (shared-chunk
         contributors via the chunk→conv index), MERGEd by chunk id.
-      * entities: new catalog diffed against stored — only changed/
-        removed rows MERGEd by entity id.
       * chunk embeddings: pruned-reuse + chunk-keyed upsert; rows for
         vanished content-hash chunks are left as orphans (content ids
         are shared across conversations — reclaiming them needs a
@@ -153,14 +154,14 @@ def incremental_update(
     journal, config sidecars matching), the whole cycle is the
     reference's early return
     (incremental_graph_builder.py:903-905): change detection +
-    metadata probes, then the stored tables (step 1.5). Entity-scale
-    side tables are delta-MERGEd where their rows have stable keys
-    (entity_embeddings / similar / canonical_map — diff vs stored,
-    bucket-pruned upsert of changed/removed keys only); wcc and the
-    community tables are overwritten (dense/global numbering has no
-    stable per-key identity) — all catalog-proportional at worst,
-    never corpus-proportional; entity EMBEDDING compute (the LLM
-    boundary) is delta-only via (entity_id, description) reuse.
+    metadata probes, then the stored tables (step 1.5). The
+    entity-scale tables — entity_embeddings, similar, wcc,
+    canonical_map, entities and the community tables — are recomputed
+    in full, so they are written whole (catalog-proportional, never
+    corpus-proportional), each through the crash-safe overwrite whose
+    interrupted swaps the next cycle finishes first
+    (_Warehouse.heal); entity EMBEDDING compute (the LLM boundary) is
+    delta-only via (entity_id, description) reuse.
 
     Crash-retryability across the WHOLE cycle: the conv-keyed merges
     destroy the pre-merge evidence the canonical rewrites need, and the
@@ -230,10 +231,14 @@ def incremental_update(
     # else (no empty-frame chunk/extract/merge jobs, no catalog scan,
     # no EXCEPT probe). Any guard failing falls through to the normal
     # path, which handles partial reuse stage by stage.
-    # The stale probe (one limit(1) job) and the journal probes run once
-    # here and are reused by step 3.5.
-    _heal_journal(wh)
-    journal_present = [n for n in _JOURNAL_TABLES if wh.exists(n)]
+    # The stale probe (one limit(1) job) and the journal probe run once
+    # here and are reused by step 3.5. The heal runs first: step 2
+    # reads canonical_map as pre-cycle evidence, and a table whose
+    # overwrite a crash interrupted is complete only as ``__next``.
+    root_names = wh.heal()
+    journal_present = [
+        n for n in JOURNAL_TABLES if n in root_names and wh.exists(n)
+    ]
     journal_on_disk = bool(journal_present)
     has_new_obligations = bool(stale.limit(1).count())
     if (
@@ -258,13 +263,12 @@ def incremental_update(
 
     # ---- 2. old-state slices (pruned reads, BEFORE any merge) --------
     old_traw_stale, old_mraw_stale, old_eraw_stale, old_chunks_stale, \
-        old_cmap, old_entities = _run_parallel([
+        old_cmap = _run_parallel([
             lambda: ck(read_pruned(spark, wh.path("triples_raw"), stale)),
             lambda: ck(read_pruned(spark, wh.path("mentions_raw"), stale)),
             lambda: ck(read_pruned(spark, wh.path("entities_raw"), stale)),
             lambda: ck(read_pruned(spark, wh.path("chunks"), stale)),
             lambda: ck(wh.read("canonical_map")),
-            lambda: ck(wh.read("entities")),
         ])
     old_pairs_stale = ck(
         entity_conv_pairs(old_eraw_stale, old_traw_stale, old_mraw_stale)
@@ -574,10 +578,10 @@ def incremental_update(
         defer=True,
     )
 
-    # ---- 8-10, 12: four mutually independent delta-rewrite tasks
-    # (mentions / triples / entities / chunk embeddings — distinct
-    # target tables, read-only sharing of the merged raw tables and
-    # indexes) run from one driver-thread pool -------------------------
+    # ---- 8-10, 12: four mutually independent tasks (mentions /
+    # triples delta rewrites, the whole entities table, chunk
+    # embeddings — distinct target tables, read-only sharing of the
+    # merged raw tables and indexes) run from one driver-thread pool --
 
     def _rewrite_mentions_task():
         m_raw_delta = read_pruned(spark, wh.path("mentions_raw"), delta_convs)
@@ -655,26 +659,6 @@ def incremental_update(
             spark, wh.path("triples"), triples_delta, stale_tkeys, TRIPLE_KEY_COL
         )
 
-    def _merge_entities_task():
-        entities_full = ck(canonical_entity_rows(embedded, wcc, cmap))
-
-        changed_keys, removed_ids = _changed_and_removed_keys(
-            old_entities, entities_full, "entity_id"
-        )
-        changed_rows = ck(
-            entities_full.join(changed_keys, "entity_id", "left_semi")
-        )
-        stale_ent_ids = ck(
-            changed_rows.select("entity_id").union(removed_ids).distinct()
-        )
-        t0 = _time.time()
-        upsert_groups(
-            spark, wh.path("entities"), changed_rows, stale_ent_ids, "entity_id"
-        )
-        wh.append_lineage(
-            "incr_entities_merge", -1, changed_rows.count(), t0, defer=True
-        )
-
     def _chunk_embeddings_task():
         # scope = new chunk ids ∪ the journal's pending ids: a retry
         # after the registry committed has empty new_chunks, and the
@@ -715,79 +699,42 @@ def incremental_update(
             "chunk_id",
         )
 
-    _run_parallel(
+    _, _, entities, _ = _run_parallel(
         [
             _rewrite_mentions_task,
             _rewrite_triples_task,
-            _merge_entities_task,
+            lambda: wh.write(
+                canonical_entity_rows(embedded, wcc, cmap), "entities"
+            ),
             _chunk_embeddings_task,
         ]
     )
 
-    # ---- 11. entity-scale side tables: delta-MERGE (parallel);
+    # ---- 11. the four linking tables, written whole in one pool;
     # nothing to write when the stored tables were reused verbatim.
-    # entity_embeddings / similar / canonical_map are bucketed MERGE
-    # tables (plans/build.py), so each cycle diffs the recomputed
-    # frame against the stored one and rewrites only the buckets
-    # holding changed/removed keys — rows ∝ the cycle's real change
-    # set, not O(catalog). wcc stays an overwrite: its dense component
-    # numbering is a GLOBAL renumbering (one new component can shift
-    # every downstream label), so its rows have no stable per-key
-    # identity worth diffing, and it is the smallest of the four.
-    #
+    # This runs after steps 8-10, so canonical_map commits only once
+    # no table depends on the map it replaces: a crash before that
+    # leaves the old map as the retry's pre-cycle evidence (step 2).
     # One sidecar window (the torn-window guard): the link-params
-    # sidecar is removed BEFORE the first side-table write and written
-    # only after canonical_map lands — sequentially LAST, so for any
-    # crash inside the window the retry declines the step-1.5 shortcut
-    # and the catalog-unchanged reuse probe instead of pairing new
-    # embeddings with a stale map.
-    def _merge_side_table(df_new, name: str, key: str, lineage_stage: str):
-        from .merge import table_bucket_spec
-
-        path = wh.path(name)
-        if not wh.exists(name) or table_bucket_spec(path) is None:
-            # crash recovery: a table (or its spec) lost mid-write is
-            # rewritten bucketed (same shape as build_all's stage) so
-            # it re-enters the delta-MERGE regime next cycle
-            wh.write(
-                df_new, name, group_key=key, num_buckets=cfg.bucket_convs
-            )
-            return
-        changed, removed = _changed_and_removed_keys(
-            wh.read(name), df_new, key
-        )
-        stale = ck(changed.union(removed).distinct())
-        # group semantics: re-insert EVERY current row of a stale key
-        # (for per-key-grouped tables like `similar` a partially
-        # changed group must be replaced whole)
-        new_rows = df_new.join(stale, key, "left_semi")
-        t0 = _time.time()
-        upsert_groups(spark, path, new_rows, stale, key)
-        wh.append_lineage(
-            lineage_stage, -1, new_rows.count(), t0, defer=True
-        )
-
+    # sidecar is removed before the first write and written after the
+    # last, so for any crash inside the window the retry declines the
+    # step-1.5 shortcut and the catalog-unchanged reuse probe instead
+    # of pairing new embeddings with a stale map.
     if not link_reused:
         with wh.sidecar_window(LINK_PARAMS_FILE, link_params):
             _run_parallel([
-                lambda: _merge_side_table(
-                    embedded, "entity_embeddings", "entity_id",
-                    "incr_embeddings_merge",
-                ),
-                lambda: _merge_side_table(
-                    similar, "similar", "src", "incr_similar_merge"
-                ),
-                lambda: wh.write(wcc, "wcc"),
+                (lambda n=n, t=t: wh.write(t, n))
+                for n, t in zip(
+                    ("entity_embeddings", "similar", "wcc", "canonical_map"),
+                    (embedded, similar, wcc, cmap),
+                )
             ])
-            _merge_side_table(
-                cmap, "canonical_map", "entity_id", "incr_cmap_merge"
-            )
 
     # ---- 13. community detection: one full recompute over the
     # upserted graph, committed in one sidecar window (build_all's
     # community stage) -----------------------------------------------
     write_communities(
-        wh, cfg, wh.read("entities"), wh.read("triples"), wh.read("mentions")
+        wh, cfg, entities, wh.read("triples"), wh.read("mentions")
     )
 
     wh.flush_lineage()
@@ -865,40 +812,12 @@ def _stored_linking_if_catalog_unchanged(
     return stored, not diff.limit(1).count()
 
 
-# rewrite-intent journal (step 3.5 of the delta cycle): the
-# delta-proportional obligations a retry needs after the conv merges
-# have destroyed the pre-merge evidence and the registry has committed
-_JOURNAL_TABLES = {
-    "pending_rewrite_convs": "conv_id string",
-    "pending_rewrite_tkeys": "subj string, pred string, obj string",
-    "pending_rewrite_chunks": "chunk_id string",
-}
-
-
-_JOURNAL_NEXT_SUFFIX = "__next"
-
-
-def _heal_journal(wh) -> None:
-    """Finish any swap a crash interrupted: a COMPLETE ``__next``
-    generation (its _SUCCESS exists) supersedes the main table — it is
-    always a superset (every write unions the stored journal), so
-    promoting it is monotone-safe whether the crash hit before or after
-    the main table's delete. After this, the main path is the single
-    authoritative copy and a later overwrite of ``__next`` can never
-    destroy live obligations."""
-    for name in _JOURNAL_TABLES:
-        nxt = wh.path(name) + _JOURNAL_NEXT_SUFFIX
-        if fsio.exists(os.path.join(nxt, "_SUCCESS")):
-            fsio.rmtree(wh.path(name))
-            fsio.rename(nxt, wh.path(name))
-
-
 def _read_journal(
     spark: SparkSession, wh, present: list[str]
 ) -> dict[str, DataFrame]:
     """The surviving journal of a crashed cycle, empty frames when the
     last cycle completed (or none ever ran). ``present`` names the
-    journal tables on disk, probed after _heal_journal so the caller
+    journal tables on disk, probed after _Warehouse.heal so the caller
     (and a subsequent _write_journal) sees one authoritative
     generation per table."""
     return {
@@ -907,68 +826,28 @@ def _read_journal(
             if name in present
             else spark.createDataFrame([], schema)
         )
-        for name, schema in _JOURNAL_TABLES.items()
+        for name, schema in JOURNAL_TABLES.items()
     }
 
 
 def _write_journal(wh, updates: dict[str, DataFrame]) -> None:
     """Persist the journal BEFORE the first destructive merge, without
     ever holding the obligations in zero complete copies: each table is
-    written to a ``__next`` sibling first, then swapped in (delete main
-    + atomic rename). A plain overwrite of the main path would be
+    committed through _Warehouse.overwrite. A plain overwrite would be
     delete-then-write — a crash inside that window destroys a PRIOR
     crashed cycle's obligations, which are exactly the ones the retry's
     change detection cannot re-derive (its registry already committed).
-    Crash windows here: during the ``__next`` write the main table is
-    intact (and any complete prior ``__next`` was promoted by
-    _heal_journal before this call); between delete and rename the
-    complete ``__next`` survives and the next read heals it forward.
-    Inputs are checkpointed by the caller (they union the stored
-    journal being replaced)."""
+    Every write unions the stored journal, so a complete ``__next`` is
+    a superset and promoting it (heal) is monotone-safe. Inputs are
+    checkpointed by the caller."""
     for name, df in updates.items():
-        nxt = wh.path(name) + _JOURNAL_NEXT_SUFFIX
-        df.write.mode("overwrite").parquet(nxt)
-        fsio.rmtree(wh.path(name))
-        fsio.rename(nxt, wh.path(name))
+        wh.overwrite(df, name)
 
 
 def _clear_journal(wh) -> None:
-    for name in _JOURNAL_TABLES:
+    for name in JOURNAL_TABLES:
         fsio.rmtree(wh.path(name))
-        fsio.rmtree(wh.path(name) + _JOURNAL_NEXT_SUFFIX)
-
-
-def _changed_and_removed_keys(
-    old: DataFrame, new: DataFrame, key: str
-) -> tuple[DataFrame, DataFrame]:
-    """(changed, removed) keys of ``new`` against ``old``, compared on
-    ``new``'s columns: changed = keys of new or modified rows, removed
-    = the multiset key diff old − new (a key with fewer — but
-    individually unchanged — rows lands here too).
-
-    The diff rides compact row FINGERPRINTS, not rows: a full-row
-    exceptAll would shuffle the embedding arrays twice — O(catalog
-    bytes), i.e. exactly what the overwrite a delta merge replaces
-    costs. (key, murmur3-32, xxhash64) is ~16 bytes/row; with ~96
-    independent hash bits a changed row masquerading as unchanged needs
-    a 2⁻⁹⁶ double collision, and its worst case is one stale row until
-    the next cycle that touches the key. Rows are unique per key group
-    in every diffed table (single-row keys resp. unique (src, dst)
-    pairs), which the anti-join shape relies on."""
-    cols = new.columns
-
-    def fp(df):
-        return df.select(
-            F.col(key),
-            F.hash(*cols).alias("__h32"),
-            F.xxhash64(*cols).alias("__h64"),
-        )
-
-    oldk = fp(old.select(*cols)).localCheckpoint()
-    newk = fp(new)
-    changed = newk.join(oldk, [key, "__h32", "__h64"], "left_anti").select(key)
-    removed = oldk.select(key).exceptAll(newk.select(key))
-    return changed, removed
+        fsio.rmtree(wh.path(name) + NEXT_SUFFIX)
 
 
 def _triple_keys(t_raw: DataFrame, cmap: DataFrame) -> DataFrame:

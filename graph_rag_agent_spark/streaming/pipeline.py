@@ -15,9 +15,10 @@ Per micro-batch:
      streaming analogue of the reference's file-modified semantics in
      file_change_manager);
   2. project the latest-version snapshot of every conversation;
-  3. first batch → ``build_all``; later batches →
-     ``incremental_update`` (registry diff, changed-conversations-only
-     chunk/extract/parse, cascade delete, keyed MERGEs).
+  3. ``build_or_update``: ``build_all`` until the warehouse holds
+     every table, ``incremental_update`` after that (registry diff,
+     changed-conversations-only chunk/extract/parse, cascade delete,
+     keyed MERGEs).
 
 Delivery contract: a micro-batch must carry whole conversations
 (availableNow file batches, or upstream gating through
@@ -58,6 +59,24 @@ def latest_conversation_snapshot(turn_log: DataFrame) -> DataFrame:
     )
 
 
+def build_or_update(
+    spark: SparkSession, snapshot: DataFrame, warehouse: str, cfg
+) -> None:
+    """``incremental_update`` when the warehouse holds every table
+    (interrupted overwrites healed first), ``build_all`` otherwise: a
+    first batch that died inside build_all, which writes the registry
+    before extraction, is built again, not cycled."""
+    from ..plans.build import WAREHOUSE_TABLES, _Warehouse, build_all
+    from ..plans.incremental import incremental_update
+
+    wh = _Warehouse(spark, warehouse)
+    wh.heal()
+    if all(wh.exists(n) for n in WAREHOUSE_TABLES):
+        incremental_update(spark, snapshot, warehouse, cfg)
+    else:
+        build_all(spark, snapshot, cfg)
+
+
 def _check_turn_log_layout(turn_log: str) -> None:
     """The partitioned writer below adds ingest_batch=<id> directories;
     a turn log holding root-level part files was written by an older,
@@ -88,8 +107,7 @@ def stream_incremental_build(
 
     ``source``: parquet directory of transcript-schema turn files.
     Returns the StreamingQuery (caller awaits termination)."""
-    from ..plans.build import BuildConfig, build_all
-    from ..plans.incremental import incremental_update
+    from ..plans.build import BuildConfig
     from ..plans.merge import _rewrite_partitions
 
     turn_log = f"{warehouse}/turn_log"
@@ -112,12 +130,7 @@ def stream_incremental_build(
         snapshot = latest_conversation_snapshot(
             spark.read.parquet(turn_log)
         ).localCheckpoint()
-        from ..plans import fsio
-
-        if fsio.exists(f"{warehouse}/registry"):
-            incremental_update(spark, snapshot, warehouse, build_cfg)
-        else:
-            build_all(spark, snapshot, build_cfg)
+        build_or_update(spark, snapshot, warehouse, build_cfg)
 
     reader = spark.readStream.schema(schemas.TRANSCRIPTS)
     if max_files_per_trigger is not None:
@@ -152,18 +165,16 @@ def gated_stream_build(
          the source and appends closed-session descriptors;
       2. the raw turns of every closed conversation are snapshotted
          from the source directory (latest delivery wins per turn);
-      3. first pass bootstraps via ``build_all``, later passes run
-         ``incremental_update``. A conversation that re-opens with
-         more turns after closing simply re-registers as modified on
-         a later pass — an extra incremental cycle, never wrong
-         output.
+      3. ``build_or_update``: ``build_all`` until the warehouse is
+         complete, ``incremental_update`` after. A conversation that
+         re-opens with more turns after closing simply re-registers as
+         modified on a later pass — an extra incremental cycle, never
+         wrong output.
 
     Returns the number of closed conversations built over so far
     (0 → no build ran yet: everything is still inside the gap).
     """
-    from ..plans import fsio
-    from ..plans.build import BuildConfig, build_all
-    from ..plans.incremental import incremental_update
+    from ..plans.build import BuildConfig
     from .sessionize import conversation_sessions
 
     closed_log = f"{warehouse}/closed_sessions"
@@ -221,8 +232,5 @@ def gated_stream_build(
         .drop("_file_mtime", "_file_path", "_rn")
         .localCheckpoint()
     )
-    if fsio.exists(f"{warehouse}/registry"):
-        incremental_update(spark, snapshot, warehouse, build_cfg)
-    else:
-        build_all(spark, snapshot, build_cfg)
+    build_or_update(spark, snapshot, warehouse, build_cfg)
     return n_closed

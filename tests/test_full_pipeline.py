@@ -143,3 +143,56 @@ def test_kill_and_resume_identical(spark, transcripts_df, oracle_small, tmp_path
         by_bucket.setdefault(r["partition_id"], 0)
         by_bucket[r["partition_id"]] += 1
     assert by_bucket == {0: 1, 1: 1, 2: 1, 3: 1}
+
+
+def test_killed_fresh_rebuild_resumes_into_the_new_corpus(
+    spark, v1_warehouse, exact_build
+):
+    """A fresh build (resume=False) over an existing warehouse, killed
+    in extraction and then resumed, equals a clean build of the NEW
+    corpus: the fresh build first removes the previous build's tables,
+    extract lineage and extraction cache, so the resume finds nothing
+    of the old build to reuse. The streaming turn log is kept."""
+    import os
+
+    from graph_rag_agent_spark import schemas
+    from graph_rag_agent_spark.core.gen import generate_transcripts
+
+    wh = v1_warehouse
+    os.makedirs(f"{wh}/turn_log/ingest_batch=0")
+    v2_rows = [
+        r
+        for r in generate_transcripts(12)
+        if r["conv_id"] != "conv-000003"
+        and not (r["conv_id"] == "conv-000001" and r["turn_idx"] >= 5)
+    ]
+    v2_df = spark.createDataFrame(v2_rows, schema=schemas.TRANSCRIPTS)
+    kw = dict(
+        warehouse=wh,
+        similarity_method="exact",
+        extraction_buckets=2,
+        bucket_convs=8,
+    )
+    with pytest.raises(RuntimeError, match="simulated failure"):
+        build_all(
+            spark, v2_df, BuildConfig(**kw, resume=False, fail_after_bucket=0)
+        )
+    res = build_all(spark, v2_df, BuildConfig(**kw))
+
+    _, fresh = exact_build("v2")
+    for name in ["triples", "mentions", "entities", "canonical_map", "communities"]:
+        cols = sorted(
+            c
+            for c in res.tables[name].columns
+            if c not in ("embedding", "summary_created_at")
+        )
+        a = {tuple(r) for r in res.tables[name].select(*cols).collect()}
+        b = {tuple(r) for r in fresh.tables[name].select(*cols).collect()}
+        assert a == b, name
+    extract = [
+        r["partition_id"]
+        for r in spark.read.parquet(f"{wh}/lineage").collect()
+        if r["stage"] == "extract"
+    ]
+    assert sorted(extract) == [0, 1]
+    assert os.path.isdir(f"{wh}/turn_log/ingest_batch=0")

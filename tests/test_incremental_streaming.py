@@ -325,6 +325,44 @@ def test_stream_incremental_build_matches_batch_rebuild(
     assert got == want and len(got) > 0
 
 
+def test_stream_first_batch_killed_in_build_retries_as_build(
+    spark, tmp_path_factory
+):
+    """A first micro-batch that dies inside build_all leaves a partial
+    warehouse: the registry is written before extraction. The retried
+    batch must finish the build instead of cycling the partial
+    warehouse with incremental_update, and converge to the oracle."""
+    import os
+
+    from graph_rag_agent_spark.streaming.pipeline import (
+        stream_incremental_build,
+    )
+
+    src = str(tmp_path_factory.mktemp("sp_kill_src"))
+    wh = str(tmp_path_factory.mktemp("sp_kill_wh"))
+    ckpt = str(tmp_path_factory.mktemp("sp_kill_ckpt"))
+    rows = generate_transcripts(4)
+    spark.createDataFrame(rows, schema=schemas.TRANSCRIPTS).coalesce(
+        1
+    ).write.mode("append").parquet(src)
+    kw = dict(warehouse=wh, similarity_method="exact", extraction_buckets=2)
+
+    q = stream_incremental_build(
+        spark, src, wh, ckpt, cfg=BuildConfig(**kw, fail_after_bucket=0)
+    )
+    with pytest.raises(Exception, match="simulated failure"):
+        q.awaitTermination(300)
+    assert os.path.exists(f"{wh}/registry/_SUCCESS")
+
+    q = stream_incremental_build(spark, src, wh, ckpt, cfg=BuildConfig(**kw))
+    q.awaitTermination(300)
+    got = {
+        (r["subj"], r["pred"], r["obj"])
+        for r in spark.read.parquet(f"{wh}/triples").collect()
+    }
+    assert got and got == oracle_build(rows).triple_set()
+
+
 def test_gated_stream_build_only_closed_conversations(
     spark, tmp_path_factory
 ):
@@ -412,13 +450,37 @@ def test_gated_stream_build_only_closed_conversations(
     assert got == want and len(got) > 0
 
 
+# the corpus-scale tables an incremental cycle MERGEs into; every
+# entity-scale table is written whole
+CORPUS_SCALE_MERGE_TARGETS = (
+    "transcripts",
+    "chunks",
+    "extractions",
+    "parsed",
+    "entities_raw",
+    "triples_raw",
+    "mentions_raw",
+    "registry",
+    "entity_conv_index",
+    "chunk_conv_index",
+    "mentions",
+    "triples",
+    "chunk_embeddings",
+)
+
+
 def test_delta_incremental_matches_rebuild_and_is_delta_proportional(
-    spark, v1_warehouse, exact_build
+    spark, v1_warehouse, exact_build, monkeypatch
 ):
     """The bucketed (delta-capable) warehouse path: incremental result
-    equals a from-scratch rebuild, AND the lineage proves the triple/
+    equals a from-scratch rebuild, the lineage proves the triple/
     mention rewrites touched a delta-proportional slice, not the
-    corpus (VERDICT r2 item #1)."""
+    corpus (VERDICT r2 item #1), and the cycle MERGEs into exactly the
+    corpus-scale tables, each once."""
+    import os
+
+    import graph_rag_agent_spark.plans.merge as merge_mod
+
     wh = v1_warehouse
     cfg = BuildConfig(
         warehouse=wh,
@@ -448,7 +510,17 @@ def test_delta_incremental_matches_rebuild_and_is_delta_proportional(
     old_mentions = spark.read.parquet(f"{wh}/mentions").localCheckpoint(
         eager=True
     )
+    merge_targets = []
+    real_upsert = merge_mod.upsert_groups
+
+    def recording_upsert(spark_, path, *a, **k):
+        merge_targets.append(os.path.basename(path.rstrip("/")))
+        return real_upsert(spark_, path, *a, **k)
+
+    monkeypatch.setattr(merge_mod, "upsert_groups", recording_upsert)
     tables = incremental_update(spark, v2_df, wh, cfg=cfg)
+    monkeypatch.undo()
+    assert sorted(merge_targets) == sorted(CORPUS_SCALE_MERGE_TARGETS)
 
     # cascade-audit parity: the delta path's index-lookup cascade must
     # equal cascade_delete_entities' reference count over the mentions
@@ -494,7 +566,7 @@ def test_delta_incremental_matches_rebuild_and_is_delta_proportional(
         b = {tuple(r) for r in rebuilt.tables[name].select(*cols).collect()}
         assert a == b, name
 
-    # the delta-MERGEd linking side tables equal the rebuild's too
+    # the linking tables, written whole, equal the rebuild's too
     # (both runs compute them from the identical catalog, so even the
     # float scores and embedding vectors are bit-equal)
     wh2_reader = _Warehouse(spark, wh2)
@@ -538,19 +610,6 @@ def test_delta_incremental_matches_rebuild_and_is_delta_proportional(
     # the catalog changed (entities dropped with conv-000003), so the
     # linking chain must have re-run — no reuse marker
     assert lineage.where(F.col("stage") == "incr_link_reused").count() == 0
-
-    # entity-scale side tables were delta-MERGEd, not overwritten:
-    # the merge lineage rows are a strict subset of the catalog/edge
-    # tables (most entities and their neighborhoods are untouched by
-    # a 2-conversation delta)
-    n_entities = tables["entities"].count()
-    emb_merged = stage_rows("incr_embeddings_merge")
-    assert emb_merged is not None and emb_merged < n_entities
-    sim_merged = stage_rows("incr_similar_merge")
-    n_similar = wh_reader.read("similar").count()
-    assert sim_merged is not None and sim_merged < n_similar
-    cmap_merged = stage_rows("incr_cmap_merge")
-    assert cmap_merged is not None and cmap_merged <= n_entities
 
 
 def test_delta_incremental_lsh_linking_delta_path(
@@ -616,34 +675,6 @@ def test_delta_incremental_lsh_linking_delta_path(
         a = {tuple(r) for r in tables[name].select(*cols).collect()}
         b = {tuple(r) for r in rebuilt.tables[name].select(*cols).collect()}
         assert a == b, name
-
-
-def test_side_table_fallback_write_rebuckets(spark, v1_warehouse):
-    """A side table that lost its bucket spec (torn state) takes the
-    full-overwrite fallback — which must re-bucket so the table
-    re-enters the delta-MERGE regime instead of overwriting forever."""
-    import os
-
-    from graph_rag_agent_spark.plans.merge import table_bucket_spec
-
-    wh = v1_warehouse
-    cfg = BuildConfig(
-        warehouse=wh,
-        similarity_method="exact",
-        extraction_buckets=2,
-        bucket_convs=8,
-    )
-    os.remove(os.path.join(wh, "similar", "_bucket_spec.json"))
-    assert table_bucket_spec(os.path.join(wh, "similar")) is None
-
-    # catalog-changing delta → reuse declined → side tables rewritten
-    v2_rows = [
-        r for r in generate_transcripts(12) if r["conv_id"] != "conv-000003"
-    ]
-    v2_df = spark.createDataFrame(v2_rows, schema=schemas.TRANSCRIPTS)
-    incremental_update(spark, v2_df, wh, cfg=cfg)
-    spec = table_bucket_spec(os.path.join(wh, "similar"))
-    assert spec is not None and spec["key"] == "src"
 
 
 def test_lsh_delta_declines_exact_produced_store(
@@ -1013,16 +1044,17 @@ def test_failed_delta_cycle_retry_self_heals(
 def test_torn_linking_write_declines_reuse_on_retry(
     spark, v1_warehouse, exact_build, monkeypatch
 ):
-    """A delta cycle that dies between the entity_embeddings overwrite
-    and the canonical_map overwrite (step 11) leaves the stored linking
-    tables torn: NEW embeddings beside the OLD map. The retry detects
+    """A delta cycle whose canonical_map write dies (step 11) while the
+    other linking tables commit leaves the stored linking tables torn:
+    NEW embeddings beside the OLD map. The retry detects
     zero registry changes, so its rebuilt catalog is bit-identical to
     the just-written embeddings — without the sidecar invalidation the
     catalog-unchanged probe would hand back the STALE canonical_map and
-    freeze the warehouse inconsistent forever. The embeddings write
-    deletes _link_params.json and only the canonical_map write restores
-    it, so the retry must decline reuse, recompute the chain, and
-    converge to the same canonical_map a fresh rebuild produces."""
+    freeze the warehouse inconsistent forever. The step-11 window
+    deletes _link_params.json before the first write and restores it
+    only after the last, so the retry must decline reuse, recompute the
+    chain, and converge to the same canonical_map a fresh rebuild
+    produces."""
     import graph_rag_agent_spark.plans.build as build_mod
 
     wh = v1_warehouse
@@ -1041,26 +1073,16 @@ def test_torn_linking_write_declines_reuse_on_retry(
     ]
     v2_df = spark.createDataFrame(v2_rows, schema=schemas.TRANSCRIPTS)
 
-    # canonical_map lands through the bucketed MERGE (upsert_groups),
-    # or through wh.write on the missing-spec fallback — inject the
-    # crash into both so the torn window opens regardless of route
-    import graph_rag_agent_spark.plans.merge as merge_mod
-
+    # canonical_map is written whole through wh.write, in the same
+    # pool as the other three linking tables
     real_write = build_mod._Warehouse.write
-    real_upsert = merge_mod.upsert_groups
 
     def dying_write(self, df, name, *a, **k):
         if name == "canonical_map":
             raise RuntimeError("injected cmap write failure")
         return real_write(self, df, name, *a, **k)
 
-    def dying_upsert(spark_, path, *a, **k):
-        if path.rstrip("/").endswith("canonical_map"):
-            raise RuntimeError("injected cmap write failure")
-        return real_upsert(spark_, path, *a, **k)
-
     monkeypatch.setattr(build_mod._Warehouse, "write", dying_write)
-    monkeypatch.setattr(merge_mod, "upsert_groups", dying_upsert)
     with pytest.raises(Exception, match="injected cmap write failure"):
         incremental_update(spark, v2_df, wh, cfg=cfg)
     monkeypatch.undo()
@@ -1176,12 +1198,14 @@ def test_post_registry_crash_rewrites_recover_via_journal(
 def test_journal_torn_swap_heals_and_recovers(
     spark, v1_warehouse, monkeypatch
 ):
-    """_write_journal swaps each table in via write-next → delete →
-    rename. A crash between the delete and the rename leaves the main
-    path missing and a COMPLETE ``__next`` generation on disk; a plain
+    """Every plain overwrite — the journal tables and canonical_map
+    among them — swaps the table in via write-next → delete → rename.
+    A crash between the delete and the rename leaves the main path
+    missing and a COMPLETE ``__next`` generation on disk; a plain
     exists() read would see an empty journal and orphan the crashed
-    cycle's winner rows. The cycle must heal the torn swap forward
-    and the retry must still converge to the oracle state."""
+    cycle's winner rows, and step 2 could not read canonical_map at
+    all. The cycle must heal the torn swaps forward and the retry must
+    still converge to the oracle state."""
     import os
 
     import graph_rag_agent_spark.plans.merge as merge_mod
@@ -1212,14 +1236,16 @@ def test_journal_torn_swap_heals_and_recovers(
         incremental_update(spark, v2_df, wh, cfg=cfg)
     monkeypatch.undo()
 
-    # simulate the torn swap window on every journal table: main gone,
-    # complete __next present (what a kill between delete and rename
-    # leaves behind)
-    for t in (
+    # simulate the torn swap window on every journal table and on
+    # canonical_map: main gone, complete __next present (what a kill
+    # between delete and rename leaves behind)
+    torn = (
         "pending_rewrite_convs",
         "pending_rewrite_tkeys",
         "pending_rewrite_chunks",
-    ):
+        "canonical_map",
+    )
+    for t in torn:
         assert os.path.exists(f"{wh}/{t}/_SUCCESS")
         os.rename(f"{wh}/{t}", f"{wh}/{t}__next")
 
@@ -1228,14 +1254,10 @@ def test_journal_torn_swap_heals_and_recovers(
         (r["subj"], r["pred"], r["obj"]) for r in tables["triples"].collect()
     }
     assert got == want
-    # heal + commit leaves neither generation behind
-    for t in (
-        "pending_rewrite_convs",
-        "pending_rewrite_tkeys",
-        "pending_rewrite_chunks",
-    ):
-        assert not os.path.exists(f"{wh}/{t}")
+    # heal + commit leaves no __next behind, and no journal table
+    for t in torn:
         assert not os.path.exists(f"{wh}/{t}__next")
+        assert os.path.exists(f"{wh}/{t}") == (t == "canonical_map")
 
 
 def test_no_change_cycle_skips_journal_writes_and_reuses_communities(
