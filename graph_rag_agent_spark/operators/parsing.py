@@ -4,8 +4,9 @@ One mapInPandas pass applies the transcribed grammar
 (core/records.parse_extraction — exact semantics of
 /root/reference/graph/extraction/graph_writer.py:36-131, including the
 未知 endpoint rule, first-description-wins, and empty-on-error) and
-emits a single long-format DataFrame; JVM-side filters then project it
-into the three tables:
+emits a single long-format DataFrame — the ``parsed`` table, the
+warehouse's one stored copy of the parse. JVM-side filters project it
+into the three views every reader applies to it (none is stored):
 
     entities_raw(chunk_id, conv_id, entity_id, entity_type, description)
     triples_raw (chunk_id, conv_id, subj, pred, obj, description, weight)
@@ -94,13 +95,13 @@ def mentions_raw(parsed: DataFrame) -> DataFrame:
     # (graph_writer.py:226-231, 272-281)
     # dedup INCLUDES conv_id: chunk ids are content hashes, so the
     # same (chunk, entity) pair can be contributed by several
-    # conversations. Keeping one row PER CONTRIBUTING CONV makes this
-    # table conv-complete — the delta incremental path merges it by
-    # conv_id (plans/incremental.py), and a corpus-wide dedup here
-    # would let a conv deletion drop a pair another conv still holds
-    # (and pick its surviving conv_id nondeterministically). The
-    # canonical mentions table dedups to one row per (chunk, entity)
-    # downstream with a deterministic min-conv pin (rewrite_mentions).
+    # conversations. Keeping one row PER CONTRIBUTING CONV keeps this
+    # projection conv-complete: applied to a conv-pruned slice of
+    # parsed (plans/incremental.py) it yields exactly those convs'
+    # pairs, and a dedup across convs would keep each pair under one
+    # arbitrary conv (picked nondeterministically). The canonical
+    # mentions table dedups to one row per (chunk, entity) downstream
+    # with a deterministic min-conv pin (rewrite_mentions).
     return (
         parsed.where(F.col("kind") == "node")
         .select("chunk_id", "conv_id", F.col("a").alias("entity_id"))

@@ -6,10 +6,10 @@ Mirrors the reference's three-stage lifecycle
 build_index_and_community.py, build_chunk_index.py; SURVEY.md §3.1) as
 one Spark job graph:
 
-    transcripts → chunks → extractions → parse → raw tables →
-    entity catalog + embeddings → SIMILAR → WCC → candidates →
-    merge → canonical map → triples/mentions → communities →
-    summaries → registry
+    transcripts → chunks → extractions → parsed (the raw entity /
+    triple / mention views are projections of it) → entity catalog +
+    embeddings → SIMILAR → WCC → candidates → merge → canonical map →
+    triples/mentions → communities → summaries → registry
 
 Durability model (north rule: "resumable from per-partition
 checkpoints with lineage + extraction metrics written per
@@ -94,8 +94,8 @@ def _run_parallel(tasks):
 
     if not tasks:
         return []
-    # cap 16: the widest pool (incremental._read_out_tables) holds 19
-    # table reads, the delta step 4+5 pool 7 conv-table merges + 2
+    # cap 16: the widest pool (incremental._read_out_tables) holds 16
+    # table reads, the delta step 4+5 pool 4 conv-table merges + 2
     # index merges and the step-11 pool the 4 linking-table writes;
     # each task is a short chain of small jobs, so
     # driver-thread count, not executor contention, is the binding
@@ -105,21 +105,30 @@ def _run_parallel(tasks):
         return [f.result() for f in futures]
 
 
-def entity_conv_pairs(
-    e_raw: DataFrame, t_raw: DataFrame, m_raw: DataFrame
-) -> DataFrame:
-    """Distinct (entity_id, conv_id): every RAW entity id appearing in
-    a conversation's entities/triples/mentions — the inverted index the
-    incremental delta path prunes on."""
+def entity_conv_pairs(parsed: DataFrame) -> DataFrame:
+    """Distinct (entity_id, conv_id): every RAW entity id a
+    conversation's parse names, as a node or a triple endpoint — the
+    inverted index the incremental delta path prunes on. (The mention
+    pairs are the node pairs: both project the kind='node' rows.)"""
+    e_raw, t_raw = entities_raw(parsed), triples_raw(parsed)
     return (
         e_raw.select("entity_id", "conv_id")
         .unionByName(
             t_raw.select(F.col("subj").alias("entity_id"), "conv_id")
         )
         .unionByName(t_raw.select(F.col("obj").alias("entity_id"), "conv_id"))
-        .unionByName(m_raw.select("entity_id", "conv_id"))
         .distinct()
     )
+
+
+def raw_views(parsed: DataFrame) -> dict[str, DataFrame]:
+    """The three raw views of a ``parsed`` frame, keyed by the names
+    the result dicts of build_all and incremental_update carry."""
+    return {
+        "entities_raw": entities_raw(parsed),
+        "triples_raw": triples_raw(parsed),
+        "mentions_raw": mentions_raw(parsed),
+    }
 
 
 def canonical_entity_rows(
@@ -146,12 +155,14 @@ LINK_PARAMS_FILE = "_link_params.json"
 COMMUNITY_PARAMS_FILE = "_community_params.json"
 
 FORMAT_FILE = "_format_version.json"
-# 3: bucketed + conv-complete — every corpus-scale table is bucket-
-#    partitioned (BuildConfig.bucket_convs) with the triple-key /
+# 3: bucketed — every corpus-scale table is bucket-partitioned
+#    (BuildConfig.bucket_convs) with the conv / triple-key /
 #    entity→conv / chunk→conv layout the incremental cycle MERGEs
-#    into, and mentions_raw holds one row per CONTRIBUTING conv for a
-#    shared content-hash chunk (operators/parsing.mentions_raw). The
-#    entity-scale tables are read whole, bucketed or plain alike.
+#    into. The raw entity/triple/mention views are projected from
+#    ``parsed``, never stored; the projection keeps one mention row per
+#    CONTRIBUTING conv for a shared content-hash chunk
+#    (operators/parsing.mentions_raw). The entity-scale tables are
+#    read whole, bucketed or plain alike.
 FORMAT_VERSION = 3
 
 NEXT_SUFFIX = "__next"  # the sibling _Warehouse.overwrite swaps in
@@ -165,9 +176,6 @@ WAREHOUSE_TABLES = (
     "chunks",
     "extractions",
     "parsed",
-    "entities_raw",
-    "triples_raw",
-    "mentions_raw",
     "entity_embeddings",
     "similar",
     "wcc",
@@ -245,14 +253,13 @@ class _Warehouse:
         name: str,
         group_key: str | None = None,
         num_buckets: int | None = None,
-    ) -> DataFrame:
+    ) -> None:
         if group_key:
             from .merge import write_bucketed
 
             write_bucketed(df, self.path(name), group_key, num_buckets)
         else:
             self.overwrite(df, name)
-        return self.read(name)
 
     def overwrite(self, df: DataFrame, name: str) -> None:
         """Crash-safe whole-table overwrite: write ``<name>__next``,
@@ -448,18 +455,15 @@ def write_communities(
     entities: DataFrame,
     triples: DataFrame,
     mentions: DataFrame,
-) -> tuple[DataFrame, DataFrame, DataFrame]:
+) -> None:
     """The community stage of build_all and of every incremental cycle:
     one full detection over the stored graph, its membership, hierarchy
-    and communities committed inside one community sidecar window.
-    Returns the three tables as read back."""
+    and communities committed inside one community sidecar window."""
     tables = community_tables(entities, triples, mentions, cfg.max_levels)
     names = ("membership", "hierarchy", "communities")
     with wh.sidecar_window(COMMUNITY_PARAMS_FILE, community_fingerprint(cfg)):
-        return tuple(
-            _run_parallel(
-                [(lambda n=n, t=t: wh.write(t, n)) for n, t in zip(names, tables)]
-            )
+        _run_parallel(
+            [(lambda n=n, t=t: wh.write(t, n)) for n, t in zip(names, tables)]
         )
 
 
@@ -484,7 +488,8 @@ def _stage(
     if cfg.resume and wh.exists(name):
         return wh.read(name)
     t0 = time.time()
-    df = wh.write(compute(), name, group_key=key, num_buckets=cfg.bucket_convs)
+    wh.write(compute(), name, group_key=key, num_buckets=cfg.bucket_convs)
+    df = wh.read(name)
     wh.append_lineage(name, -1, df.count(), t0, defer=True)
     return df
 
@@ -539,9 +544,8 @@ def _extraction_stage(
     final = chunks.select("chunk_id", "conv_id").join(
         wh.read("extraction_cache").dropDuplicates(["chunk_id"]), "chunk_id"
     ).select("chunk_id", "conv_id", "result")
-    return wh.write(
-        final, name, group_key="conv_id", num_buckets=cfg.bucket_convs
-    )
+    wh.write(final, name, group_key="conv_id", num_buckets=cfg.bucket_convs)
+    return wh.read(name)
 
 
 def build_all(
@@ -589,20 +593,9 @@ def build_all(
     parsed = _stage(
         wh, "parsed", cfg, lambda: parse_extractions(extractions), "conv_id"
     )
-    e_raw, t_raw, m_raw = _run_parallel(
-        [
-            lambda: _stage(
-                wh, "entities_raw", cfg, lambda: entities_raw(parsed), "conv_id"
-            ),
-            lambda: _stage(
-                wh, "triples_raw", cfg, lambda: triples_raw(parsed), "conv_id"
-            ),
-            lambda: _stage(
-                wh, "mentions_raw", cfg, lambda: mentions_raw(parsed), "conv_id"
-            ),
-        ]
-    )
-    res.tables.update(entities_raw=e_raw, triples_raw=t_raw, mentions_raw=m_raw)
+    raw = raw_views(parsed)
+    res.tables.update(parsed=parsed, **raw)
+    e_raw, t_raw, m_raw = raw.values()
 
     # inverted pair indexes: entity→conv and chunk→conv. These are the
     # Spark analogue of Neo4j's adjacency index — the incremental cycle
@@ -614,7 +607,7 @@ def build_all(
         [
             lambda: _stage(
                 wh, "entity_conv_index", cfg,
-                lambda: entity_conv_pairs(e_raw, t_raw, m_raw), "entity_id",
+                lambda: entity_conv_pairs(parsed), "entity_id",
             ),
             lambda: _stage(
                 wh, "chunk_conv_index", cfg,
@@ -681,7 +674,8 @@ def build_all(
         if cfg.resume and all(wh.exists(n) for n in names):
             return tuple(wh.read(n) for n in names)
         t0 = time.time()
-        out = write_communities(wh, cfg, entities, triples, mentions)
+        write_communities(wh, cfg, entities, triples, mentions)
+        out = tuple(wh.read(n) for n in names)
         wh.append_lineage("communities", -1, out[2].count(), t0, defer=True)
         return out
 

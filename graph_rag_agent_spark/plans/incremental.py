@@ -20,8 +20,10 @@ incremental_graph_builder.py:880-958 + incremental/file_change_manager
      texts.
   4. MERGE instead of rewrite: the warehouse has ONE layout (bucketed
      per-key tables, build.FORMAT_VERSION 3) and ONE cycle
-     (``incremental_update``). Per-conversation tables take a
-     conv-keyed MERGE of the changed conversations; the canonical
+     (``incremental_update``). Per-conversation tables (transcripts,
+     chunks, extractions, parsed, registry) take a conv-keyed MERGE of
+     the changed conversations — the raw entity / triple / mention
+     views are projections of ``parsed``, never stored; the canonical
      triples / mentions are re-pointed only where the canonical map or
      a contributing conversation changed, found via the entity→conv
      and chunk→conv inverted indexes; linking reuses its stored tables
@@ -55,6 +57,7 @@ from .build import (
     community_fingerprint,
     entity_conv_pairs,
     link_fingerprint,
+    raw_views,
     write_communities,
 )
 
@@ -116,9 +119,10 @@ def incremental_update(
     corpus-proportional WRITE a keyed MERGE:
 
       * per-conversation tables (transcripts/chunks/extractions/
-        parsed/raw entity·triple·mention tables/registry): changed
-        conversations recomputed, conv-keyed MERGE (delete stale conv
-        groups + insert new) — cost O(changed convs).
+        parsed/registry): changed conversations recomputed, conv-keyed
+        MERGE (delete stale conv groups + insert new) — cost O(changed
+        convs). The raw entity·triple·mention views are projections of
+        conv-pruned slices of ``parsed`` (operators/parsing).
       * canonical-map DELTA: entities whose effective canonical id
         changed vs the stored map (full-outer diff of two
         catalog-scale maps).
@@ -141,7 +145,7 @@ def incremental_update(
     Remaining corpus-proportional work, by design (matching the
     reference, which re-runs entity linking and community detection
     globally every cycle, incremental_graph_builder.py:880-958): ONE
-    columnar scan of the raw entity table to rebuild the entity
+    columnar scan of ``parsed``'s node rows to rebuild the entity
     catalog aggregate, one full recompute per global stage — connected
     components + canonical resolve over the similarity graph, and
     community detection over the (entity-scale) graph, the same
@@ -176,6 +180,9 @@ def incremental_update(
     Lineage rows (stage='incr_*') record the rows each delta stage
     actually processed; tests assert they scale with the delta, not
     the corpus.
+
+    Returns the stored tables plus the raw views of ``parsed``, the
+    cascade-deleted entities and the detected change sets.
     """
     cfg = cfg or BuildConfig(warehouse=warehouse, resume=False)
     wh = _Warehouse(spark, warehouse)
@@ -207,6 +214,9 @@ def incremental_update(
     from .merge import read_pruned, upsert_groups
 
     ck = lambda df: df.localCheckpoint()  # noqa: E731
+
+    def parsed_of(convs):  # the stored parse of a conv set, bucket-pruned
+        return read_pruned(spark, wh.path("parsed"), convs)
 
     # ---- 1. change detection -----------------------------------------
     old_registry = wh.read("registry")
@@ -262,17 +272,14 @@ def incremental_update(
         return out
 
     # ---- 2. old-state slices (pruned reads, BEFORE any merge) --------
-    old_traw_stale, old_mraw_stale, old_eraw_stale, old_chunks_stale, \
-        old_cmap = _run_parallel([
-            lambda: ck(read_pruned(spark, wh.path("triples_raw"), stale)),
-            lambda: ck(read_pruned(spark, wh.path("mentions_raw"), stale)),
-            lambda: ck(read_pruned(spark, wh.path("entities_raw"), stale)),
-            lambda: ck(read_pruned(spark, wh.path("chunks"), stale)),
-            lambda: ck(wh.read("canonical_map")),
-        ])
-    old_pairs_stale = ck(
-        entity_conv_pairs(old_eraw_stale, old_traw_stale, old_mraw_stale)
-    )
+    # one parsed slice of the stale convs; its raw views are narrow
+    # projections of the checkpointed slice
+    old_parsed_stale, old_chunks_stale, old_cmap = _run_parallel([
+        lambda: ck(parsed_of(stale)),
+        lambda: ck(read_pruned(spark, wh.path("chunks"), stale)),
+        lambda: ck(wh.read("canonical_map")),
+    ])
+    old_pairs_stale = ck(entity_conv_pairs(old_parsed_stale))
 
     # cascade audit (J9) — canonical entities whose EVERY mention
     # lives in a dropped conversation: the same reference count
@@ -286,8 +293,8 @@ def incremental_update(
     #      only in dropped convs must not flag its canonical deleted
     #      while a sibling alias is still mentioned elsewhere;
     #   3. survival: a raw mention of ANY alias in a surviving conv,
-    #      probed on the mentions_raw slice of the aliases' surviving
-    #      convs (conv set pruned through entity_conv_index).
+    #      probed on the mentions of the parsed slice of the aliases'
+    #      surviving convs (conv set pruned through entity_conv_index).
     # Bounded by the candidates' alias/conv footprint (hub-entity
     # proportional), never corpus-proportional.
     def _to_canon(df):
@@ -302,7 +309,8 @@ def incremental_update(
         )
 
     cand_m = (
-        old_mraw_stale.join(dropped, "conv_id", "left_semi")
+        mentions_raw(old_parsed_stale)
+        .join(dropped, "conv_id", "left_semi")
         .select("entity_id")
         .distinct()
     )
@@ -321,7 +329,7 @@ def incremental_update(
         .distinct()
     )
     surviving_canon = _to_canon(
-        read_pruned(spark, wh.path("mentions_raw"), alias_surviving_convs)
+        mentions_raw(parsed_of(alias_surviving_convs))
         .join(aliases, "entity_id", "left_semi")
         .select("entity_id")
         .distinct()
@@ -373,12 +381,6 @@ def incremental_update(
     t0 = _time.time()
     parsed_new = ck(parse_extractions(new_extractions))
     wh.append_lineage("incr_parse", -1, parsed_new.count(), t0, defer=True)
-    # raw-table deltas are cheap narrow maps over the checkpointed
-    # parsed_new — no ck of their own (each evaluation re-derives from
-    # the materialized parent)
-    e_raw_new = entities_raw(parsed_new)
-    t_raw_new = triples_raw(parsed_new)
-    m_raw_new = mentions_raw(parsed_new)
 
     # ---- 3.5. rewrite-intent journal --------------------------------
     # The conv-keyed merges below DESTROY the old-state evidence the
@@ -397,7 +399,7 @@ def incremental_update(
     # journal (instead of overwriting it) keeps obligations alive even
     # when the retry's own change detection is empty.
     journal = _read_journal(spark, wh, journal_present)
-    k_old_stale = ck(_triple_keys(old_traw_stale, old_cmap))
+    k_old_stale = ck(_triple_keys(triples_raw(old_parsed_stale), old_cmap))
     pending_convs = ck(
         journal["pending_rewrite_convs"].union(stale).distinct()
     )
@@ -430,7 +432,7 @@ def incremental_update(
     # mutually independent (distinct paths, inputs checkpointed) → one
     # driver-thread pool so their ~4 barrier jobs each overlap -------
     new_pairs, new_chunk_pairs = _run_parallel([
-        lambda: ck(entity_conv_pairs(e_raw_new, t_raw_new, m_raw_new)),
+        lambda: ck(entity_conv_pairs(parsed_new)),
         lambda: ck(new_chunks.select("chunk_id", "conv_id").distinct()),
     ])
     touched_entities, touched_chunks = _run_parallel([
@@ -451,9 +453,6 @@ def incremental_update(
         "chunks": new_chunks,
         "extractions": new_extractions,
         "parsed": parsed_new,
-        "entities_raw": e_raw_new,
-        "triples_raw": t_raw_new,
-        "mentions_raw": m_raw_new,
     }
 
     def _merge_conv_table(name, delta):
@@ -506,9 +505,9 @@ def incremental_update(
 
     # ---- 6. global linking over the merged catalog, embeddings
     # recomputed ONLY where (entity_id, description) changed ----------
-    e_raw_merged = wh.read("entities_raw")
-    chunks_merged = wh.read("chunks")
-    catalog = entity_catalog(e_raw_merged, chunks_merged)
+    catalog = entity_catalog(
+        entities_raw(wh.read("parsed")), wh.read("chunks")
+    )
 
     # catalog-unchanged shortcut: the whole linking chain (embed → LSH
     # → CC → resolve) is a DETERMINISTIC pure function of the
@@ -581,10 +580,11 @@ def incremental_update(
     # ---- 8-10, 12: four mutually independent tasks (mentions /
     # triples delta rewrites, the whole entities table, chunk
     # embeddings — distinct target tables, read-only sharing of the
-    # merged raw tables and indexes) run from one driver-thread pool --
+    # merged parsed table and indexes) run from one driver-thread
+    # pool ------------------------------------------------------------
 
     def _rewrite_mentions_task():
-        m_raw_delta = read_pruned(spark, wh.path("mentions_raw"), delta_convs)
+        m_raw_delta = mentions_raw(parsed_of(delta_convs))
         chunks_repointed = m_raw_delta.join(
             delta_entities, "entity_id", "left_semi"
         ).select("chunk_id")
@@ -597,9 +597,9 @@ def incremental_update(
             .select("conv_id")
             .distinct()
         )
-        m_contrib = read_pruned(
-            spark, wh.path("mentions_raw"), contrib_convs_m
-        ).join(affected_chunks, "chunk_id", "left_semi")
+        m_contrib = mentions_raw(parsed_of(contrib_convs_m)).join(
+            affected_chunks, "chunk_id", "left_semi"
+        )
         t0 = _time.time()
         mentions_delta = ck(rewrite_mentions(m_contrib, cmap))
         wh.append_lineage(
@@ -611,9 +611,7 @@ def incremental_update(
         )
 
     def _rewrite_triples_task():
-        t_raw_aff = ck(
-            read_pruned(spark, wh.path("triples_raw"), affected_convs)
-        )
+        t_raw_aff = ck(triples_raw(parsed_of(affected_convs)))
         k_new = _triple_keys(t_raw_aff, cmap)
         # pending_tkeys ⊇ k_old_stale (journaled in step 3.5, including
         # any crashed cycle's keys whose pre-merge evidence is gone);
@@ -646,7 +644,7 @@ def incremental_update(
             .union(affected_convs)
             .distinct()
         )
-        t_contrib = read_pruned(spark, wh.path("triples_raw"), contrib_convs_t)
+        t_contrib = triples_raw(parsed_of(contrib_convs_t))
         t0 = _time.time()
         triples_delta = ck(
             with_triple_key(rewrite_triples(t_contrib, cmap, keys=affected_keys))
@@ -699,7 +697,7 @@ def incremental_update(
             "chunk_id",
         )
 
-    _, _, entities, _ = _run_parallel(
+    _run_parallel(
         [
             _rewrite_mentions_task,
             _rewrite_triples_task,
@@ -734,7 +732,7 @@ def incremental_update(
     # upserted graph, committed in one sidecar window (build_all's
     # community stage) -----------------------------------------------
     write_communities(
-        wh, cfg, entities, wh.read("triples"), wh.read("mentions")
+        wh, cfg, *(wh.read(n) for n in ("entities", "triples", "mentions"))
     )
 
     wh.flush_lineage()
@@ -755,7 +753,8 @@ def incremental_update(
 
 
 def _read_out_tables(wh) -> dict[str, DataFrame]:
-    return dict(
+    """Every stored table, plus the raw views of the stored parse."""
+    out = dict(
         zip(
             WAREHOUSE_TABLES,
             _run_parallel(
@@ -763,6 +762,7 @@ def _read_out_tables(wh) -> dict[str, DataFrame]:
             ),
         )
     )
+    return {**out, **raw_views(out["parsed"])}
 
 
 def _stored_linking_if_catalog_unchanged(

@@ -12,13 +12,8 @@ from ..operators.canonicalize import rewrite_mentions, rewrite_triples
 from ..operators.chunking import chunk_conversations
 from ..operators.extraction import extract_chunks
 from ..operators.linking import entity_catalog, link_catalog
-from ..operators.parsing import (
-    entities_raw,
-    mentions_raw,
-    parse_extractions,
-    triples_raw,
-)
-from .build import canonical_entity_rows, community_tables
+from ..operators.parsing import parse_extractions
+from .build import canonical_entity_rows, community_tables, raw_views
 
 
 def build_kg_tables(
@@ -40,9 +35,8 @@ def build_kg_tables(
         chunks = with_chunk_embeddings(chunks)
     chunks = chunks.localCheckpoint()
     parsed = parse_extractions(extract_chunks(chunks)).localCheckpoint()
-    e_raw = entities_raw(parsed)
-    t_raw = triples_raw(parsed)
-    m_raw = mentions_raw(parsed)
+    raw = raw_views(parsed)
+    e_raw, t_raw, m_raw = raw.values()
 
     linked = link_catalog(entity_catalog(e_raw, chunks), similarity_method)
     embedded, similar = linked["embedded"], linked["similar"]
@@ -54,9 +48,7 @@ def build_kg_tables(
 
     tables = {
         "chunks": chunks,
-        "entities_raw": e_raw,
-        "triples_raw": t_raw,
-        "mentions_raw": m_raw,
+        **raw,
         "similar": similar,
         "canonical_map": cmap,
         "triples": triples,

@@ -451,15 +451,13 @@ def test_gated_stream_build_only_closed_conversations(
 
 
 # the corpus-scale tables an incremental cycle MERGEs into; every
-# entity-scale table is written whole
+# entity-scale table is written whole, and the raw entity / triple /
+# mention views are projections of parsed, never stored
 CORPUS_SCALE_MERGE_TARGETS = (
     "transcripts",
     "chunks",
     "extractions",
     "parsed",
-    "entities_raw",
-    "triples_raw",
-    "mentions_raw",
     "registry",
     "entity_conv_index",
     "chunk_conv_index",
@@ -476,7 +474,7 @@ def test_delta_incremental_matches_rebuild_and_is_delta_proportional(
     equals a from-scratch rebuild, the lineage proves the triple/
     mention rewrites touched a delta-proportional slice, not the
     corpus (VERDICT r2 item #1), and the cycle MERGEs into exactly the
-    corpus-scale tables, each once."""
+    corpus-scale tables, each once. The raw views are never stored."""
     import os
 
     import graph_rag_agent_spark.plans.merge as merge_mod
@@ -496,6 +494,8 @@ def test_delta_incremental_matches_rebuild_and_is_delta_proportional(
     assert table_bucket_spec(f"{wh}/triples")["key"] == TRIPLE_KEY_COL
     for idx in ("entity_conv_index", "chunk_conv_index"):
         assert table_bucket_spec(f"{wh}/{idx}") is not None
+    raw_names = ("entities_raw", "triples_raw", "mentions_raw")
+    assert not any(os.path.exists(f"{wh}/{n}") for n in raw_names)
 
     # v2: drop conv-000003, truncate conv-000001
     v2_rows = [
@@ -521,6 +521,7 @@ def test_delta_incremental_matches_rebuild_and_is_delta_proportional(
     tables = incremental_update(spark, v2_df, wh, cfg=cfg)
     monkeypatch.undo()
     assert sorted(merge_targets) == sorted(CORPUS_SCALE_MERGE_TARGETS)
+    assert not any(os.path.exists(f"{wh}/{n}") for n in raw_names)
 
     # cascade-audit parity: the delta path's index-lookup cascade must
     # equal cascade_delete_entities' reference count over the mentions
@@ -548,7 +549,10 @@ def test_delta_incremental_matches_rebuild_and_is_delta_proportional(
     assert got == want
 
     wh2, rebuilt = exact_build("v2")
-    for name in ["chunks", "entities", "mentions", "triples", "registry"]:
+    for name in [
+        "chunks", "entities", "mentions", "triples", "registry", "parsed",
+        *raw_names,
+    ]:
         cols = sorted(
             c for c in tables[name].columns if c != "embedding"
         )
@@ -872,11 +876,14 @@ def test_delta_incremental_shared_chunk_survives_conv_delete(
     holds — i.e. incremental == fresh rebuild for mentions/triples.
 
     Guards the mentions_raw dedup scope: a corpus-wide
-    dropDuplicates(chunk_id, entity_id) stores the pair under only ONE
-    (arbitrary) conv, so the conv-keyed delta MERGE loses it when that
-    conv is deleted. mentions_raw must stay conv-complete (dedup per
-    conv), with the one-row-per-pair dedup applied only in the
-    canonical rewrite (deterministic min-conv pin)."""
+    dropDuplicates(chunk_id, entity_id) keeps the pair under only ONE
+    (arbitrary) conv, so a cycle that deletes that conv loses it.
+    mentions_raw must stay conv-complete (dedup per conv), with the
+    one-row-per-pair dedup applied only in the canonical rewrite
+    (deterministic min-conv pin). The v1 warehouse is built once and
+    copied per victim."""
+    import shutil
+
     base = generate_transcripts(6)
     clone = [
         {**r, "conv_id": "conv-clone"}
@@ -884,18 +891,27 @@ def test_delta_incremental_shared_chunk_survives_conv_delete(
         if r["conv_id"] == "conv-000002"
     ]
     v1 = base + clone
+    v1_wh = str(tmp_path_factory.mktemp("wh_twin_v1"))
+    build_all(
+        spark,
+        spark.createDataFrame(v1, schema=schemas.TRANSCRIPTS),
+        BuildConfig(
+            warehouse=v1_wh,
+            similarity_method="exact",
+            extraction_buckets=2,
+            bucket_convs=8,
+        ),
+    )
 
     # deleting either twin must converge to the same rebuilt state
     for victim in ["conv-000002", "conv-clone"]:
         wh = str(tmp_path_factory.mktemp(f"wh_twin_{victim}"))
+        shutil.copytree(v1_wh, wh, dirs_exist_ok=True)
         cfg = BuildConfig(
             warehouse=wh,
             similarity_method="exact",
             extraction_buckets=2,
             bucket_convs=8,
-        )
-        build_all(
-            spark, spark.createDataFrame(v1, schema=schemas.TRANSCRIPTS), cfg
         )
         v2_rows = [r for r in v1 if r["conv_id"] != victim]
         v2_df = spark.createDataFrame(v2_rows, schema=schemas.TRANSCRIPTS)
@@ -995,7 +1011,7 @@ def test_failed_delta_cycle_retry_self_heals(
     spark, v1_warehouse, monkeypatch
 ):
     """The registry must commit LAST: a delta cycle that dies after
-    some conv-table merges committed (injected triples_raw merge
+    some conv-table merges committed (injected parsed merge
     failure) must leave the stored registry untouched, so the retried
     cycle re-detects the same conversations as changed, re-runs the
     idempotent conv-keyed merges, and converges to the oracle state."""
@@ -1020,7 +1036,7 @@ def test_failed_delta_cycle_retry_self_heals(
     real_upsert = merge_mod.upsert_groups
 
     def dying_upsert(spark_, path, *a, **k):
-        if path.rstrip("/").endswith("triples_raw"):
+        if path.rstrip("/").endswith("parsed"):
             raise RuntimeError("injected merge failure")
         return real_upsert(spark_, path, *a, **k)
 
@@ -1030,7 +1046,7 @@ def test_failed_delta_cycle_retry_self_heals(
     monkeypatch.undo()
 
     # the failed cycle must NOT have committed the registry, or this
-    # retry would detect zero changes and never repair triples_raw
+    # retry would detect zero changes and never repair parsed
     tables = incremental_update(spark, v2_df, wh, cfg=cfg)
     want = oracle_build(v2_rows).triple_set()
     got = {
